@@ -8,9 +8,16 @@ Stage graph (each stage = one committed snapshot in the catalog):
     triples      (doc_id, pred, obj) canonical         [linking]
     entities     (entity_id, field, canonical, aliases)[canonicalization]
 
-Every stage commit also appends per-partition lineage rows
-(stage, snapshot_id, partition_id, rows_out, wall_ms) to the ``lineage``
-table — the north rule's "per-partition lineage and metrics". Resume:
+Every stage commit also appends one lineage row per written data file
+(stage, snapshot_id, partition_id, rows_out, wall_ms, config) to the
+``lineage`` table and one rollup row to the ``metrics`` table — the
+north rule's "per-partition lineage and metrics". A "partition" here is
+a file the stage's write produced; ``partition_id`` is its write task's
+number. Both tables are append-only, and their rows are built on the
+driver from the commit record (per-file rows from the parquet footers),
+so a commit starts no Spark job beyond the stage's own write. The stage's
+jobs run in job group ``kg:<stage>``, its bookkeeping in
+``kg:<stage>:commit``. Resume:
 ``run(resume=True)`` skips any stage whose snapshot is already committed
 *for the same config fingerprint*; a killed run therefore restarts from
 the last committed snapshot and produces byte-identical output (the
@@ -25,11 +32,21 @@ from __future__ import annotations
 
 import hashlib
 import json
+import re
 import time
 from dataclasses import asdict, dataclass
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..operators.canonicalize import build_entities
 from ..operators.extraction import extract_triples
@@ -39,7 +56,8 @@ from ..operators.linking import (
     vocabulary_df,
 )
 from ..operators.payload import build_payload
-from ..sources.catalog import Catalog
+from ..session import job_group
+from ..sources.catalog import Catalog, Commit
 from ..sources.synthetic import generate_documents
 
 
@@ -69,6 +87,34 @@ class PipelineConfig:
 STAGES = ["ingest", "unique_docs", "mentions", "triples", "entities"]
 
 
+def _schema(*fields: tuple[str, object]) -> StructType:
+    return StructType([StructField(name, t) for name, t in fields])
+
+
+LINEAGE_SCHEMA = _schema(
+    ("stage", StringType()), ("snapshot_id", IntegerType()),
+    ("partition_id", IntegerType()), ("rows_out", LongType()),
+    ("wall_ms", DoubleType()), ("config", StringType()),
+)
+METRICS_SCHEMA = _schema(
+    ("stage", StringType()), ("snapshot_id", IntegerType()),
+    ("config", StringType()), ("rows_out", LongType()),
+    ("n_partitions", LongType()), ("max_partition_rows", LongType()),
+    ("partition_skew", DoubleType()), ("wall_ms", DoubleType()),
+)
+
+#: the write task's number in a data file name: Spark's
+#: ``part-00003-<uuid>-c000.snappy.parquet``, Iceberg's ``00003-7-<uuid>-00001.parquet``
+_TASK_NUMBER = re.compile(r"(?:part-)?(\d+)-")
+
+
+def _round_half_up(x: float, digits: int) -> float:
+    """``F.round`` on a double: HALF_UP on its shortest decimal form."""
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), rounding=ROUND_HALF_UP)
+    )
+
+
 class KGPipeline:
     """Orchestrates the stage graph over a :class:`Catalog` warehouse."""
 
@@ -89,43 +135,39 @@ class KGPipeline:
         self._media = media
 
     # -- lineage ------------------------------------------------------------
-    def _record_lineage(
-        self, stage: str, snap_id: int, df: DataFrame, wall_ms: float
-    ) -> None:
-        per_part = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("snapshot_id", F.lit(snap_id))
-            .withColumn("wall_ms", F.lit(float(wall_ms)))
-            .withColumn("config", F.lit(self.config.fingerprint()))
-            .select(
-                "stage", "snapshot_id", "partition_id", "rows_out",
-                "wall_ms", "config",
-            )
+    def _record_lineage(self, stage: str, commit: Commit, wall_ms: float) -> None:
+        """Append the stage's lineage rows and its one metrics row, both
+        built on the driver from ``commit`` (no Spark job). The metrics
+        row is the rollup of the lineage rows: rows, files, the largest
+        file and the skew ratio max / max(mean, 1), rounded HALF_UP like
+        ``F.round``."""
+        config = self.config.fingerprint()
+        files = [
+            (int(_TASK_NUMBER.match(name).group(1)), rows)
+            for name, rows in commit.file_rows.items()
+        ]
+        self.catalog.append(
+            "lineage",
+            [
+                {"stage": stage, "snapshot_id": commit.snapshot_id,
+                 "partition_id": part, "rows_out": rows, "wall_ms": wall_ms,
+                 "config": config}
+                for part, rows in files
+            ],
+            LINEAGE_SCHEMA,
         )
-        if self.catalog.exists("lineage"):
-            prev = self.catalog.read("lineage")
-            per_part = prev.unionByName(per_part)
-        self.catalog.write("lineage", per_part)
-        # stage-level metrics rollup (the north rule materializes lineage
-        # AND metrics): rows, partitions, skew ratio, wall time per stage
-        stage_metrics = (
-            self.catalog.read("lineage")
-            .groupBy("stage", "snapshot_id", "config")
-            .agg(
-                F.sum("rows_out").alias("rows_out"),
-                F.count(F.lit(1)).alias("n_partitions"),
-                F.max("rows_out").alias("max_partition_rows"),
-                F.round(
-                    F.max("rows_out")
-                    / F.greatest(F.avg("rows_out"), F.lit(1.0)),
-                    3,
-                ).alias("partition_skew"),
-                F.max("wall_ms").alias("wall_ms"),
-            )
+        rows = [r for _, r in files]
+        peak = max(rows, default=0)
+        mean = sum(rows) / len(rows) if rows else 0.0
+        self.catalog.append(
+            "metrics",
+            [{"stage": stage, "snapshot_id": commit.snapshot_id, "config": config,
+              "rows_out": sum(rows), "n_partitions": len(rows),
+              "max_partition_rows": peak,
+              "partition_skew": _round_half_up(peak / max(mean, 1.0), 3),
+              "wall_ms": wall_ms}],
+            METRICS_SCHEMA,
         )
-        self.catalog.write("metrics", stage_metrics)
 
     def _stage_done(self, stage: str) -> bool:
         if not self.catalog.exists(stage):
@@ -135,31 +177,33 @@ class KGPipeline:
             == self.config.fingerprint()
         )
 
-    def _commit(self, stage: str, df: DataFrame, t0: float) -> DataFrame:
-        snap_id = self.catalog.write(
-            stage, df, meta={"config": self.config.fingerprint()}
-        )
-        out = self.catalog.read(stage)
-        self._record_lineage(stage, snap_id, out, (time.time() - t0) * 1e3)
-        return out
+    def _commit(self, stage: str, build, *args) -> tuple[int, DataFrame]:
+        """Build and write ``stage``; returns (rows written, committed
+        output). Only the write starts Spark jobs: the bookkeeping reads
+        the commit record and the output's stored schema."""
+        with job_group(self.spark, f"kg:{stage}"):
+            t0 = time.time()
+            commit = self.catalog.write(
+                stage, build(*args), meta={"config": self.config.fingerprint()}
+            )
+            wall_ms = (time.time() - t0) * 1e3
+        with job_group(self.spark, f"kg:{stage}:commit"):
+            self._record_lineage(stage, commit, wall_ms)
+            return commit.rows, self.catalog.read(stage)
 
     # -- stages ---------------------------------------------------------------
-    def _run_ingest(self) -> DataFrame:
-        t0 = time.time()
-        docs = (
-            self._documents
-            if self._documents is not None
-            else generate_documents(
-                self.spark,
-                self.config.n_docs,
-                seed=self.config.seed,
-                hot_entity_skew=self.config.hot_entity_skew,
-                oversized_doc_pct=self.config.oversized_doc_pct,
-            )
+    def _build_ingest(self) -> DataFrame:
+        if self._documents is not None:
+            return self._documents
+        return generate_documents(
+            self.spark,
+            self.config.n_docs,
+            seed=self.config.seed,
+            hot_entity_skew=self.config.hot_entity_skew,
+            oversized_doc_pct=self.config.oversized_doc_pct,
         )
-        return self._commit("ingest", docs, t0)
 
-    def _run_dedup(self, docs: DataFrame) -> DataFrame:
+    def _build_dedup(self, docs: DataFrame) -> DataFrame:
         """Corpus dedup between ingest and extraction — the stage a
         training-data pipeline always runs; extraction cost then scales
         with UNIQUE content. Committed like any stage (resumable).
@@ -170,7 +214,6 @@ class KGPipeline:
         pair whose members both sit far from their bucket-chained
         cluster representative.
         """
-        t0 = time.time()
         from ..functions.textmetrics import doc_fingerprint
 
         if self.config.dedup not in ("exact", "minhash"):
@@ -193,10 +236,9 @@ class KGPipeline:
                 F.col("doc_id") != F.col("group_id")
             ).select("doc_id")
             unique = unique.join(drop, "doc_id", "left_anti")
-        return self._commit("unique_docs", unique, t0)
+        return unique
 
-    def _run_mentions(self, docs: DataFrame) -> DataFrame:
-        t0 = time.time()
+    def _build_mentions(self, docs: DataFrame) -> DataFrame:
         if self.config.chunk_max_spans:
             from ..operators.skew import extract_chunked
 
@@ -216,17 +258,14 @@ class KGPipeline:
                     extract_from_table_media(self._media)
                 ).dropDuplicates(["doc_id", "pred", "obj"])
             )
-        return self._commit("mentions", mentions, t0)
+        return mentions
 
-    def _run_triples(self, mentions: DataFrame) -> DataFrame:
-        t0 = time.time()
-        triples = link_mentions(
+    def _build_triples(self, mentions: DataFrame) -> DataFrame:
+        return link_mentions(
             mentions, vocabulary_df(self.spark), fuzzy=self.config.fuzzy
         )
-        return self._commit("triples", triples, t0)
 
-    def _run_entities(self, triples: DataFrame) -> DataFrame:
-        t0 = time.time()
+    def _build_entities(self, triples: DataFrame) -> DataFrame:
         vdf = vocabulary_df(self.spark)
         fuzzy_links = None
         if self.config.fuzzy:
@@ -246,8 +285,7 @@ class KGPipeline:
                 .select(F.col("pred").alias("field"), F.col("obj").alias("surface"))
             )
             fuzzy_links = fuzzy_link_surfaces(unresolved, vdf)
-        entities = build_entities(vdf, fuzzy_links)
-        return self._commit("entities", entities, t0)
+        return build_entities(vdf, fuzzy_links)
 
     # -- driver ---------------------------------------------------------------
     def run(self, resume: bool = True, stop_after: str | None = None) -> dict:
@@ -258,35 +296,26 @@ class KGPipeline:
         the resume test.
         """
         counts: dict[str, int] = {}
-
-        def maybe(stage: str, fn, *args) -> DataFrame:
-            if resume and self._stage_done(stage):
-                return self.catalog.read(stage)
-            return fn(*args)
-
-        docs = maybe("ingest", self._run_ingest)
-        counts["ingest"] = docs.count()
-        if stop_after == "ingest":
-            return counts
-
+        stages = [("ingest", self._build_ingest)]
         if self.config.dedup != "none":
-            docs = maybe("unique_docs", self._run_dedup, docs)
-            counts["unique_docs"] = docs.count()
-            if stop_after == "unique_docs":
-                return counts
-
-        mentions = maybe("mentions", self._run_mentions, docs)
-        counts["mentions"] = mentions.count()
-        if stop_after == "mentions":
-            return counts
-
-        triples = maybe("triples", self._run_triples, mentions)
-        counts["triples"] = triples.count()
-        if stop_after == "triples":
-            return counts
-
-        entities = maybe("entities", self._run_entities, triples)
-        counts["entities"] = entities.count()
+            stages.append(("unique_docs", self._build_dedup))
+        stages += [
+            ("mentions", self._build_mentions),
+            ("triples", self._build_triples),
+            ("entities", self._build_entities),
+        ]
+        out = None
+        for stage, build in stages:
+            args = () if out is None else (out,)
+            if resume and self._stage_done(stage):
+                out = self.catalog.read(stage)
+                rows = self.catalog.last_commit(stage).rows
+                # snapshots committed before per-file rows were recorded
+                counts[stage] = out.count() if rows is None else rows
+            else:
+                counts[stage], out = self._commit(stage, build, *args)
+            if stop_after == stage:
+                break
         return counts
 
     def read(self, stage: str) -> DataFrame:

@@ -9,6 +9,7 @@ partition count matched to parallelism instead of the 200 default.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -72,3 +73,25 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+#: the thread-local properties ``SparkContext.setJobGroup`` sets
+_JOB_GROUP_KEYS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
+
+
+@contextmanager
+def job_group(spark: SparkSession, group: str):
+    """Put the Spark jobs this thread starts inside the block into job
+    group ``group`` (also their description), then restore the previous
+    group; ``statusTracker().getJobIdsForGroup`` and the event log then
+    attribute every job by name."""
+    sc = spark.sparkContext
+    prev = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS}
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)  # None clears the property

@@ -2,7 +2,8 @@
 
 This sandbox has no Iceberg runtime on the classpath, so the branch
 (`Catalog._iceberg=True`) can't execute for real. These tests stub the
-three JVM touchpoints — ``DataFrame.writeTo``, ``SparkSession.table``,
+three JVM touchpoints — ``DataFrame.writeTo``, ``SparkSession.table``
+(tables and their ``files`` metadata table),
 ``spark.catalog.tableExists`` — with an eager in-memory table store, so
 the branch's meta/snapshot BOOKKEEPING (the round-1 silent-resume bug
 class: manifest and data store disagreeing) can't regress unexecuted.
@@ -17,8 +18,10 @@ from llm_information_extraction_spark.sources.catalog import Catalog
 
 @pytest.fixture
 def iceberg_stub(spark, monkeypatch):
-    """In-memory V2-write stub: eager snapshot on createOrReplace (like
-    Iceberg's commit), name-keyed reads, catalog existence checks."""
+    """In-memory V2-write stub: eager snapshot on createOrReplace /
+    create / append (like Iceberg's commit), name-keyed reads, a
+    ``<table>.files`` metadata table holding one data file per table,
+    catalog existence checks."""
     tables: dict[str, DataFrame] = {}
 
     class _FakeV2Writer:
@@ -32,6 +35,23 @@ def iceberg_stub(spark, monkeypatch):
                 self._df.collect(), self._df.schema
             )
 
+        create = createOrReplace
+
+        def append(self):
+            rows = tables[self._name].collect() + self._df.collect()
+            tables[self._name] = self._df.sparkSession.createDataFrame(
+                rows, self._df.schema
+            )
+
+    def table(name):
+        if name.endswith(".files"):
+            rows = tables[name[: -len(".files")]].count()
+            return spark.createDataFrame(
+                [("wh/data/00000-0-stub-00001.parquet", rows)],
+                "file_path string, record_count long",
+            )
+        return tables[name]
+
     # patch the CONCRETE class (pyspark 4: pyspark.sql.DataFrame is the
     # abstract base; classic.dataframe.DataFrame overrides writeTo)
     monkeypatch.setattr(
@@ -39,7 +59,7 @@ def iceberg_stub(spark, monkeypatch):
         "writeTo",
         lambda self, name: _FakeV2Writer(self, name),
     )
-    monkeypatch.setattr(spark, "table", lambda name: tables[name])
+    monkeypatch.setattr(spark, "table", table)
     monkeypatch.setattr(
         spark.catalog, "tableExists", lambda name: name in tables
     )
@@ -50,16 +70,17 @@ def test_iceberg_branch_write_read_meta_roundtrip(spark, tmp_path, iceberg_stub)
     cat = Catalog(spark, str(tmp_path / "wh"), use_iceberg=True)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
 
-    sid = cat.write("t1", df, meta={"fp": "cfg-1"})
-    assert sid == 0
+    commit = cat.write("t1", df, meta={"fp": "cfg-1"})
+    assert commit.snapshot_id == 0
+    assert commit.rows == 2  # from the files metadata table
     assert cat.exists("t1")
     assert cat.snapshot_meta("t1") == {"fp": "cfg-1"}
     assert {tuple(r) for r in cat.read("t1").collect()} == {(1, "a"), (2, "b")}
 
     # second write: snapshot id advances, meta follows the new commit
     df2 = spark.createDataFrame([(3, "c")], "id long, v string")
-    sid2 = cat.write("t1", df2, meta={"fp": "cfg-2"})
-    assert sid2 == 1
+    commit2 = cat.write("t1", df2, meta={"fp": "cfg-2"})
+    assert commit2.snapshot_id == 1
     assert cat.current_snapshot("t1") == 1
     assert cat.snapshot_meta("t1") == {"fp": "cfg-2"}
     assert [tuple(r) for r in cat.read("t1").collect()] == [(3, "c")]
@@ -89,7 +110,7 @@ def test_iceberg_crash_between_commits_reads_uncommitted(
 
     # a rerun on a fresh Catalog (new driver) commits cleanly
     cat2 = Catalog(spark, str(tmp_path / "wh"), use_iceberg=True)
-    assert cat2.write("t2", df, meta={"fp": "x"}) == 0
+    assert cat2.write("t2", df, meta={"fp": "x"}).snapshot_id == 0
     assert cat2.exists("t2")
     assert cat2.snapshot_meta("t2") == {"fp": "x"}
 

@@ -6,7 +6,12 @@ triples are identical to an uninterrupted run.
 """
 
 import json
+import re
+import shutil
 from pathlib import Path
+
+import pytest
+from pyspark.sql import functions as F
 
 from llm_information_extraction_spark.plans.pipeline import (
     KGPipeline,
@@ -23,7 +28,7 @@ def _triples_set(df):
 def test_kill_and_resume_identical(spark, tmp_path):
     # uninterrupted run
     full = KGPipeline(spark, str(tmp_path / "w_full"), CFG)
-    full.run()
+    full_counts = full.run()
     want = _triples_set(full.read("triples"))
     assert want
 
@@ -37,7 +42,9 @@ def test_kill_and_resume_identical(spark, tmp_path):
 
     # resume in a NEW pipeline object (fresh driver)
     resumed = KGPipeline(spark, wh, CFG)
-    resumed.run(resume=True)
+    # committed stages count from their commit records, the rest from
+    # their writes: the same counts as the uninterrupted run
+    assert resumed.run(resume=True) == full_counts
     got = _triples_set(resumed.read("triples"))
     assert got == want
     # committed stages were NOT recomputed (snapshot id unchanged)
@@ -208,3 +215,131 @@ def test_lineage_recorded_per_partition(spark, tmp_path):
         assert metrics[stage]["n_partitions"] >= 1
         assert metrics[stage]["partition_skew"] >= 1.0
         assert metrics[stage]["wall_ms"] > 0
+
+
+CFG_STAGES = ["ingest", "mentions", "triples", "entities"]
+LINEAGE_TYPES = [
+    ("stage", "string"), ("snapshot_id", "int"), ("partition_id", "int"),
+    ("rows_out", "bigint"), ("wall_ms", "double"), ("config", "string"),
+]
+METRICS_TYPES = [
+    ("stage", "string"), ("snapshot_id", "int"), ("config", "string"),
+    ("rows_out", "bigint"), ("n_partitions", "bigint"),
+    ("max_partition_rows", "bigint"), ("partition_skew", "double"),
+    ("wall_ms", "double"),
+]
+
+
+def _types(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+
+def _group_jobs(spark, groups):
+    sc = spark.sparkContext
+    # job ids reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {g: set(sc.statusTracker().getJobIdsForGroup(g)) for g in groups}
+
+
+@pytest.fixture(scope="module")
+def pinned_run(spark, tmp_path_factory):
+    """One run of CFG, with the job ids it started in each stage's job
+    group and in each stage's commit group."""
+    groups = [f"kg:{s}{g}" for s in CFG_STAGES for g in ("", ":commit")]
+    before = _group_jobs(spark, groups)
+    p = KGPipeline(spark, str(tmp_path_factory.mktemp("w_pin")), CFG)
+    counts = p.run()
+    after = _group_jobs(spark, groups)
+    return p, counts, {g: after[g] - before[g] for g in groups}
+
+
+def _rollup(lineage):
+    """The stage-level rollup of lineage rows, as a Spark aggregate."""
+    return lineage.groupBy("stage", "snapshot_id", "config").agg(
+        F.sum("rows_out").alias("rows_out"),
+        F.count(F.lit(1)).alias("n_partitions"),
+        F.max("rows_out").alias("max_partition_rows"),
+        F.round(
+            F.max("rows_out") / F.greatest(F.avg("rows_out"), F.lit(1.0)), 3
+        ).alias("partition_skew"),
+        F.max("wall_ms").alias("wall_ms"),
+    )
+
+
+def test_lineage_and_metrics_equal_a_rescan(pinned_run):
+    """Lineage rows (built from the commit record) equal a re-scan of each
+    stage's output grouped by file; metrics equal their rollup."""
+    p, counts, _ = pinned_run
+    want = []
+    for stage in CFG_STAGES:
+        snap = p.catalog.current_snapshot(stage)
+        per_file = p.read(stage).groupBy(F.input_file_name().alias("f")).count()
+        for r in per_file.collect():
+            part = int(re.search(r"/part-(\d+)-[^/]*$", r["f"]).group(1))
+            want.append((stage, snap, part, r["count"]))
+    lineage = p.read("lineage")
+    assert _types(lineage) == LINEAGE_TYPES
+    rows = lineage.collect()
+    assert sorted(
+        (r["stage"], r["snapshot_id"], r["partition_id"], r["rows_out"]) for r in rows
+    ) == sorted(want)
+    assert {r["config"] for r in rows} == {CFG.fingerprint()}
+    assert all(r["wall_ms"] > 0 for r in rows)
+
+    metrics = p.read("metrics")
+    assert _types(metrics) == METRICS_TYPES
+    got = sorted(tuple(r) for r in metrics.collect())
+    assert got == sorted(tuple(r) for r in _rollup(lineage).collect())
+    assert {r[0]: r[3] for r in got} == {s: counts[s] for s in CFG_STAGES}
+
+
+def test_stage_jobs_labelled_and_commits_start_none(pinned_run):
+    _, _, jobs = pinned_run
+    for stage in CFG_STAGES:
+        assert jobs[f"kg:{stage}"], f"no jobs labelled kg:{stage}"
+        assert not jobs[f"kg:{stage}:commit"], f"{stage} bookkeeping started jobs"
+
+
+def _to_old_layout(spark, wh: Path) -> None:
+    """Rewrite a warehouse into the layout of catalogs that stored no
+    schema or per-file rows and rewrote lineage/metrics as one snapshot
+    directory per commit."""
+    for manifest in wh.glob("*/_manifest.json"):
+        table = manifest.parent
+        m = json.loads(manifest.read_text())
+        if table.name in ("lineage", "metrics"):
+            cat = KGPipeline(spark, str(wh), CFG).catalog
+            df = cat.read(table.name)
+            data = spark.createDataFrame(df.collect(), df.schema)
+            shutil.rmtree(table)
+            data.write.parquet(str(table / "snap_000000"))
+            m = {"snapshots": [{"id": 0, "path": str(table / "snap_000000"),
+                                "meta": {}}], "current": 0}
+        else:
+            m["snapshots"] = [
+                {k: s[k] for k in ("id", "path", "meta")} for s in m["snapshots"]
+            ]
+        manifest.write_text(json.dumps(m))
+
+
+def test_old_layout_warehouse_reads_resumes_and_appends(spark, tmp_path, pinned_run):
+    _, full_counts, _ = pinned_run
+    wh = tmp_path / "w_old"
+    KGPipeline(spark, str(wh), CFG).run(stop_after="mentions")
+    _to_old_layout(spark, wh)
+    old = sorted(tuple(r) for r in KGPipeline(spark, str(wh), CFG).read("lineage").collect())
+    assert {r[0] for r in old} == {"ingest", "mentions"}
+
+    resumed = KGPipeline(spark, str(wh), CFG)
+    assert resumed.run(resume=True) == full_counts
+    assert resumed.catalog.current_snapshot("mentions") == 0  # not recomputed
+    lineage = resumed.read("lineage")
+    assert _types(lineage) == LINEAGE_TYPES
+    rows = sorted(tuple(r) for r in lineage.collect())
+    assert [r for r in rows if r[0] in ("ingest", "mentions")] == old
+    assert {r[0] for r in rows} - {r[0] for r in old} == {"triples", "entities"}
+    metrics = resumed.read("metrics")
+    assert _types(metrics) == METRICS_TYPES
+    assert sorted(tuple(r) for r in metrics.collect()) == sorted(
+        tuple(r) for r in _rollup(lineage).collect()
+    )

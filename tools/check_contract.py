@@ -4,11 +4,15 @@ Mimics the round driver: executes queries()[name](spark, sf_dir) and
 oracle_sql()[name] on the same parquet tables, compares row count, sorted
 column names, and an order-insensitive value hash. Usage:
 
-    python tools/check_contract.py [sf_dir]
+    python tools/check_contract.py [sf_dir] [--queries a,b,c]
+
+``--queries a,b`` and ``--queries=a,b`` both restrict the run to the named
+queries; a name that matches no query is an error (exit status 2).
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import sys
 from pathlib import Path
@@ -48,13 +52,25 @@ def value_hash(rows: list[dict]) -> str:
     return h.hexdigest()[:16]
 
 
-def main() -> int:
-    # usage: check_contract.py [sf_dir] [--queries a,b,c]
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    only = None
-    for a in sys.argv[1:]:
-        if a.startswith("--queries="):
-            only = set(a.split("=", 1)[1].split(","))
+def parse_args(argv: list[str] | None = None) -> tuple[list[str], set[str] | None]:
+    """([sf_dir] or [], query names or None for all); exits 2 when a
+    requested name matches no query."""
+    ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    ap.add_argument("sf_dir", nargs="?", help="default: the sf0.01 test data")
+    ap.add_argument("--queries", help="comma-separated query names")
+    args = ap.parse_args(argv)
+    positional = [args.sf_dir] if args.sf_dir else []
+    if args.queries is None:
+        return positional, None
+    only = {q for q in args.queries.split(",") if q}
+    unknown = sorted(only - set(entrymod.queries()))
+    if unknown or not only:
+        ap.error(f"--queries: no contract query named {', '.join(unknown) or repr(args.queries)}")
+    return positional, only
+
+
+def main(argv: list[str] | None = None) -> int:
+    args, only = parse_args(argv)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     spark = get_spark(app_name="contract-check")
     spark.sparkContext.setLogLevel("ERROR")

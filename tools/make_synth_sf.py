@@ -3,12 +3,13 @@
 Replicates /root/testdata/sf0.1 `factor` times with structure-preserving
 perturbations so operator costs scale realistically:
 
-- documents: replica 0 is byte-identical; replica r>0 remaps each token
+- documents: replica 0 is byte-identical (source n_chars kept as is);
+  replica r>0 remaps each token
   w -> w + 'q' + letter(r) for half the vocabulary (chosen by
   hash(w, r)), a 1:1 per-replica token map — every within-replica
   Jaccard/dup relation is preserved EXACTLY while cross-replica shingle
   overlap collapses (~0.25^3), so dedup candidate volume scales ~linearly
-  like a real bigger corpus. n_chars is recomputed.
+  like a real bigger corpus; its n_chars is recomputed.
 - embeddings: per-replica fixed dimension permutation + sign flips —
   within-replica geometry identical, cross-replica cosine ~random.
 - events: user_id/event_id offset per replica (10x users/sessions).
@@ -55,14 +56,15 @@ def documents(t: pa.Table, factor: int) -> pa.Table:
     for r in range(factor):
         out_id.append(ids + r * n)
         if r == 0:
-            new_texts = texts
+            out_text.extend(texts)
+            out_nchars.extend(t.column("n_chars").to_pylist())
         else:
             wm = _word_map(vocab, r)
             new_texts = [
                 " ".join(wm.get(w, w) for w in s.split(" ")) for s in texts
             ]
-        out_text.extend(new_texts)
-        out_nchars.extend(len(s) for s in new_texts)
+            out_text.extend(new_texts)
+            out_nchars.extend(len(s) for s in new_texts)
         lang_chunks.append(lang_chunks and lang_chunks[0] or langs)
         src_chunks.append(src_chunks and src_chunks[0] or sources)
     return pa.table(
