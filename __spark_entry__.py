@@ -642,10 +642,7 @@ def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # row_wise: the sf corpus is ~50-word docs — the short-doc regime
-    # where the per-row HOF signature is measured ~3.5× faster than
-    # explode+agg (value-identical, see minhash_signatures docstring)
-    return minhash_dedup_groups(d, threshold=0.5, row_wise=True)
+    return minhash_dedup_groups(d, threshold=0.5)
 
 
 def minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -667,8 +664,7 @@ def minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # row_wise: short-doc regime (see minhash_dedup) — value-identical
-    return minhash_dedup_groups_fast(d, verify_threshold=0.5, row_wise=True)
+    return minhash_dedup_groups_fast(d, verify_threshold=0.5)
 
 
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

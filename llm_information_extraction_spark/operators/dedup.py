@@ -1,9 +1,11 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All hot paths are pure Catalyst expressions (whole-stage codegen, zero
-Python): shingling, MinHash signatures, SimHash bits, Jaccard via
-set-similarity joins. Only the final connected-components grouping runs
-the iterative join loop from :mod:`.canonicalize`.
+Shingling, the xxhash64 SimHash bits and Jaccard via set-similarity
+joins are Catalyst expressions (whole-stage codegen). MinHash signatures
+and the md5 SimHash signature fold their per-shingle hashes in numpy
+over Arrow batches (``mapInPandas``), one kernel each. Only the final
+connected-components grouping runs the iterative join loop from
+:mod:`.canonicalize`.
 
 Scale notes (100 TB):
 - exact dedup shuffles 16-byte md5 keys, never documents;
@@ -23,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.normalize import normalize_text
 from ..functions.textmetrics import doc_fingerprint
 
 
@@ -72,10 +75,7 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     lambda boundaries), which is O(doc_len · n_words) per document —
     measured 50×+ slower on multi-KB documents.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower(F.coalesce(c, F.lit(""))), r"\s+", " ")), " "
-    )
+    words = F.split(normalize_text(col), " ")
 
     def build(ws: Column) -> Column:
         n_sh = F.greatest(F.size(ws) - n + 1, F.lit(1))
@@ -136,10 +136,7 @@ def ngram_jaccard_pairs(
 def ordered_word_shingles(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles in DOCUMENT ORDER (duplicates kept) — the
     winnowing input, unlike :func:`word_shingles`'s distinct set."""
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower(F.coalesce(c, F.lit(""))), r"\s+", " ")), " "
-    )
+    words = F.split(normalize_text(col), " ")
 
     def build(ws: Column) -> Column:
         n_sh = F.greatest(F.size(ws) - n + 1, F.lit(1))
@@ -216,44 +213,6 @@ def winnow_overlap_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + LSH banding
 # ---------------------------------------------------------------------------
-def minhash_signature(
-    shingles: Column, num_hashes: int = 64, seed: int = 42
-) -> Column:
-    """array<bigint> MinHash signature as a per-row column expression.
-
-    h_i(S) = min over shingles of xxhash64(xxhash64(shingle), seed+i) —
-    one base hash per shingle, then ``num_hashes`` cheap re-hashes
-    (overflow-free under ANSI mode, unlike an affine family). Prefer
-    :func:`minhash_signatures` (explode + groupBy) on large corpora: it
-    runs in whole-stage codegen with map-side partial aggregation,
-    whereas array higher-order functions are interpreted per element.
-    Measured (round 3, local[32], warm best-of-2): this HOF form is ~3×
-    faster on short documents (0.28 s vs 0.89 s over sf0.1's ~90-word
-    docs — per-row overhead dominates there), while explode+agg wins on
-    the 400k-doc larger-payload corpus (18.4 s vs 20.7 s) and is the
-    scale default.
-    """
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-
-    # bind the seeds array ONCE via the single-element-array transform
-    # scope — referencing the computed sequence inside the aggregate
-    # lambda would re-materialize the 64-element array per shingle
-    # (no CSE across HOF lambda boundaries)
-    def build(seeds: Column) -> Column:
-        init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
-        return F.aggregate(
-            hashes,
-            init,
-            lambda acc, h: F.zip_with(
-                acc, seeds, lambda m, i: F.least(m, F.xxhash64(h, i))
-            ),
-        )
-
-    return F.transform(
-        F.array(F.sequence(F.lit(seed), F.lit(seed + num_hashes - 1))), build
-    )[0]
-
-
 #: Spark XXH64 primes (org.apache.spark.sql.catalyst.expressions.XXH64 —
 #: the standard public xxHash64 constants)
 _XXH_PRIMES = (
@@ -266,27 +225,30 @@ _XXH_PRIMES = (
 
 
 def _minhash_sigs_arrow(
-    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int,
-    seed: int
+    hs_df: DataFrame, num_hashes: int, seed: int
 ) -> DataFrame:
-    """(id, sig array<bigint>) — value-identical to the HOF/explode
-    flavors, with the ``num_hashes`` re-hash + min folds vectorized in
-    numpy (guide §4.2: hand whole Arrow batches to native code).
+    """(id, hs array<bigint>) → (id, sig array<bigint>): the one MinHash
+    signature kernel. ``hs`` holds each document's per-shingle
+    ``xxhash64`` values; slot i of the signature is the min over them of
+    Spark's ``xxhash64(h, seed+i)``.
 
-    The per-shingle base hash stays in the JVM
-    (``transform(shingles, xxhash64)``); the Python side replays Spark's
-    ``xxhash64(h, seed+i)`` column fold — ``hashInt(seed+i,
-    hashLong(h, 42))``, the second operand being an *int* literal in
-    the expression flavors — over uint64 arrays. The hash's mixing of
-    its *input* is independent of its seed argument, so the inner
-    ``hashLong(h, 42)`` is computed once per shingle and the outer
-    fold's input-mix ``(seed+i)·P1`` once per i: ~8 vector ops per
-    (shingle, i) instead of one interpreted expression tree. Exact
-    equality with the expression flavors is pinned by
-    ``test_minhash_row_wise_signatures_value_equal``. Seeds outside
-    int32 would take Spark's long-literal path instead — refused here
-    rather than silently diverging.
+    The ``num_hashes`` re-hash + min folds run vectorized in numpy over
+    Arrow batches (guide §4.2: hand whole Arrow batches to native code),
+    replaying Spark's column fold ``hashInt(seed+i, hashLong(h, 42))``
+    over uint64 arrays. The hash's mixing of its *input* is independent
+    of its seed argument, so the inner ``hashLong(h, 42)`` is computed
+    once per shingle and the outer fold's input-mix ``(seed+i)·P1`` once
+    per i: ~8 vector ops per (shingle, i). Bit equality with the
+    expression form ``min(xxhash64(xxhash64(shingle), seed+i))`` is
+    pinned by ``tests/test_dedup_similarity.py``. The fold hashes
+    ``seed+i`` as an int, so every seed in ``[seed, seed+num_hashes)``
+    must fit int32; anything else raises ``ValueError`` here, when the
+    plan is built.
     """
+    if not (-(2**31) <= seed and seed + num_hashes - 1 < 2**31):
+        raise ValueError(
+            f"minhash seeds [{seed}, {seed + num_hashes}) must fit int32"
+        )
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -298,15 +260,9 @@ def _minhash_sigs_arrow(
 
     out_schema = StructType(
         [
-            StructField("id", df.schema[id_col].dataType, True),
+            StructField("id", hs_df.schema["id"].dataType, True),
             StructField("sig", ArrayType(LongType()), True),
         ]
-    )
-    hs_df = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            word_shingles(text_col, n), lambda s: F.xxhash64(s)
-        ).alias("hs"),
     )
     p1, p2, p3, p4, p5 = (np.uint64(p) for p in _XXH_PRIMES)
 
@@ -322,11 +278,6 @@ def _minhash_sigs_arrow(
         h ^= h >> np.uint64(32)
         return h
 
-    if not (-(2**31) <= seed and seed + num_hashes - 1 < 2**31):
-        raise ValueError(
-            "minhash seed range must fit int32 (the expression flavors "
-            "hash the seed as an int literal)"
-        )
     # outer hash is hashInt(seed+i, inner): its input mix is constant
     # per i — (seed+i as uint32) · P1
     seeds = np.arange(seed, seed + num_hashes, dtype=np.int64) & np.int64(
@@ -370,21 +321,6 @@ def _minhash_sigs_arrow(
             )
 
     return hs_df.mapInPandas(run, schema=out_schema)
-
-
-def _signatures_from_tokens(
-    tok: DataFrame, num_hashes: int, seed: int
-) -> DataFrame:
-    """(id, shingle) token rows → (id, sig array<bigint>)."""
-    hashed = tok.select("id", F.xxhash64("shingle").alias("h"))
-    aggs = [
-        F.min(F.xxhash64(F.col("h"), F.lit(seed + i))).alias(f"m{i}")
-        for i in range(num_hashes)
-    ]
-    sig = hashed.groupBy("id").agg(*aggs)
-    return sig.select(
-        "id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig")
-    )
 
 
 def _doc_tokens(
@@ -441,33 +377,30 @@ def minhash_signatures(
     n: int = 3,
     num_hashes: int = 64,
     seed: int = 42,
-    row_wise: bool = False,
 ) -> DataFrame:
-    """(id, sig array<bigint>) via explode → hash → 64 min-aggregates.
+    """(id, sig array<bigint>) MinHash signatures of each row's word
+    ``n``-gram shingle set, computed per row with no shuffle.
 
-    The whole computation is codegen'd: one shuffle keyed by id with
-    map-side combine (each partition pre-reduces to one row per id).
-    Same hash family as :func:`minhash_signature`.
-
-    ``row_wise=True`` computes the SAME values per row, with no
-    shuffle: since round 6 via :func:`_minhash_sigs_arrow` (JVM base
-    hashes + the 64 re-hash/min folds vectorized in numpy over Arrow
-    batches — measured 3.3 s → ~0.9 s over sf1.0's 50k short docs,
-    where the round-5 interpreted HOF flavor already beat explode+agg).
-    Identical shingles (``word_shingles`` feeds all flavors) and an
-    exact replay of the xxhash64 fold keep the paths value-equal
-    (pinned by ``test_minhash_row_wise_signatures_value_equal``), so
-    the choice is purely a performance knob. explode+agg remains the
-    default — one shuffle with map-side combine, entirely codegen, the
-    shape that holds on large-payload corpora (round-3 measurement:
-    18.4 s vs 20.7 s at 400k docs) and at 100 TB.
+    Slot i is ``min over shingles s of xxhash64(xxhash64(s), seed+i)``:
+    one base hash per shingle (``transform(word_shingles, xxhash64)`` in
+    the JVM), then ``num_hashes`` re-hashes (overflow-free under ANSI
+    mode, unlike an affine family) folded in numpy over Arrow batches by
+    :func:`_minhash_sigs_arrow`. The family is prefix-stable
+    in ``num_hashes`` (slot i does not depend on the signature length),
+    which the streaming store's bucket keys rely on. ``seed`` through
+    ``seed + num_hashes - 1`` must lie in the int32 range
+    ``[-2**31, 2**31)``; other seeds raise ``ValueError`` when called,
+    before any Spark job runs.
     """
-    if row_wise:
-        return _minhash_sigs_arrow(
-            df, id_col, text_col, n, num_hashes, seed
-        )
-    return _signatures_from_tokens(
-        _doc_tokens(df, id_col, text_col, n), num_hashes, seed
+    return _minhash_sigs_arrow(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.transform(
+                word_shingles(text_col, n), lambda s: F.xxhash64(s)
+            ).alias("hs"),
+        ),
+        num_hashes,
+        seed,
     )
 
 
@@ -551,7 +484,6 @@ def minhash_candidate_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 42,
-    row_wise: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash.
 
@@ -566,7 +498,7 @@ def minhash_candidate_pairs(
     # cache: the banded self-join consumes this twice (both sides); one
     # row per doc, so the footprint is tiny relative to the corpus
     sig = minhash_signatures(
-        df, id_col, text_col, n, num_hashes, seed, row_wise
+        df, id_col, text_col, n, num_hashes, seed
     ).cache()
     banded, keys = _banded_slices(sig, num_hashes, bands)
     a = banded.select(F.col("id").alias("id_a"), "band", *keys)
@@ -588,7 +520,6 @@ def minhash_verified_pairs(
     bands: int = 16,
     threshold: float = 0.8,
     seed: int = 42,
-    row_wise: bool = False,
 ) -> DataFrame:
     """Banded candidates verified by EXACT n-gram Jaccard →
     (id_a, id_b, jaccard), id_a < id_b, jaccard ≥ threshold.
@@ -604,7 +535,7 @@ def minhash_verified_pairs(
     configuration the driver oracle pins.
     """
     cands = minhash_candidate_pairs(
-        df, id_col, text_col, n, num_hashes, bands, seed, row_wise
+        df, id_col, text_col, n, num_hashes, bands, seed
     ).cache()
     # only candidate-involved docs need their shingles re-derived: the
     # candidate id set is usually O(dup_rate·n) ≪ corpus, so the semi
@@ -672,7 +603,6 @@ def minhash_dedup_groups(
     bands: int = 16,
     threshold: float = 0.8,
     seed: int = 42,
-    row_wise: bool = False,
 ) -> DataFrame:
     """Near-duplicate clusters: MinHash banding → exact Jaccard verify →
     connected components. Returns (doc_id, group_id); group_id = min id
@@ -680,7 +610,7 @@ def minhash_dedup_groups(
     from .canonicalize import connected_components
 
     verified = minhash_verified_pairs(
-        df, id_col, text_col, n, num_hashes, bands, threshold, seed, row_wise
+        df, id_col, text_col, n, num_hashes, bands, threshold, seed
     ).select(
         F.col("id_a").cast("string").alias("src"),
         F.col("id_b").cast("string").alias("dst"),
@@ -701,7 +631,6 @@ def minhash_dedup_groups_fast(
     seed: int = 42,
     verify_threshold: float | None = None,
     max_shingle_doc_freq: float | None = None,
-    row_wise: bool = False,
 ) -> DataFrame:
     """Near-dup clusters for corpora with LARGE duplicate clusters —
     the web-scale production path.
@@ -711,9 +640,9 @@ def minhash_dedup_groups_fast(
     (the chaining cause); a document whose every shingle is
     corpus-frequent carries no distinctive content and is left
     unclustered (run exact fingerprint dedup first — KGPipeline does).
-    Stop-shingle filtering needs the exploded token table, so
-    ``row_wise`` is IGNORED on that branch (the per-row signature
-    cannot see corpus-level shingle frequencies).
+    That branch signs each document's surviving shingles, grouped back
+    from the filtered token table, with the same kernel as
+    :func:`minhash_signatures`.
 
     The pairwise path (:func:`minhash_dedup_groups`) enumerates candidate
     PAIRS, which is Θ(Σ cluster²): one 14k-copy boilerplate cluster alone
@@ -742,15 +671,17 @@ def minhash_dedup_groups_fast(
     from .canonicalize import connected_components
 
     if max_shingle_doc_freq is None:
-        sig = minhash_signatures(
-            df, id_col, text_col, n, num_hashes, seed, row_wise
-        )
+        sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed)
     else:
-        # stop-shingle filtering needs the exploded token table, so the
-        # row-wise flavor does not apply on this branch
-        sig = _signatures_from_tokens(
-            drop_frequent_shingles(
-                _doc_tokens(df, id_col, text_col, n), max_shingle_doc_freq
+        # the filter needs corpus-level shingle frequencies, so it runs
+        # on the exploded token table; the survivors' base hashes are
+        # grouped back per doc for the same kernel
+        tok = drop_frequent_shingles(
+            _doc_tokens(df, id_col, text_col, n), max_shingle_doc_freq
+        )
+        sig = _minhash_sigs_arrow(
+            tok.groupBy("id").agg(
+                F.collect_list(F.xxhash64("shingle")).alias("hs")
             ),
             num_hashes,
             seed,
@@ -922,12 +853,9 @@ def _simhash_sigs_arrow_md5(
     # int.from_bytes(digest[:8], 'big') == conv(hex[1:8]) << 32 |
     # conv(hex[9:16]) — the same first 8 digest bytes big-endian.
     # Distinctness is set semantics; bit sums don't depend on order.
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " "
-        )
+    src = df.select(
+        F.col(id_col).alias("id"), normalize_text(text_col).alias("__t")
     )
-    src = df.select(F.col(id_col).alias("id"), norm.alias("__t"))
     # bit b of the signature reads bit (3 - b%4) of hex digit b//4;
     # digit i of a 32-bit half occupies bits [4*(7 - i%8), ...+3], and
     # the first 8 digits live in the high half of the packed long

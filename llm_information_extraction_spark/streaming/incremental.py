@@ -425,7 +425,7 @@ def incremental_fuzzy_unique_documents(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import minhash_signature, word_shingles
+        from ..operators.dedup import minhash_signatures
 
         # collapse same-id duplicate ROWS first: the candidate self-join
         # pairs ids with id_a < id_b, so two byte-identical rows sharing
@@ -434,23 +434,20 @@ def incremental_fuzzy_unique_documents(
         # the pick is replay-deterministic)
         batch_df = batch_df.dropDuplicates(["doc_id"])
         docs = build_payload(batch_df).select("doc_id", "payload")
-        # row-local HOF signatures: identical values to the explode+agg
-        # path (same hash family), ~3x faster on the short documents of
-        # a micro-batch, and zero shuffle (see minhash_signature's
-        # measured crossover note — explode+agg wins only on large
-        # corpora with big payloads)
         # sig_len slots computed once: bands consume slots [0, num_hashes)
         # (prefix-stable hash family → bucket keys identical to a
         # 64-slot store), the drop estimate averages all sig_len slots
-        sig = docs.select(
-            F.col("doc_id").alias("id"),
-            minhash_signature(
-                word_shingles("payload", n), sig_len, seed
-            ).alias("sig"),
+        sig = minhash_signatures(
+            docs, "doc_id", "payload", n, sig_len, seed
         ).cache()
         buckets = _banded_buckets(sig, num_hashes, bands)
 
         # -- within-batch: est-Jaccard edges → CC → keep min id ------------
+        # no distinct on the pairs: a pair sharing several bands repeats
+        # until CC's canonical-edge dedup, whose map-side partial
+        # aggregate collapses the repeats in place. The signature
+        # kernel's output carries no id partitioning, so a distinct here
+        # would be one more shuffle
         cand = (
             buckets.alias("a")
             .join(
@@ -460,7 +457,6 @@ def incremental_fuzzy_unique_documents(
                 & (F.col("a.id") < F.col("b.id")),
             )
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
         )
         edges = (
             cand.join(sig.withColumnsRenamed({"id": "id_a", "sig": "sig_a"}), "id_a")
@@ -478,8 +474,14 @@ def incremental_fuzzy_unique_documents(
         in_batch_losers = cc.filter(F.col("node") != F.col("component")).select(
             F.col("node").alias("doc_id")
         )
+        # both anti joins broadcast their id side (in-batch losers here,
+        # store hits below): each holds ids of this micro-batch only,
+        # and the kernel's output carries no id partitioning, so a
+        # shuffle join would move every 8·sig_len-byte signature
         survivors = sig.join(
-            in_batch_losers.withColumnsRenamed({"doc_id": "id"}), "id", "left_anti"
+            F.broadcast(in_batch_losers.withColumnsRenamed({"doc_id": "id"})),
+            "id",
+            "left_anti",
         )
 
         # -- cross-batch: pruned read of the bucket-partitioned store -------
@@ -522,7 +524,9 @@ def incremental_fuzzy_unique_documents(
                 .select(F.col("nw.id").alias("id"))
                 .distinct()
             )
-            final = survivors.join(hits, "id", "left_anti").cache()
+            final = survivors.join(
+                F.broadcast(hits), "id", "left_anti"
+            ).cache()
         else:
             final = survivors
 

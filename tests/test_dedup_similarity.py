@@ -175,36 +175,134 @@ def test_minhash_fast_rep_verify_drops_chained_member(spark):
     assert pairwise == {"1": "1", "2": "1", "3": "1"}
 
 
-def test_minhash_row_wise_signatures_value_equal(spark):
-    """The per-row HOF signature and the explode+agg signature must be
-    VALUE-IDENTICAL (same shingles, same hash family) — row_wise is a
-    pure performance knob, so dedup groups must also coincide."""
+def minhash_signature_oracle(
+    shingles, num_hashes: int = 64, seed: int = 42
+):
+    """array<bigint> MinHash signature as a per-row column expression —
+    the bit-equality oracle for the library's numpy kernel.
+
+    h_i(S) = min over shingles of xxhash64(xxhash64(shingle), seed+i),
+    folded by array higher-order functions (interpreted per element).
+    The seeds array is bound ONCE via a single-element-array transform
+    scope: referencing the computed sequence inside the aggregate lambda
+    would re-materialize it per shingle (no CSE across HOF lambdas).
+    """
+    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
+
+    def build(seeds):
+        init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
+        return F.aggregate(
+            hashes,
+            init,
+            lambda acc, h: F.zip_with(
+                acc, seeds, lambda m, i: F.least(m, F.xxhash64(h, i))
+            ),
+        )
+
+    return F.transform(
+        F.array(F.sequence(F.lit(seed), F.lit(seed + num_hashes - 1))), build
+    )[0]
+
+
+def test_minhash_kernel_matches_hof_oracle(spark):
+    """The numpy signature kernel must be BIT-IDENTICAL to the
+    expression oracle at 64 slots and at 256 (the streaming store's
+    ``verify_hashes`` default), and prefix-stable: the 256-slot
+    signature's first 64 slots equal the 64-slot signature, because the
+    store's persisted bucket keys hash exactly that prefix."""
     from llm_information_extraction_spark.operators.dedup import (
-        minhash_dedup_groups,
         minhash_signatures,
+        word_shingles,
     )
 
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    agg = {
+    sigs = {}
+    for k in (64, 256):
+        kernel = {
+            r["id"]: r["sig"]
+            for r in minhash_signatures(
+                d, "doc_id", "text", num_hashes=k
+            ).collect()
+        }
+        oracle = {
+            r["doc_id"]: r["sig"]
+            for r in d.select(
+                "doc_id",
+                minhash_signature_oracle(
+                    word_shingles("text", 3), k
+                ).alias("sig"),
+            ).collect()
+        }
+        assert kernel == oracle and len(kernel) == d.count()
+        assert all(len(v) == k for v in kernel.values())
+        sigs[k] = kernel
+    assert {i: v[:64] for i, v in sigs[256].items()} == sigs[64]
+
+
+def test_minhash_filtered_branch_matches_hof_oracle(spark, monkeypatch):
+    """``minhash_dedup_groups_fast(max_shingle_doc_freq=...)`` signs the
+    shingles that survive stop-shingle filtering, grouped back per doc
+    from the filtered token table: its signatures must equal the oracle
+    over those same filtered shingle sets."""
+    from llm_information_extraction_spark.operators import dedup
+
+    boiler = "shared opening words for every single document here"
+    rows = [
+        (i, f"{boiler} doc {i} says alpha{i} beta{i % 3} gamma{i} delta")
+        for i in range(12)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    captured = []
+    kernel = dedup._minhash_sigs_arrow
+
+    def spy(hs_df, num_hashes, seed):
+        out = kernel(hs_df, num_hashes, seed)
+        captured.append(out)
+        return out
+
+    monkeypatch.setattr(dedup, "_minhash_sigs_arrow", spy)
+    dedup.minhash_dedup_groups_fast(docs, max_shingle_doc_freq=0.5)
+    (sig,) = captured
+    got = {r["id"]: r["sig"] for r in sig.collect()}
+
+    kept = (
+        dedup.drop_frequent_shingles(
+            dedup._doc_tokens(docs, "doc_id", "text", 3), 0.5
+        )
+        .groupBy("id")
+        .agg(F.collect_set("shingle").alias("sh"))
+    )
+    want = {
         r["id"]: r["sig"]
-        for r in minhash_signatures(d, "doc_id", "text").collect()
-    }
-    hof = {
-        r["id"]: r["sig"]
-        for r in minhash_signatures(
-            d, "doc_id", "text", row_wise=True
+        for r in kept.select(
+            "id", minhash_signature_oracle(F.col("sh")).alias("sig")
         ).collect()
     }
-    assert agg == hof and len(agg) == d.count()
-    groups_agg = sorted(
-        (r["doc_id"], r["group_id"])
-        for r in minhash_dedup_groups(d, threshold=0.5).collect()
+    unfiltered = {
+        r["id"]: r["sig"]
+        for r in dedup.minhash_signatures(docs).collect()
+    }
+    assert got == want and len(got) == len(rows)
+    # the filter really dropped the boilerplate shingles
+    assert all(got[i] != unfiltered[i] for i in got)
+
+
+@pytest.mark.parametrize("seed", [2**31, 2**31 - 63, -(2**31) - 1])
+def test_minhash_seed_outside_int32_raises_before_any_job(spark, seed):
+    """Slot i hashes ``seed+i`` as an int32; a seed range leaving int32
+    is refused when the plan is built, before any Spark job starts
+    (``2**31 - 63`` fails through its last slot at 64 hashes)."""
+    from llm_information_extraction_spark.operators.dedup import (
+        minhash_signatures,
     )
-    groups_hof = sorted(
-        (r["doc_id"], r["group_id"])
-        for r in minhash_dedup_groups(d, threshold=0.5, row_wise=True).collect()
-    )
-    assert groups_agg == groups_hof and groups_agg
+    from llm_information_extraction_spark.session import job_group
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id bigint, text string")
+    group = "test:minhash-seed"
+    with job_group(spark, group):
+        with pytest.raises(ValueError, match="int32"):
+            minhash_signatures(docs, num_hashes=64, seed=seed)
+    assert not spark.sparkContext.statusTracker().getJobIdsForGroup(group)
 
 
 def test_simhash_md5_arrow_matches_agg(spark):

@@ -203,17 +203,15 @@ def test_contract_query_scans_are_pruned(spark):
             assert read <= cols, (name, read)
 
 
-def test_minhash_uses_mapside_partial_aggregation(spark):
+def test_minhash_signature_plan_prunes_scan_and_has_no_exchange(spark):
     from llm_information_extraction_spark.operators.dedup import (
         minhash_signatures,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(minhash_signatures(docs))
-    # the signature reduction must pre-aggregate before the shuffle
-    # (partial_min on the map side) and stay in hash aggregates
-    assert "HashAggregate" in plan
-    assert "partial_min" in plan
+    # signatures are computed per row: no shuffle at all
+    assert "Exchange" not in plan
     # and the scan must prune to exactly (doc_id, text)
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
 

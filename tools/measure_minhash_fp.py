@@ -8,7 +8,7 @@ Jaccard is below the threshold can be falsely dropped (silent loss of
 unique training data). This tool measures that rate on planted pairs
 with exactly-known n-gram Jaccard, for estimator widths
 k ∈ {64, 128, 256}, using the production hash family
-(`minhash_signature`, prefix-stable in k) and the production banding
+(`minhash_signatures`, prefix-stable in k) and the production banding
 geometry (16 bands × 4 rows over the first 64 slots).
 
 Corpus: for each target Jaccard level, ``pairs_per_level`` document
@@ -88,7 +88,7 @@ def main() -> None:
     import numpy as np
 
     from llm_information_extraction_spark.operators.dedup import (
-        minhash_signature,
+        minhash_signatures,
         word_shingles,
     )
     from llm_information_extraction_spark.session import get_spark
@@ -99,22 +99,37 @@ def main() -> None:
     rows = build_pairs(args.pairs)
     df = spark.createDataFrame(
         rows, "pair_id long, level int, true_j double, ta string, tb string"
-    ).repartition(spark.sparkContext.defaultParallelism)
-    # one wide signature per side; slicing its prefix gives every
+    )
+    # one document per (pair, side): id 2·pair_id is side a, 2·pair_id+1
+    # side b. One wide signature per side; slicing its prefix gives every
     # narrower estimator (the production family is prefix-stable)
-    sigs = df.select(
-        "pair_id",
-        "level",
-        "true_j",
-        minhash_signature(word_shingles("ta", 3), SIG_LEN, SEED).alias("sa"),
-        minhash_signature(word_shingles("tb", 3), SIG_LEN, SEED).alias("sb"),
-        # sanity-pin the constructed ground truth with the real shingle
-        # sets: the planted J must match the closed form exactly
-        (
-            F.size(F.array_intersect(word_shingles("ta", 3), word_shingles("tb", 3)))
-            / F.size(F.array_union(word_shingles("ta", 3), word_shingles("tb", 3)))
-        ).alias("j_check"),
-    ).collect()
+    sides = spark.createDataFrame(
+        [(2 * pid, ta) for pid, _, _, ta, _ in rows]
+        + [(2 * pid + 1, tb) for pid, _, _, _, tb in rows],
+        "id long, text string",
+    )
+    sig = {
+        row["id"]: row["sig"]
+        for row in minhash_signatures(
+            sides, "id", "text", 3, SIG_LEN, SEED
+        ).collect()
+    }
+    sigs = [
+        row.asDict()
+        | {"sa": sig[2 * row["pair_id"]], "sb": sig[2 * row["pair_id"] + 1]}
+        for row in df.select(
+            "pair_id",
+            "level",
+            "true_j",
+            # sanity-pin the constructed ground truth with the real
+            # shingle sets: the planted J must match the closed form
+            # exactly
+            (
+                F.size(F.array_intersect(word_shingles("ta", 3), word_shingles("tb", 3)))
+                / F.size(F.array_union(word_shingles("ta", 3), word_shingles("tb", 3)))
+            ).alias("j_check"),
+        ).collect()
+    ]
 
     r = NUM_HASHES // BANDS
     ks = (64, 128, 256)
