@@ -634,37 +634,18 @@ def event_value_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash banding → exact-Jaccard verify → CC groups. Oracled: on
-    this corpus every qualifying pair has 3-gram Jaccard ≥ 0.889 (next
-    pair down is 0.069), so banding recall at b=16/r=4 is 1 − 3.75e-7
-    per pair — the groups equal the exact-Jaccard transitive closure the
-    DuckDB recursive CTE computes (verified bit-exact at sf0.001/0.01)."""
+    """MinHash banding → star edges (member → bucket-min) verified by
+    exact 3-gram Jaccard ≥ 0.5 → CC groups, the library's one grouping
+    path. Oracled by the exact-Jaccard closure the DuckDB recursive CTE
+    computes: on this corpus every qualifying pair has Jaccard ≥ 0.889
+    (next pair down is 0.069), so banding at b=16/r=4 puts each pair in
+    a shared bucket with probability 1 − 3.75e-7. No qualifying pair
+    here loses its star edge to a dissimilar bucket min (the path's one
+    caveat): the groups equal the closure bit-exactly at sf0.001/0.01."""
     d = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
     return minhash_dedup_groups(d, threshold=0.5)
-
-
-def minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION dedup path under the driver: every (band, bucket)
-    collapses to star edges via one aggregation, then doc-only connected
-    components (O(n·bands) edges regardless of cluster shape — the
-    100-TB recipe, see BENCH/dedup_scale.md) + O(cluster) rep-verify
-    at 0.5. Oracled by the same exact-Jaccard closure as minhash_dedup:
-    on this corpus banding recall is 1 (every qualifying pair j ≥ 0.889),
-    no false bucket collision merges distinct clusters (verified
-    bit-exact at sf0.001/0.01), and rep-verify keeps every true member
-    (intra-cluster j ≥ 0.889 ≥ 0.5) while post-verify singleton groups
-    are dropped — so bucket-CC, pairwise-CC, and the recursive-CTE
-    closure all coincide."""
-    from llm_information_extraction_spark.operators.dedup import (
-        minhash_dedup_groups_fast,
-    )
-
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return minhash_dedup_groups_fast(d, verify_threshold=0.5)
 
 
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1146,7 +1127,8 @@ _RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "cosine_topk_emb": cosine_topk_emb,
         "embedding_near_dups": embedding_near_dups,
         "minhash_dedup": minhash_dedup,
-        "minhash_dedup_fast": minhash_dedup_fast,
+        # an older name of the same query, kept because bench.py times it
+        "minhash_dedup_fast": minhash_dedup,
         "simhash_pairs": simhash_pairs,
         "greedy_error_totals": greedy_error_totals,
         "no_lut_tracts": no_lut_tracts,
@@ -1962,8 +1944,7 @@ def oracle_sql() -> dict[str, str]:
     }
     # the chunked path must be triple-identical to the unchunked flagship
     out["kg_triples_chunked"] = out["kg_triples"]
-    # the production bucket-CC dedup path must produce the same groups
-    # as the pairwise closure on this corpus (argument in its docstring)
+    # the same query as minhash_dedup (see queries()), so the same oracle
     out["minhash_dedup_fast"] = out["minhash_dedup"]
 
     # -- textprep oracles --------------------------------------------------

@@ -7,8 +7,6 @@ from .extraction import extract_triples  # noqa: F401
 from .dedup import (  # noqa: F401
     exact_dedup,
     minhash_dedup_groups,
-    minhash_dedup_groups_fast,
-    minhash_verified_pairs,
     simhash_near_dup_pairs,
 )
 from .graph import (  # noqa: F401

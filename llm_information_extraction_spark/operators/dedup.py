@@ -9,11 +9,12 @@ connected-components grouping runs the iterative join loop from
 
 Scale notes (100 TB):
 - exact dedup shuffles 16-byte md5 keys, never documents;
-- MinHash banding turns the O(n²) pair space into per-band groupBys;
-  band keys are salted into the shuffle naturally (hash partitioning);
-- candidate verification recomputes true n-gram Jaccard only on pairs
-  that share a band — the classic MinHash+LSH recipe (Broder '97,
-  Leskovec-Rajaraman-Ullman ch.3);
+- MinHash banding turns the O(n²) pair space into per-band windows:
+  each bucket collapses to star edges (member → bucket-min), at most
+  ``bands`` per document (Broder '97, Leskovec-Rajaraman-Ullman ch.3);
+- every star edge is verified by true n-gram Jaccard BEFORE the edges
+  are unioned into clusters, so shared template buckets cannot chain
+  dissimilar documents;
 - SimHash uses 64-bit signatures + lossless multi-table blocking with
   ≥16-bit composite keys (Manku-Jain-Sadhwani, WWW'07): d ≤ 3 keys on
   one 16-bit block (4 tables), d ≤ 6 on 2-of-8-block 16-bit composites
@@ -104,8 +105,12 @@ def ngram_jaccard_pairs(
     Exact (not approximate): explode shingles → equi-join on shingle →
     per-pair intersection counts → |A∩B| / (|A|+|B|−|A∩B|). The shuffle
     key is the shingle, so common shingles fan out — at scale, drop
-    ultra-frequent shingles first (stop-shingle filtering) or use
-    :func:`minhash_dedup_groups`. Returns (id_a, id_b, jaccard), id_a < id_b.
+    ultra-frequent shingles first (stop-shingle filtering) or group
+    with :func:`minhash_dedup_groups`, which verifies at most
+    ``bands`` star edges per document (and can miss a pair whose shared
+    buckets all have a dissimilar min; see its docstring). Its test
+    oracle is this function plus connected components. Returns
+    (id_a, id_b, jaccard), id_a < id_b.
     """
     sh = df.select(
         F.col(id_col).alias("id"), word_shingles(text_col, n).alias("shingles")
@@ -339,12 +344,13 @@ def drop_frequent_shingles(
     ``max_doc_freq`` of documents BEFORE MinHashing.
 
     Boilerplate shingles dominate signatures (they win the min for many
-    permutations across many docs), which is what chains whole
-    template-heavy corpora into one LSH component (see
-    BENCH/dedup_scale.md). Removing corpus-frequent shingles makes the
-    signature reflect each document's DISTINCTIVE content — the standard
-    web-dedup mitigation. Two extra codegen aggregations, shuffling only
-    (shingle, count) pairs.
+    permutations across many docs), which puts whole template-heavy
+    corpora into shared LSH buckets (see BENCH/dedup_scale.md): their
+    star edges then fail verification, and a near pair whose only
+    shared buckets these are is missed. Removing corpus-frequent
+    shingles makes the signature reflect each document's DISTINCTIVE
+    content — the standard web-dedup mitigation. Two extra codegen
+    aggregations, shuffling only (shingle, count) pairs.
 
     ``max_doc_freq`` is honored APPROXIMATELY near the cutoff: the doc
     count it scales comes from ``approx_count_distinct`` (HLL, ~5% rsd),
@@ -404,6 +410,20 @@ def minhash_signatures(
     )
 
 
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature slots per band, ``num_hashes / bands``. Any other
+    geometry is refused, before a plan is built: ``bands`` that does not
+    divide ``num_hashes`` silently ignores the leftover slots, and
+    ``bands > num_hashes`` gives empty bands, one bucket shared by every
+    document, so everything chains."""
+    if not (1 <= bands <= num_hashes and num_hashes % bands == 0):
+        raise ValueError(
+            f"bands={bands} must divide num_hashes={num_hashes} and lie in "
+            f"[1, {num_hashes}]"
+        )
+    return num_hashes // bands
+
+
 def _banded_buckets(
     sig: DataFrame, num_hashes: int, bands: int, keep: tuple[str, ...] = ("id",)
 ) -> DataFrame:
@@ -412,7 +432,7 @@ def _banded_buckets(
     ``keep`` lists the pass-through columns (default just ``id``; the
     streaming signature store also keeps ``sig`` so stored bucket rows
     carry their signature for in-join verification)."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = _rows_per_band(num_hashes, bands)
     return sig.select(
         *keep,
         F.explode(
@@ -450,7 +470,7 @@ def _banded_slices(
     versions. Returns (frame, key column names); the ≤ r·8-byte-wider
     shuffle key is noise next to the removed per-row work.
     """
-    r = num_hashes // bands
+    r = _rows_per_band(num_hashes, bands)
     keys = [f"b{i}" for i in range(r)]
     banded = sig.select(
         "id",
@@ -476,199 +496,22 @@ def _banded_slices(
     return banded, keys
 
 
-def minhash_candidate_pairs(
+def _verified_star_edges(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    seed: int,
+    max_shingle_doc_freq: float | None,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash.
-
-    ``bands`` bands of ``num_hashes/bands`` rows each; docs sharing any
-    band bucket become a candidate pair. Probability a pair with true
-    Jaccard j collides: 1-(1-j^r)^b.
-
-    Pair ENUMERATION is Θ(Σ bucket²): fine when duplicate clusters are
-    small, quadratic when a template spawns thousands of near-copies —
-    use :func:`minhash_dedup_groups_fast` for cluster-heavy corpora.
-    """
-    # cache: the banded self-join consumes this twice (both sides); one
-    # row per doc, so the footprint is tiny relative to the corpus
-    sig = minhash_signatures(
-        df, id_col, text_col, n, num_hashes, seed
-    ).cache()
-    banded, keys = _banded_slices(sig, num_hashes, bands)
-    a = banded.select(F.col("id").alias("id_a"), "band", *keys)
-    b = banded.select(F.col("id").alias("id_b"), "band", *keys)
-    return (
-        a.join(b, ["band", *keys])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
-
-
-def minhash_verified_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
-    seed: int = 42,
-) -> DataFrame:
-    """Banded candidates verified by EXACT n-gram Jaccard →
-    (id_a, id_b, jaccard), id_a < id_b, jaccard ≥ threshold.
-
-    The verify join never shuffles shingle arrays: candidates fan out
-    through an exploded (id, shingle) token table, so the per-pair
-    payload is one shingle string per shared shingle (intersection
-    counting by equi-join), then sizes join in per id. At 100 TB this is
-    the difference between shuffling whole documents per candidate and
-    shuffling only the shared tokens. With ``bands == num_hashes``
-    (r = 1 rows/band) banding recall at j ≥ 0.5 is 1 − (1−j)^64 ≈ 1,
-    making the output equal to the exact-Jaccard pair set — the
-    configuration the driver oracle pins.
-    """
-    cands = minhash_candidate_pairs(
-        df, id_col, text_col, n, num_hashes, bands, seed
-    ).cache()
-    # only candidate-involved docs need their shingles re-derived: the
-    # candidate id set is usually O(dup_rate·n) ≪ corpus, so the semi
-    # join prunes the token table before the shingle shuffle. NO
-    # broadcast hint and NO driver-side size gate: AQE sees the actual
-    # candidate size at runtime and downgrades the semi join to
-    # broadcast when it fits (same strategy as
-    # minhash_dedup_groups_fast) — a count()-based gate would serialize
-    # a blocking job in front of the verify plan for information AQE
-    # already has.
-    cand_ids = (
-        cands.select(F.col("id_a").alias("id"))
-        .union(cands.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    # semi-join BEFORE shingling (round 6): shingles are derived only
-    # for candidate-involved docs, not the whole corpus — and if the
-    # candidate set is ever corpus-sized, shuffling raw text is still
-    # strictly fewer bytes than shuffling its n-times-larger exploded
-    # shingle stream. The shingled candidate rows are cached: the
-    # intersection join consumes them twice (id_a and id_b sides) and
-    # re-deriving them costs a semi join + shingle build each time
-    cand_sh = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__vt"))
-        .join(cand_ids, "id", "leftsemi")
-        .select("id", word_shingles("__vt", n).alias("__sh"))
-        .cache()
-    )
-    # each token row carries its doc's |distinct shingle set| (8 bytes
-    # per SHARED token row in the shuffle) so the per-pair sizes ride
-    # through the intersection aggregate as min() of a per-id constant
-    # — two fewer joins (and AQE broadcast waves) than joining a sizes
-    # relation back in per side
-    tok = cand_sh.select(
-        "id", F.size("__sh").alias("sz"), F.explode("__sh").alias("shingle")
-    )
-    inter = (
-        cands.join(
-            tok.withColumnsRenamed({"id": "id_a", "sz": "size_a"}), "id_a"
-        )
-        .join(
-            tok.withColumnsRenamed({"id": "id_b", "sz": "size_b"}),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.min("size_a").alias("size_a"),
-            F.min("size_b").alias("size_b"),
-        )
-    )
-    jac = F.col("c") / (F.col("size_a") + F.col("size_b") - F.col("c"))
-    return (
-        inter.select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_dedup_groups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate clusters: MinHash banding → exact Jaccard verify →
-    connected components. Returns (doc_id, group_id); group_id = min id
-    of the cluster; singletons omitted."""
-    from .canonicalize import connected_components
-
-    verified = minhash_verified_pairs(
-        df, id_col, text_col, n, num_hashes, bands, threshold, seed
-    ).select(
-        F.col("id_a").cast("string").alias("src"),
-        F.col("id_b").cast("string").alias("dst"),
-    )
-    cc = connected_components(verified)
-    return cc.select(
-        F.col("node").alias("doc_id"), F.col("component").alias("group_id")
-    )
-
-
-def minhash_dedup_groups_fast(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    verify_threshold: float | None = None,
-    max_shingle_doc_freq: float | None = None,
-) -> DataFrame:
-    """Near-dup clusters for corpora with LARGE duplicate clusters —
-    the web-scale production path.
-
-    ``max_shingle_doc_freq`` applies :func:`drop_frequent_shingles`
-    before signing, so boilerplate shingles stop dominating signatures
-    (the chaining cause); a document whose every shingle is
-    corpus-frequent carries no distinctive content and is left
-    unclustered (run exact fingerprint dedup first — KGPipeline does).
-    That branch signs each document's surviving shingles, grouped back
-    from the filtered token table, with the same kernel as
-    :func:`minhash_signatures`.
-
-    The pairwise path (:func:`minhash_dedup_groups`) enumerates candidate
-    PAIRS, which is Θ(Σ cluster²): one 14k-copy boilerplate cluster alone
-    yields 10⁸ pairs (measured on a 10⁵-doc synthetic corpus). This
-    variant instead treats each (band, bucket) as a hyperedge: one
-    aggregation collapses every bucket to STAR edges (member → bucket-min
-    doc) — at most n·bands edges no matter how the clusters are shaped,
-    equivalent to CC over the bipartite doc ↔ bucket graph but with
-    doc-only nodes and a near-star start — the RefinedWeb/SlimPajama-
-    style recipe.
-
-    Precision equals banding precision (clusters are unions of shared
-    buckets, no per-pair exact-Jaccard check). Pass ``verify_threshold``
-    to additionally drop members whose exact n-gram Jaccard against
-    their cluster REPRESENTATIVE (min doc id) falls below it — that's
-    O(cluster size) verification work instead of O(cluster²). Two
-    documented rep-verify caveats on bucket-CHAINED clusters: a
-    legitimately chained member can sit below the pair threshold vs the
-    representative, and a true duplicate PAIR whose members both fail
-    verification against a distant rep leaves the output entirely — run
-    exact fingerprint dedup first (KGPipeline's 'minhash' mode does)
-    so exact copies can never escape that way.
-
-    Returns (doc_id string, group_id string); singletons omitted.
-    """
-    from .canonicalize import connected_components
+    """(src, dst) string edges for :func:`minhash_dedup_groups`: each
+    document's star edge to the min id of every band bucket it shares,
+    kept only when the two documents' exact word-``n``-gram Jaccard is
+    ≥ ``threshold``."""
+    from pyspark.sql.window import Window
 
     if max_shingle_doc_freq is None:
         sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed)
@@ -686,99 +529,95 @@ def minhash_dedup_groups_fast(
             num_hashes,
             seed,
         )
-    from pyspark.sql.window import Window
-
     banded, keys = _banded_slices(sig, num_hashes, bands)
-    # collapse each band bucket to STAR edges member → bucket-min doc
-    # via ONE bucket-partitioned window min: connectivity is
-    # identical to the bipartite doc↔bucket graph (a bucket's members
-    # stay joined through its min member), but CC then runs over
-    # doc-only nodes — half the node count — and starts one hop from
-    # star shape, so it converges in fewer large-star/small-star rounds.
-    # A window (one exchange) rather than groupBy + self-join: the join
-    # shape re-derived `banded` — and with it the whole signature
-    # pipeline — on BOTH sides (measured 10.9 s vs 4.5 s at sf1.0 for
-    # 2.5k edges)
-    bucket_w = Window.partitionBy("band", *keys)
-    # the window min runs on the NATIVE id type and the string cast
-    # happens after: the bucket anchor only needs to be *consistent*
-    # within the bucket for connectivity (every member joins through
-    # it), so a numeric-min anchor yields the same components as a
-    # lexicographic one, while the 800k-row/band-count shuffle sorts
-    # 8-byte longs instead of strings. Representatives (group_id) are
-    # still min STRING doc ids — computed downstream over docs_cc.
-    edges = (
-        banded.select("id", "band", *keys)
-        .withColumn("dst", F.min("id").over(bucket_w))
-        .filter(F.col("id") != F.col("dst"))
-        .select(
-            F.col("id").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
+    # ONE bucket-partitioned window min (one exchange) rather than
+    # groupBy + self-join, which re-derived the signature pipeline on
+    # both join sides. The min runs on the NATIVE id type: the anchor
+    # only has to be the same for every member of the bucket
+    star = (
+        banded.select(
+            "id", F.min("id").over(Window.partitionBy("band", *keys)).alias("dst")
         )
+        .filter(F.col("id") != F.col("dst"))
+        .dropDuplicates()
     )
-    cc = connected_components(edges)
-    docs_cc = cc.select(F.col("node").alias("doc_id"), "component")
-    # representative + cluster size via ONE component-partitioned
-    # window instead of groupBy + self-join: the join shape re-derived
-    # the CC output subtree on both sides (two aggregate scans, twice
-    # the plan), the window is one exchange over the grouped docs
-    comp_w = Window.partitionBy("component")
-    groups = (
-        docs_cc.withColumn("group_id", F.min("doc_id").over(comp_w))
-        .withColumn("sz", F.count(F.lit(1)).over(comp_w))
-        .filter(F.col("sz") > 1)
-        .select("doc_id", "group_id")
-    )
-    if verify_threshold is None:
-        return groups
-
-    # representative verify: exact n-gram Jaccard(member, rep) —
-    # O(cluster) pairs, one per member. Round 6 shape: attach the two
-    # raw texts per (member, rep) pair with two joins and compute the
-    # Jaccard as ONE codegen projection (array_intersect over the
-    # distinct shingle arrays, bound once via withColumn) — replacing a
-    # 6-join token-table cascade that re-derived the exploded token
-    # table three times (measured ~6 s → ~1 s at sf1.0 for 4.8k grouped
-    # docs). Value-identical: word_shingles arrays are distinct, so
-    # |array_intersect| equals the old equi-join intersection count and
-    # the division is the same int/int double. Bytes at scale: each
-    # member ships its text once — strictly fewer bytes than the old
-    # full member token table (n shingles ≈ n× text bytes). NO
-    # broadcast hints: the grouped set can be corpus-sized on
-    # boilerplate-heavy corpora; AQE broadcasts when it turns out small
-    txt = df.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.col(text_col).alias("__vt"),
+    # shingle each document ONCE and join the arrays to both edge ends:
+    # building them per edge end (up to ``bands`` times per doc on
+    # templated corpora) was 4.5x slower at 100k docs
+    # (BENCH/dedup_scale.md).
+    # word_shingles arrays are distinct, so |array_intersect| is the
+    # intersection size. No broadcast hints: AQE broadcasts the edge
+    # side when it turns out small
+    sh = df.select(
+        F.col(id_col).alias("id"), word_shingles(text_col, n).alias("__sh")
     )
     pairs = (
-        groups.join(txt, "doc_id")
-        .join(
-            txt.select(
-                F.col("doc_id").alias("group_id"),
-                F.col("__vt").alias("__rvt"),
-            ),
-            "group_id",
+        star.join(sh, "id")
+        .join(sh.withColumnsRenamed({"id": "dst", "__sh": "__dsh"}), "dst")
+        .withColumn("__c", F.size(F.array_intersect("__sh", "__dsh")))
+    )
+    jac = F.col("__c") / (F.size("__sh") + F.size("__dsh") - F.col("__c"))
+    return pairs.filter(jac >= threshold).select(
+        F.col("id").cast("string").alias("src"),
+        F.col("dst").cast("string").alias("dst"),
+    )
+
+
+def minhash_dedup_groups(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    num_hashes: int = 64,
+    bands: int = 16,
+    threshold: float = 0.8,
+    seed: int = 42,
+    max_shingle_doc_freq: float | None = None,
+) -> DataFrame:
+    """Near-duplicate clusters: MinHash banding → star edges verified by
+    exact n-gram Jaccard → connected components. Returns (doc_id string,
+    group_id string), group_id = the cluster's min string doc id;
+    singletons omitted.
+
+    Each (band, bucket) collapses to STAR edges, member → bucket-min
+    doc, so there are at most ``bands`` edges per document however the
+    clusters are shaped (enumerating candidate PAIRS is Θ(Σ bucket²):
+    one 14k-copy boilerplate bucket alone yields 10⁸ pairs). Every star
+    edge is then verified — word-``n``-gram Jaccard ≥ ``threshold`` —
+    BEFORE the edges are unioned, so a bucket shared by dissimilar
+    template documents cannot chain them into one component: two
+    documents end up grouped only through a path of verified
+    near-duplicate edges.
+
+    Caveat: the two documents of a near pair meet only through the min
+    of the buckets they share. If every shared bucket's min is a
+    dissimilar document, both star edges fail verification and the
+    pair is not grouped (pinned by
+    ``test_minhash_star_edge_caveat_dissimilar_bucket_min``).
+    ``max_shingle_doc_freq`` is the mitigation: it applies
+    :func:`drop_frequent_shingles` before signing, so boilerplate
+    shingles stop dominating signatures and putting unrelated documents
+    in one bucket. A document whose every shingle is corpus-frequent
+    carries no distinctive content and is left unclustered (run exact
+    fingerprint dedup first — KGPipeline does). That branch signs each
+    document's surviving shingles, grouped back from the filtered token
+    table, with the same kernel as :func:`minhash_signatures`;
+    verification always uses the full shingle sets.
+
+    ``bands`` must divide ``num_hashes`` (``ValueError`` otherwise).
+    """
+    from .canonicalize import connected_components
+
+    cc = connected_components(
+        _verified_star_edges(
+            df, id_col, text_col, n, num_hashes, bands, threshold, seed,
+            max_shingle_doc_freq,
         )
-        .withColumn("__sh", word_shingles("__vt", n))
-        .withColumn("__rsh", word_shingles("__rvt", n))
-        .withColumn("__c", F.size(F.array_intersect("__sh", "__rsh")))
     )
-    jac = F.col("__c") / (
-        F.size("__sh") + F.size("__rsh") - F.col("__c")
-    )
-    verified = pairs.filter(
-        (F.col("doc_id") == F.col("group_id")) | (jac >= verify_threshold)
-    ).select("doc_id", "group_id")
-    # post-verify singleton drop via a window, NOT groupBy + self-join:
-    # the join re-computed the ENTIRE verify subtree (text joins, both
-    # shingle builds, the intersection) on both sides — measured as the
-    # two slowest stages of the whole query at 10x scale. The window is
-    # one exchange over the already-verified (doc_id, group_id) rows.
-    keep_w = Window.partitionBy("group_id")
-    return (
-        verified.withColumn("sz2", F.count(F.lit(1)).over(keep_w))
-        .filter(F.col("sz2") > 1)
-        .select("doc_id", "group_id")
+    # CC's component is the min string node id, and every node it
+    # returns has an edge to another one: no singleton to drop
+    return cc.select(
+        F.col("node").alias("doc_id"), F.col("component").alias("group_id")
     )
 
 
@@ -1033,8 +872,8 @@ def _simhash_block_plan(
     raise ValueError(
         f"no lossless SimHash blocking with ≥{min_key_bits}-bit keys and "
         f"≤{max_tables} tables exists for max_hamming={max_hamming}; use "
-        "minhash_dedup_groups / minhash_verified_pairs for loose "
-        "similarity budgets, or lower min_key_bits explicitly"
+        "minhash_dedup_groups for loose similarity budgets, or lower "
+        "min_key_bits explicitly"
     )
 
 

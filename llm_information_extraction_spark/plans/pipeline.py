@@ -73,8 +73,9 @@ class PipelineConfig:
     #: (bounds Arrow batch memory for oversized docs; operators/skew.py)
     chunk_max_spans: int | None = None
     #: corpus dedup before extraction: 'none' | 'exact' (payload
-    #: fingerprint, keep min doc_id) | 'minhash' (bucket-CC near-dup
-    #: clusters with exact rep-verify ≥ minhash_threshold, keep the rep)
+    #: fingerprint, keep min doc_id) | 'minhash' (exact first, then
+    #: near-dup clusters joined by MinHash star edges verified at exact
+    #: Jaccard ≥ minhash_threshold; keep each cluster's min id)
     dedup: str = "none"
     minhash_threshold: float = 0.8
 
@@ -209,10 +210,10 @@ class KGPipeline:
         with UNIQUE content. Committed like any stage (resumable).
 
         'minhash' composes exact-first-then-fuzzy (the production
-        order): exact fingerprint dedup is cheap and CHAINING-PROOF —
-        rep-verified near-dup removal alone can miss an exact duplicate
-        pair whose members both sit far from their bucket-chained
-        cluster representative.
+        order): exact fingerprint dedup is cheap and catches every
+        byte-identical payload, while :func:`minhash_dedup_groups` can
+        miss a near pair whose shared MinHash buckets all have a
+        dissimilar min document (its documented caveat).
         """
         from ..functions.textmetrics import doc_fingerprint
 
@@ -225,12 +226,12 @@ class KGPipeline:
         unique = with_fp.join(keep, ["__fp", "doc_id"]).select(*docs.columns)
 
         if self.config.dedup == "minhash":
-            from ..operators.dedup import minhash_dedup_groups_fast
+            from ..operators.dedup import minhash_dedup_groups
 
-            groups = minhash_dedup_groups_fast(
+            groups = minhash_dedup_groups(
                 build_payload(unique, mode="full_text"),
                 text_col="payload",
-                verify_threshold=self.config.minhash_threshold,
+                threshold=self.config.minhash_threshold,
             )
             drop = groups.filter(
                 F.col("doc_id") != F.col("group_id")

@@ -381,8 +381,8 @@ def incremental_fuzzy_unique_documents(
     per surviving doc (32 KB at defaults vs 8 KB) — still ≪ corpus;
     set ``verify_hashes=None`` to keep the 64-slot store when that
     false-drop rate is acceptable. Callers needing EXACT-Jaccard
-    confirmation keep a doc store and run ``minhash_verified_pairs``
-    offline.
+    confirmation keep a doc store and run ``minhash_dedup_groups``
+    (star edges verified by exact Jaccard) over it offline.
 
     ``doc_id`` must be globally unique across the STREAM's lifetime
     (suppression is keyed by id): if a later batch reuses an id with
@@ -404,8 +404,11 @@ def incremental_fuzzy_unique_documents(
     from pyspark.sql import functions as F
 
     from ..operators.canonicalize import connected_components
-    from ..operators.dedup import _banded_buckets
+    from ..operators.dedup import _banded_buckets, _rows_per_band
 
+    # the batches band through the same helper; refuse a bad geometry
+    # when the stream is defined, not in its first micro-batch
+    _rows_per_band(num_hashes, bands)
     if verify_hashes is not None and verify_hashes < num_hashes:
         raise ValueError(
             f"verify_hashes={verify_hashes} must be >= num_hashes="

@@ -78,101 +78,126 @@ def test_ngram_jaccard_pairs(dup_corpus):
     assert all(a != 4 and b != 4 for a, b in pairs)
 
 
-def test_minhash_dedup_groups(dup_corpus):
-    got = {
-        r["doc_id"]: r["group_id"]
-        for r in minhash_dedup_groups(dup_corpus, threshold=0.5).collect()
+def exact_closure(df, threshold, id_col="doc_id", text_col="text"):
+    """{doc_id: group_id} of the exact word-3-gram-Jaccard closure —
+    every pair ≥ ``threshold`` unioned, group_id = min string id: the
+    oracle the MinHash grouping is checked against."""
+    from llm_information_extraction_spark.operators.canonicalize import (
+        connected_components,
+    )
+
+    pairs = ngram_jaccard_pairs(
+        df, id_col, text_col, threshold=threshold
+    ).select(
+        F.col("id_a").cast("string").alias("src"),
+        F.col("id_b").cast("string").alias("dst"),
+    )
+    return {
+        r["node"]: r["component"]
+        for r in connected_components(pairs).collect()
     }
+
+
+def _groups(df):
+    return {r["doc_id"]: r["group_id"] for r in df.collect()}
+
+
+def test_minhash_dedup_groups(dup_corpus):
+    got = _groups(minhash_dedup_groups(dup_corpus, threshold=0.5))
     # 1,2,5 exact-identical signatures; 3 near-dup joins the cluster
-    assert got["1"] == got["2"] == got["5"] == got["3"]
+    assert got == exact_closure(dup_corpus, 0.5)
+    assert got["1"] == got["2"] == got["5"] == got["3"] == "1"
     assert "4" not in got
 
 
-def test_minhash_dedup_groups_fast_matches_pairwise(dup_corpus):
-    from llm_information_extraction_spark.operators.dedup import (
-        minhash_dedup_groups_fast,
+def test_minhash_dedup_groups_matches_exact_closure_on_testdata(spark):
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    got = _groups(minhash_dedup_groups(d, threshold=0.5))
+    assert got and got == exact_closure(d, 0.5)
+
+
+def test_minhash_dedup_groups_finds_planted_copies_in_templated_corpus(spark):
+    """Generator documents share their templates (median pairwise
+    3-gram Jaccard ≈ 0.3), so MinHash buckets mix unrelated documents.
+    25 planted copies (payload + one appended word) must all be grouped
+    with their source at 0.8, and every dropped document must be a true
+    member of the exact ≥ 0.8 closure."""
+    from llm_information_extraction_spark.operators.payload import (
+        build_payload,
+    )
+    from llm_information_extraction_spark.sources.synthetic import (
+        generate_documents,
     )
 
-    pairwise = {
-        r["doc_id"]: r["group_id"]
-        for r in minhash_dedup_groups(dup_corpus, threshold=0.5).collect()
-    }
-    fast = {
-        r["doc_id"]: r["group_id"]
-        for r in minhash_dedup_groups_fast(
-            dup_corpus, verify_threshold=0.5
-        ).collect()
-    }
-    assert fast == pairwise  # {1,2,3,5} clustered; 4 alone
-    # unverified variant may only ADD members (banding precision), never
-    # lose any, and must keep the same representative
-    loose = {
-        r["doc_id"]: r["group_id"]
-        for r in minhash_dedup_groups_fast(dup_corpus).collect()
-    }
-    assert set(pairwise) <= set(loose)
-    assert all(loose[k] == v for k, v in pairwise.items())
-
-
-def test_minhash_fast_rep_verify_drops_chained_member(spark):
-    """Pins the DOCUMENTED rep-verify caveat (minhash_dedup_groups_fast
-    docstring): on a bucket-chained cluster A~B~C with J(A,B) ≥ t and
-    J(B,C) ≥ t but J(A,C) < t, rep-verify (against rep = min id = A)
-    drops the legitimately chained member C, while the unverified
-    variant and the PAIRWISE path (which verifies edges, not members)
-    both keep it. Exact-dedup-first in KGPipeline is the rescue for
-    exact copies — this caveat only affects near-dup chains."""
-    from llm_information_extraction_spark.operators.dedup import (
-        minhash_dedup_groups_fast,
-        ngram_jaccard_pairs,
+    payload = build_payload(generate_documents(spark, 500, seed=42)).select(
+        "doc_id", "payload"
     )
+    sources = [
+        r["doc_id"]
+        for r in payload.orderBy("doc_id").select("doc_id").collect()[::20]
+    ]
+    assert len(sources) == 25
+    copies = payload.filter(F.col("doc_id").isin(sources)).select(
+        F.concat("doc_id", F.lit("_copy")).alias("doc_id"),
+        F.concat("payload", F.lit(" appendedword")).alias("payload"),
+    )
+    corpus = payload.unionByName(copies).cache()
 
-    base = (
+    got = _groups(
+        minhash_dedup_groups(corpus, text_col="payload", threshold=0.8)
+    )
+    found = [s for s in sources if s in got and got.get(f"{s}_copy") == got[s]]
+    assert len(found) / len(sources) == 1.0, f"recall {len(found)}/25"
+    closure = exact_closure(corpus, 0.8, text_col="payload")
+    false_drops = [
+        d
+        for d, g in got.items()
+        if d != g and (d not in closure or closure[d] != closure.get(g))
+    ]
+    assert false_drops == []
+    corpus.unpersist()
+
+
+def test_minhash_star_edge_caveat_dissimilar_bucket_min(spark, monkeypatch):
+    """The documented caveat of star-edge grouping: near copies B and C
+    share only band 0, whose min is a dissimilar lower-id document A.
+    Both star edges (B → A, C → A) fail verification, so B and C are
+    NOT grouped; without A the same bucket's min is B and they are."""
+    from llm_information_extraction_spark.operators import dedup
+
+    text_b = (
         "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
-        "kilo lima mike november oscar papa quebec romeo sierra tango "
-        "uniform victor whiskey xray yankee zulu one two three four"
+        "kilo lima mike november oscar papa quebec romeo sierra tango"
     )
-    wa = base.split()
-    wb = list(wa)
-    wb[2], wb[14] = "changeb1", "changeb2"
-    wc = list(wb)
-    wc[7], wc[20], wc[26] = "changec1", "changec2", "changec3"
-    df = spark.createDataFrame(
-        [
-            (1, " ".join(wa)),
-            (2, " ".join(wb)),
-            (3, " ".join(wc)),
-            (4, "unrelated filler text about entirely different things "
-                "and topics galore"),
-        ],
-        "doc_id bigint, text string",
-    )
-    # the planted chain: A~B and B~C above 0.5, A~C below it
+    rows = [
+        (1, "unrelated filler words about some entirely different topic"),
+        (2, text_b),
+        (3, text_b + " uniform"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     jac = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, threshold=0.0).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=0.0).collect()
     }
-    assert jac[(1, 2)] >= 0.5 and jac[(2, 3)] >= 0.5
-    assert jac[(1, 3)] < 0.5
-    loose = {
-        r["doc_id"]: r["group_id"]
-        for r in minhash_dedup_groups_fast(df).collect()
+    assert jac[(2, 3)] >= 0.8 and (1, 2) not in jac and (1, 3) not in jac
+
+    # band 0 (slots 0-3) equal for all three docs; every other slot
+    # distinct per doc, so no other band bucket is shared
+    sigs = spark.createDataFrame(
+        [(i, [0] * 4 + [1000 * i + k for k in range(60)]) for i in (1, 2, 3)],
+        "id bigint, sig array<bigint>",
+    )
+    monkeypatch.setattr(
+        dedup,
+        "_minhash_sigs_arrow",
+        lambda hs_df, num_hashes, seed: hs_df.select("id").join(sigs, "id"),
+    )
+    assert _groups(dedup.minhash_dedup_groups(docs)) == {}
+    without_a = docs.filter(F.col("doc_id") != 1)
+    assert _groups(dedup.minhash_dedup_groups(without_a)) == {
+        "2": "2",
+        "3": "2",
     }
-    assert loose == {"1": "1", "2": "1", "3": "1"}  # banding chains A-B-C
-    verified = {
-        r["doc_id"]: r["group_id"]
-        for r in minhash_dedup_groups_fast(
-            df, verify_threshold=0.5
-        ).collect()
-    }
-    # C fails J(member, rep=A) and leaves the cluster — the documented
-    # O(cluster) rep-verify trade-off vs O(cluster²) pair verification
-    assert verified == {"1": "1", "2": "1"}
-    pairwise = {
-        r["doc_id"]: r["group_id"]
-        for r in minhash_dedup_groups(df, threshold=0.5).collect()
-    }
-    assert pairwise == {"1": "1", "2": "1", "3": "1"}
 
 
 def minhash_signature_oracle(
@@ -240,7 +265,7 @@ def test_minhash_kernel_matches_hof_oracle(spark):
 
 
 def test_minhash_filtered_branch_matches_hof_oracle(spark, monkeypatch):
-    """``minhash_dedup_groups_fast(max_shingle_doc_freq=...)`` signs the
+    """``minhash_dedup_groups(max_shingle_doc_freq=...)`` signs the
     shingles that survive stop-shingle filtering, grouped back per doc
     from the filtered token table: its signatures must equal the oracle
     over those same filtered shingle sets."""
@@ -261,7 +286,7 @@ def test_minhash_filtered_branch_matches_hof_oracle(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(dedup, "_minhash_sigs_arrow", spy)
-    dedup.minhash_dedup_groups_fast(docs, max_shingle_doc_freq=0.5)
+    dedup.minhash_dedup_groups(docs, max_shingle_doc_freq=0.5)
     (sig,) = captured
     got = {r["id"]: r["sig"] for r in sig.collect()}
 
@@ -302,6 +327,35 @@ def test_minhash_seed_outside_int32_raises_before_any_job(spark, seed):
     with job_group(spark, group):
         with pytest.raises(ValueError, match="int32"):
             minhash_signatures(docs, num_hashes=64, seed=seed)
+    assert not spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("bands", [0, 5, 128])
+def test_minhash_bad_banding_geometry_raises_before_any_job(spark, bands):
+    """``bands`` must divide ``num_hashes``: 128 bands of 64 slots are
+    empty (one bucket for every doc), 5 bands ignore 4 slots. The
+    grouping's raw-slice banding, the streaming store's hashed buckets
+    and the stream's definition refuse them before any job runs."""
+    from llm_information_extraction_spark.operators.dedup import (
+        _banded_buckets,
+        minhash_signatures,
+    )
+    from llm_information_extraction_spark.session import job_group
+    from llm_information_extraction_spark.streaming import (
+        incremental_fuzzy_unique_documents,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id bigint, text string")
+    group = "test:minhash-bands"
+    with job_group(spark, group):
+        with pytest.raises(ValueError, match="must divide"):
+            minhash_dedup_groups(docs, num_hashes=64, bands=bands)
+        with pytest.raises(ValueError, match="must divide"):
+            _banded_buckets(minhash_signatures(docs), 64, bands)
+        with pytest.raises(ValueError, match="must divide"):
+            incremental_fuzzy_unique_documents(
+                spark, "in", "out", "ckpt", "state", num_hashes=64, bands=bands
+            )
     assert not spark.sparkContext.statusTracker().getJobIdsForGroup(group)
 
 
@@ -350,13 +404,9 @@ def test_winnow_fingerprints_guarantee(spark):
 
 
 def test_stop_shingle_filter_breaks_boilerplate_chaining(spark):
-    """All docs share a boilerplate prefix: unfiltered bucket-CC chains
-    everything into one component; dropping corpus-frequent shingles
-    leaves only the true duplicate pair grouped."""
-    from llm_information_extraction_spark.operators.dedup import (
-        minhash_dedup_groups_fast,
-    )
-
+    """All docs share a boilerplate prefix: dropping corpus-frequent
+    shingles before signing leaves only the true duplicate pair
+    grouped."""
     boiler = (
         "this article is distributed under the terms of the creative "
         "commons attribution license which permits unrestricted use"
@@ -374,19 +424,9 @@ def test_stop_shingle_filter_breaks_boilerplate_chaining(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
 
-    chained = minhash_dedup_groups_fast(docs)
-    assert chained.count() >= 18  # boilerplate chains most of the corpus
-    biggest = (
-        chained.groupBy("group_id").count().agg(F.max("count").alias("m"))
-    ).first()["m"]
-    assert biggest >= 15  # dominated by a giant chained component
-
-    filtered = {
-        r["doc_id"]: r["group_id"]
-        for r in minhash_dedup_groups_fast(
-            docs, max_shingle_doc_freq=0.5
-        ).collect()
-    }
+    filtered = _groups(
+        minhash_dedup_groups(docs, max_shingle_doc_freq=0.5)
+    )
     assert set(filtered) == {"20", "21"}  # only the true dup pair
 
 

@@ -216,27 +216,19 @@ def test_minhash_signature_plan_prunes_scan_and_has_no_exchange(spark):
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
 
 
-def test_bucket_star_collapse_uses_mapside_partial_min(spark):
-    """minhash_dedup_groups_fast's bucket→star-edge collapse must
-    pre-aggregate the per-(band,bucket) min doc id on the map side and
-    never plan a cartesian product; the CC input is doc-only edges."""
+def test_verified_star_edges_plan_signs_once_and_has_no_cartesian(spark):
+    """The star edges minhash_dedup_groups feeds to connected
+    components: bucket collapse by window, texts attached by equi-joins
+    — never a cartesian product — and ONE signature kernel, so no join
+    side re-derives the signatures."""
     from llm_information_extraction_spark.operators.dedup import (
-        _banded_buckets,
-        minhash_signatures,
+        _verified_star_edges,
     )
-    from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    banded = _banded_buckets(minhash_signatures(docs), 64, 16)
-    bucket_min = banded.groupBy("band", "bucket").agg(
-        F.min(F.col("id").cast("string")).alias("rep")
+    plan = _plan(
+        _verified_star_edges(docs, "doc_id", "text", 3, 64, 16, 0.8, 42, None)
     )
-    edges = (
-        banded.join(bucket_min, ["band", "bucket"])
-        .filter(F.col("id").cast("string") != F.col("rep"))
-        .select(F.col("id").cast("string").alias("src"), F.col("rep").alias("dst"))
-    )
-    plan = _plan(edges)
-    assert "partial_min" in plan  # map-side combine before the shuffle
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("MapInPandas") == 1
