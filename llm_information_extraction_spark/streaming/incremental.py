@@ -1,4 +1,4 @@
-"""Incremental (streaming) triple extraction.
+"""Incremental (streaming) triple extraction and cross-batch dedup.
 
 The reference is strictly batch (SURVEY §2: no streaming semantics), so
 this is an *extension*: new document files landing in a directory are
@@ -12,6 +12,13 @@ not guarantee by itself: each batch overwrites its own
 before the checkpoint commit re-runs the batch into the same directory
 instead of appending duplicates (the standard exactly-once foreachBatch
 recipe). Readers get ``batch_id`` back as a discovered partition column.
+
+The near-dup operators (MinHash text, embeddings) keep their cross-batch
+state the same way: a flat store of precomputed bucket rows with one
+``batch_id=<N>`` directory per micro-batch. Batch N joins the rows of
+every batch below N (a literal partition filter) on (band or table,
+bucket), then overwrites its own directory; committed batches are
+merged into one directory by :func:`compact_signature_store`.
 """
 
 from __future__ import annotations
@@ -116,45 +123,33 @@ def _sig_est_jaccard(a, b, num_hashes: int):
     return matches.cast("double") / num_hashes
 
 
-def _store_pt(group_col, bucket_col, partitions: int):
-    """Partition key of a bucket row: ``group * P + pmod(bucket, P)``.
-
-    ``group`` is the blocking-table index (MinHash band / RP-LSH table),
-    ``bucket`` the (possibly negative) hash bucket. Encoding the group in
-    the key means a join on (pt, bucket) is exactly a join on
-    (group, bucket) — pt // P recovers the group — while the pmod fans
-    each group across ``partitions`` directories so one hot band never
-    concentrates the store in a single partition."""
-    from pyspark.sql import functions as F
-
-    return (
-        F.col(group_col).cast("long") * partitions
-        + F.pmod(F.col(bucket_col), F.lit(partitions))
-    ).alias("pt")
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path class) for ``path``. Every store operation goes
+    through the Hadoop FileSystem API resolved from the path itself, so
+    the same code runs on a local directory, ``hdfs://`` or an object
+    store."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    return hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def _read_store_pruned(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    pts: list[int],
-    total_pts: int | None = None,
+def _batch_dirs(spark: SparkSession, state_dir: str) -> list:
+    """FileStatus of every ``batch_id=N`` directory of a store (none when
+    the store does not exist)."""
+    fs, hpath = _hadoop_fs(spark, state_dir)
+    found = fs.globStatus(hpath(state_dir.rstrip("/") + "/batch_id=*"))
+    return list(found) if found is not None else []
+
+
+def _read_older_batches(
+    spark: SparkSession, state_dir: str, batch_id: int
 ) -> DataFrame | None:
-    """Read a (pt, batch_id)-partitioned state store restricted to
-    STRICTLY older batches (a replayed batch must never see its own
-    rows) AND to the ``pt`` partitions the incoming batch actually hits.
+    """The store's bucket rows of every batch STRICTLY older than
+    ``batch_id`` (a replayed batch must never see its own rows).
 
-    Both predicates are literal partition filters, so the scan opens
-    only matched directories (check ``PartitionFilters`` in the plan) —
-    per-batch store I/O scales with the batch's bucket spread, not with
-    total stream history. Returns None when the store doesn't exist yet
-    (first batch) or the batch hits no buckets.
-
-    ``total_pts`` (the layout's pt-space size, bands·P or tables·P):
-    when the batch saturates the whole space the IN-list prunes nothing
-    and only bloats the plan (a large ``store_partitions`` puts tens of
-    thousands of literals in it), so it is skipped and the read relies
-    on the batch_id filter alone.
+    ``batch_id < N`` is a literal partition filter, so the scan skips
+    the batch's own directory and any later one (``PartitionFilters`` in
+    the plan). Returns None when the store holds no batch yet (first
+    batch, or only empty batches so far).
 
     Only the path-missing case means "no store yet"; any other read
     failure (corrupt footer, permissions, botched compaction) must FAIL
@@ -165,64 +160,70 @@ def _read_store_pruned(
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
-    if not pts:
-        return None
-    # "no store yet" = no pt=* data partitions. The directory itself can
-    # exist earlier (the _layout.json marker is written at stream
-    # start), so path existence alone doesn't mean data — and a read of
-    # a data-less dir fails schema inference rather than path lookup.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    root = hpath(state_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return None
-    found = fs.globStatus(hpath(state_dir.rstrip("/") + "/pt=*"))
-    if found is None or len(list(found)) == 0:
+    # "no store yet" = no batch_id=* data partitions. The directory
+    # itself can exist earlier (the _layout.json marker is written at
+    # stream start), and a read of a data-less dir fails schema
+    # inference rather than path lookup.
+    if not _batch_dirs(spark, state_dir):
         return None
     try:
-        store = spark.read.parquet(state_dir).filter(
+        return spark.read.parquet(state_dir).filter(
             F.col("batch_id") < F.lit(batch_id)
         )
-        if total_pts is None or len(pts) < total_pts:
-            store = store.filter(F.col("pt").isin([int(p) for p in pts]))
-        return store
     except AnalysisException as e:
-        # any read failure past this point (corrupt footer, permissions,
-        # botched compaction) must FAIL the batch so the checkpoint
-        # retries — swallowing it would silently disable cross-batch
-        # dedup
         if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
             raise
         return None
 
 
+def _retired_layout(state_dir: str, why: str) -> ValueError:
+    return ValueError(
+        f"state store at {state_dir} {why}: the partitioned (pt, batch_id) "
+        "store layout is retired and the stream cannot read it — delete "
+        "the state dir and let the stream rebuild it"
+    )
+
+
+def _refuse_partitioned_store(spark: SparkSession, state_dir: str) -> None:
+    """Raise when ``state_dir`` holds ``pt=K`` directories: the retired
+    layout kept its rows one level deeper, keyed by a ``pt`` column
+    instead of the band / table index the cross-batch join matches on."""
+    fs, hpath = _hadoop_fs(spark, state_dir)
+    root = hpath(state_dir)
+    if fs.exists(root) and any(
+        st.getPath().getName().startswith("pt=") for st in fs.listStatus(root)
+    ):
+        raise _retired_layout(state_dir, "holds pt=K directories")
+
+
 def _check_store_layout(
     spark: SparkSession, state_dir: str, layout: dict
 ) -> None:
-    """Fail fast when a store is reopened with different blocking
-    parameters.
+    """Fail fast, before any Spark job, when a store is reopened with
+    different blocking parameters or was written in a retired layout.
 
-    The store holds PRECOMPUTED pt/bucket values, so every parameter
-    that feeds them (bands / planes / tables / store_partitions / seed /
-    hash config) is baked into the rows: restarting the stream with a
-    different value would make the (pt, bucket) equi-join silently match
+    The store holds PRECOMPUTED bucket values, so every parameter that
+    feeds them (bands / planes / tables / seed / hash config) is baked
+    into the rows: restarting the stream with a different value would
+    make the (band, bucket) or (tbl, bucket) equi-join silently match
     nothing (or the wrong rows) and near-dups of stored docs would pass
     through undetected. The first run writes ``_layout.json`` into the
     store root (underscore prefix keeps it out of partition discovery);
-    later runs compare and raise on any difference. Hadoop FileSystem
-    API, so the check works on cluster stores too.
+    later runs compare and raise on any difference. A store holding
+    ``pt=K`` directories, or whose marker records a parameter the caller
+    no longer passes at all (the retired partitioned layout recorded its
+    partition count), raises the retired-layout error instead: no choice
+    of parameters can reopen it.
     """
     import json
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    root = hpath(state_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    _refuse_partitioned_store(spark, state_dir)
+    fs, hpath = _hadoop_fs(spark, state_dir)
     marker = hpath(state_dir.rstrip("/") + "/_layout.json")
     if fs.exists(marker):
         # read JVM-side: py4j passes byte[] by VALUE, so a Java
         # stream.read(python_buf) never fills the Python buffer
+        jvm = spark._jvm
         bos = jvm.java.io.ByteArrayOutputStream()
         jvm.org.apache.hadoop.io.IOUtils.copyBytes(
             fs.open(marker), bos, 4096, True
@@ -235,6 +236,11 @@ def _check_store_layout(
         # the layout when it changes the stored rows)
         norm_existing = {k: v for k, v in existing.items() if v is not None}
         norm_layout = {k: v for k, v in layout.items() if v is not None}
+        retired = sorted(set(norm_existing) - set(layout))
+        if retired:
+            raise _retired_layout(
+                state_dir, f"records parameters no longer taken: {retired}"
+            )
         if norm_existing != norm_layout:
             diffs = {
                 k: (existing.get(k, "<absent>"), layout.get(k, "<absent>"))
@@ -249,7 +255,7 @@ def _check_store_layout(
                 "the original parameters"
             )
         return
-    fs.mkdirs(root)
+    fs.mkdirs(hpath(state_dir))
     out = fs.create(marker, True)
     try:
         out.write(json.dumps(layout, sort_keys=True).encode("utf-8"))
@@ -258,19 +264,20 @@ def _check_store_layout(
 
 
 def _write_store(rows: DataFrame, state_dir: str, batch_id: int) -> None:
-    """Commit a batch's bucket rows to the (pt, batch_id)-partitioned
-    store. Dynamic partition overwrite replaces exactly the (pt, N)
-    directories this batch produces — a REPLAYED batch recomputes the
-    same rows (inputs and store reads are deterministic) and overwrites
-    its own partitions, never touching other batches: the same
-    exactly-once foreachBatch recipe as the per-batch output dirs."""
+    """Commit a batch's bucket rows as the store's ``batch_id=N``
+    partition. Dynamic partition overwrite replaces exactly that one
+    directory — a REPLAYED batch recomputes the same rows (inputs and
+    store reads are deterministic) and overwrites its own directory,
+    never touching other batches: the same exactly-once foreachBatch
+    recipe as the per-batch output dirs. A batch with no rows writes no
+    directory."""
     from pyspark.sql import functions as F
 
     (
         rows.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pt", "batch_id")
+        .partitionBy("batch_id")
         .parquet(state_dir)
     )
 
@@ -282,29 +289,20 @@ def _auto_compact(
     compact_batches: int | None,
 ) -> None:
     """Bound a state store's directory count across stream restarts:
-    when the store holds ``compact_batches`` or more distinct batch_id
-    partitions, merge the COMMITTED ones into a single partition before
+    when the store holds ``compact_batches`` or more ``batch_id=N``
+    directories, merge the COMMITTED ones into a single directory before
     the stream starts.
 
     Stream start is the documented no-concurrent-writer safe point, and
     passing the checkpoint dir keeps any crash-uncommitted batch's
-    partitions untouched (see :func:`compact_signature_store`) — so this
-    runs unattended. The directory count grows with BATCHES, not rows;
-    without compaction a long-lived stream accumulates
-    O(batches · pt-space) directories and listing cost creeps into every
-    pruned read. ``None`` or ``0`` disables (matching the CLI contract —
-    a threshold of 0 must not mean "compact on every start")."""
+    directory untouched (see :func:`compact_signature_store`) — so this
+    runs unattended. The directory and file count grows with BATCHES,
+    not rows, and every store read lists them. ``None`` or ``0``
+    disables (matching the CLI contract — a threshold of 0 must not mean
+    "compact on every start")."""
     if not compact_batches:
         return
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    root = hpath(state_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return
-    found = fs.globStatus(hpath(state_dir.rstrip("/") + "/pt=*/batch_id=*"))
-    ids = {st.getPath().getName() for st in (list(found) if found else [])}
-    if len(ids) >= compact_batches:
+    if len(_batch_dirs(spark, state_dir)) >= compact_batches:
         compact_signature_store(spark, state_dir, checkpoint_dir)
 
 
@@ -329,7 +327,6 @@ def incremental_fuzzy_unique_documents(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 42,
-    store_partitions: int = 4,
     verify_hashes: int | None = 256,
     compact_batches: int | None = 64,
     max_files_per_trigger: int = 16,
@@ -341,25 +338,20 @@ def incremental_fuzzy_unique_documents(
     catches byte-identical content; this operator suppresses a NEAR-dup
     arriving any number of micro-batches later. State is a compact
     on-disk signature store — precomputed bucket rows
-    (bucket, id, sig array<bigint>) parquet partitioned by
-    (pt, batch_id) where pt = band·P + pmod(bucket, P) with
-    P = ``store_partitions``: 64 longs per band per surviving doc, never
-    text. Per micro-batch:
+    (band, bucket, id, sig array<bigint>) in one ``batch_id=N`` parquet
+    directory per micro-batch: the signature per band per surviving doc,
+    never text. Per micro-batch:
 
     1. sign incoming docs with the batch MinHash operators;
     2. within-batch: banded-bucket candidates → signature-estimated
        Jaccard ≥ threshold edges → connected components → keep min id;
     3. cross-batch: the batch's bucket rows equi-join the store on
-       (pt, bucket) ≡ (band, bucket). The store read carries two LITERAL
-       partition filters — ``batch_id < current`` (a REPLAYED batch never
-       sees its own signatures) and ``pt IN (batch's partitions)`` — so
-       it opens only the ≤ bands·P directories this batch can possibly
-       collide with, NOT the whole history: per-batch store I/O is
-       bounded by the batch's bucket spread at any stream age. Estimated
-       Jaccard ≥ threshold (verified in-join from the stored signature)
-       drops the newcomer;
+       (band, bucket). The store read carries the LITERAL partition
+       filter ``batch_id < current``, so a REPLAYED batch never sees its
+       own signatures. Estimated Jaccard ≥ threshold (verified in-join
+       from the stored signature) drops the newcomer;
     4. survivors overwrite ``output/batch_id=N``; their bucket rows
-       dynamically overwrite the store's (pt, N) partitions. Both
+       dynamically overwrite the store's ``batch_id=N`` directory. Both
        replay-idempotent (the standard exactly-once foreachBatch recipe).
 
     Similarity is the SIGNATURE estimate (matching-slot fraction): the
@@ -390,16 +382,18 @@ def incremental_fuzzy_unique_documents(
     carrying that id.
 
     Storing buckets costs ``bands`` rows per doc (the signature is
-    duplicated per band); that is the deliberate trade for pruned reads —
-    at 100 TB the store is still ≪ the corpus (``bands`` ×
-    ``(verify_hashes or num_hashes)`` longs ≈ 32 KB per surviving doc at
-    defaults) while the per-batch scan stays O(batch). Raise
-    ``store_partitions`` on large clusters so single partitions stay
-    below executor-memory scale. The store's directory count grows with
-    batches, not rows: every stream start auto-compacts committed
-    batches once ``compact_batches`` distinct batch partitions have
-    accumulated (None disables; :func:`compact_signature_store` can
-    still be run manually between runs).
+    repeated per band, which parquet dictionary-encodes within a file);
+    in exchange the store side of the join is a plain columnar scan of
+    precomputed buckets, with no re-banding of history. Every batch
+    reads the whole older store: a micro-batch of a few hundred docs
+    collides with almost every bucket region anyway (measured in
+    ``BENCH/streaming_store.md``). The store's directory count grows
+    with batches, not rows: every stream start auto-compacts committed
+    batches once ``compact_batches`` batch directories have accumulated
+    (None disables; :func:`compact_signature_store` can still be run
+    manually between runs). A store written in the retired
+    (pt, batch_id) layout raises ``ValueError`` when the stream is
+    defined.
     """
     from pyspark.sql import functions as F
 
@@ -443,107 +437,103 @@ def incremental_fuzzy_unique_documents(
         sig = minhash_signatures(
             docs, "doc_id", "payload", n, sig_len, seed
         ).cache()
-        buckets = _banded_buckets(sig, num_hashes, bands)
+        # released in ``finally``: a failing batch must not leave its
+        # frames in the session's cache across stream restarts
+        cached = [sig]
+        try:
+            buckets = _banded_buckets(sig, num_hashes, bands)
 
-        # -- within-batch: est-Jaccard edges → CC → keep min id ------------
-        # no distinct on the pairs: a pair sharing several bands repeats
-        # until CC's canonical-edge dedup, whose map-side partial
-        # aggregate collapses the repeats in place. The signature
-        # kernel's output carries no id partitioning, so a distinct here
-        # would be one more shuffle
-        cand = (
-            buckets.alias("a")
-            .join(
-                buckets.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        )
-        edges = (
-            cand.join(sig.withColumnsRenamed({"id": "id_a", "sig": "sig_a"}), "id_a")
-            .join(sig.withColumnsRenamed({"id": "id_b", "sig": "sig_b"}), "id_b")
-            .filter(
-                _sig_est_jaccard(F.col("sig_a"), F.col("sig_b"), sig_len)
-                >= threshold
-            )
-            .select(
-                F.col("id_a").cast("string").alias("src"),
-                F.col("id_b").cast("string").alias("dst"),
-            )
-        )
-        cc = connected_components(edges)
-        in_batch_losers = cc.filter(F.col("node") != F.col("component")).select(
-            F.col("node").alias("doc_id")
-        )
-        # both anti joins broadcast their id side (in-batch losers here,
-        # store hits below): each holds ids of this micro-batch only,
-        # and the kernel's output carries no id partitioning, so a
-        # shuffle join would move every 8·sig_len-byte signature
-        survivors = sig.join(
-            F.broadcast(in_batch_losers.withColumnsRenamed({"doc_id": "id"})),
-            "id",
-            "left_anti",
-        )
-
-        # -- cross-batch: pruned read of the bucket-partitioned store -------
-        # bucket rows with the signature attached (zero shuffle: pure
-        # explode over the cached survivor signatures)
-        def bucket_rows(s: DataFrame) -> DataFrame:
-            b = _banded_buckets(s, num_hashes, bands, keep=("id", "sig"))
-            return b.select(
-                _store_pt("band", "bucket", store_partitions),
-                "bucket",
-                "id",
-                "sig",
-            )
-
-        survivors = survivors.cache()
-        new_rows = bucket_rows(survivors)
-        pts = [r["pt"] for r in new_rows.select("pt").distinct().collect()]
-        store = _read_store_pruned(
-            spark, state_dir, batch_id, pts, bands * store_partitions
-        )
-        if store is not None:
-            # verification happens IN the join projection from the stored
-            # signature — no join back to a signature table, so a pair
-            # colliding in b bands is estimated b times (64 int compares)
-            # instead of shuffled once: compute for shuffle, the right
-            # trade at every scale
-            hits = (
-                new_rows.alias("nw")
+            # -- within-batch: est-Jaccard edges → CC → keep min id --------
+            # no distinct on the pairs: a pair sharing several bands
+            # repeats until CC's canonical-edge dedup, whose map-side
+            # partial aggregate collapses the repeats in place. The
+            # signature kernel's output carries no id partitioning, so a
+            # distinct here would be one more shuffle
+            cand = (
+                buckets.alias("a")
                 .join(
-                    store.alias("od"),
-                    (F.col("nw.pt") == F.col("od.pt"))
-                    & (F.col("nw.bucket") == F.col("od.bucket")),
+                    buckets.alias("b"),
+                    (F.col("a.band") == F.col("b.band"))
+                    & (F.col("a.bucket") == F.col("b.bucket"))
+                    & (F.col("a.id") < F.col("b.id")),
                 )
+                .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            )
+            edges = (
+                cand.join(
+                    sig.withColumnsRenamed({"id": "id_a", "sig": "sig_a"}), "id_a"
+                )
+                .join(sig.withColumnsRenamed({"id": "id_b", "sig": "sig_b"}), "id_b")
                 .filter(
-                    _sig_est_jaccard(
-                        F.col("nw.sig"), F.col("od.sig"), sig_len
-                    )
+                    _sig_est_jaccard(F.col("sig_a"), F.col("sig_b"), sig_len)
                     >= threshold
                 )
-                .select(F.col("nw.id").alias("id"))
-                .distinct()
+                .select(
+                    F.col("id_a").cast("string").alias("src"),
+                    F.col("id_b").cast("string").alias("dst"),
+                )
             )
-            final = survivors.join(
-                F.broadcast(hits), "id", "left_anti"
+            cc = connected_components(edges)
+            in_batch_losers = cc.filter(
+                F.col("node") != F.col("component")
+            ).select(F.col("node").alias("doc_id"))
+            # both anti joins broadcast their id side (in-batch losers
+            # here, store hits below): each holds ids of this micro-batch
+            # only, and the kernel's output carries no id partitioning,
+            # so a shuffle join would move every 8·sig_len-byte signature
+            survivors = sig.join(
+                F.broadcast(in_batch_losers.withColumnsRenamed({"doc_id": "id"})),
+                "id",
+                "left_anti",
             ).cache()
-        else:
-            final = survivors
+            cached.append(survivors)
 
-        # overwrite-per-batch-directory = replay-idempotent commit; the
-        # sink preserves the INPUT row schema (doc_id, spans, ...) so the
-        # deduped stream feeds the batch KG pipeline directly
-        batch_df.join(
-            final.select(F.col("id").alias("doc_id")), "doc_id", "leftsemi"
-        ).write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
-        _write_store(bucket_rows(final), state_dir, batch_id)
-        sig.unpersist()
-        survivors.unpersist()
-        if final is not survivors:
-            final.unpersist()
+            # -- cross-batch: join the older batches' bucket rows ----------
+            # bucket rows with the signature attached (zero shuffle: pure
+            # explode over the cached survivor signatures)
+            def bucket_rows(s: DataFrame) -> DataFrame:
+                return _banded_buckets(
+                    s, num_hashes, bands, keep=("id", "sig")
+                ).select("band", "bucket", "id", "sig")
+
+            final = survivors
+            store = _read_older_batches(spark, state_dir, batch_id)
+            if store is not None:
+                # verification happens IN the join projection from the
+                # stored signature — no join back to a signature table,
+                # so a pair colliding in b bands is estimated b times
+                # (sig_len int compares) instead of shuffled once
+                hits = (
+                    bucket_rows(survivors).alias("nw")
+                    .join(
+                        store.alias("od"),
+                        (F.col("nw.band") == F.col("od.band"))
+                        & (F.col("nw.bucket") == F.col("od.bucket")),
+                    )
+                    .filter(
+                        _sig_est_jaccard(
+                            F.col("nw.sig"), F.col("od.sig"), sig_len
+                        )
+                        >= threshold
+                    )
+                    .select(F.col("nw.id").alias("id"))
+                    .distinct()
+                )
+                final = survivors.join(
+                    F.broadcast(hits), "id", "left_anti"
+                ).cache()
+                cached.append(final)
+
+            # overwrite-per-batch-directory = replay-idempotent commit; the
+            # sink preserves the INPUT row schema (doc_id, spans, ...) so
+            # the deduped stream feeds the batch KG pipeline directly
+            batch_df.join(
+                final.select(F.col("id").alias("doc_id")), "doc_id", "leftsemi"
+            ).write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
+            _write_store(bucket_rows(final), state_dir, batch_id)
+        finally:
+            for df in cached:
+                df.unpersist()
 
     _check_store_layout(
         spark,
@@ -554,7 +544,6 @@ def incremental_fuzzy_unique_documents(
             "num_hashes": num_hashes,
             "bands": bands,
             "seed": seed,
-            "store_partitions": store_partitions,
             "verify_hashes": verify_hashes,
         },
     )
@@ -566,10 +555,9 @@ def _last_committed_batch(spark: SparkSession, checkpoint_dir: str) -> int:
     """Highest batch id recorded in a Structured Streaming checkpoint's
     ``commits/`` log (−1 when nothing has committed). Batches at or
     below it can never be replayed; anything above can."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    cdir = hpath(checkpoint_dir.rstrip("/") + "/commits")
-    fs = cdir.getFileSystem(spark._jsc.hadoopConfiguration())
+    commits = checkpoint_dir.rstrip("/") + "/commits"
+    fs, hpath = _hadoop_fs(spark, commits)
+    cdir = hpath(commits)
     if not fs.exists(cdir):
         return -1
     ids = [
@@ -583,34 +571,29 @@ def _last_committed_batch(spark: SparkSession, checkpoint_dir: str) -> int:
 def compact_signature_store(
     spark: SparkSession, state_dir: str, checkpoint_dir: str | None = None
 ) -> int:
-    """Merge every batch's partitions of a dedup state store into the
-    single highest ``batch_id``; returns the surviving batch_id.
+    """Merge the ``batch_id=N`` directories of a dedup state store into
+    the single highest ``batch_id``; returns the surviving batch_id.
 
     ``checkpoint_dir`` (the stream's checkpoint location) makes the
     merge safe against the crash-before-commit window: only batches AT
     OR BELOW the last id in the checkpoint's ``commits/`` log are
     compacted. Without it, a run that crashed after writing state for
     batch N but before committing N would have N's rows merged into the
-    surviving partition — the restarted stream replays N, its store read
+    surviving directory — the restarted stream replays N, its store read
     (``batch_id < N``) finds no older history, and its dynamic overwrite
-    of the (pt, N) partitions would DESTROY the merged rows. With the
-    bound, uncommitted partitions are left untouched and the replay
-    overwrites only its own rows. Pass it whenever the store belongs to
-    a live stream (the streaming operators' auto-compaction does);
-    omitting it is only safe when no run has ever crashed mid-batch,
-    e.g. offline maintenance of a retired store.
+    of ``batch_id=N`` would DESTROY the merged rows. With the bound,
+    uncommitted directories are left untouched and the replay overwrites
+    only its own rows. Pass it whenever the store belongs to a live
+    stream (the streaming operators' auto-compaction does); omitting it
+    is only safe when no run has ever crashed mid-batch, e.g. offline
+    maintenance of a retired store.
 
-    Operates on the bucket-partitioned layout the streaming dedup
-    operators write (``pt=K/batch_id=N``, compacted to
-    ``pt=K/batch_id=<max>`` per pt — partition pruning keeps working on
-    the compacted store). A legacy flat ``batch_id=N`` store (written by
-    pre-bucket-layout code) raises: the pruned cross-batch read path
-    cannot consume it either, so the honest answer is "rebuild the
-    state", not a compaction that papers over the mismatch. All file
-    operations go through the Hadoop FileSystem API resolved from
-    ``state_dir`` itself, so the same code compacts a local directory, an
-    ``hdfs://`` path, or an object store — no local-filesystem
-    assumption.
+    Operates on the flat layout the streaming dedup operators write
+    (``batch_id=N``, compacted to ``batch_id=<max>``). A store in the
+    retired ``pt=K/batch_id=N`` layout raises ``ValueError``: the stream
+    cannot read it either, so the honest answer is "rebuild the state",
+    not a compaction that papers over the mismatch. All file operations
+    go through the Hadoop FileSystem API resolved from ``state_dir``.
 
     Safe ONLY between stream runs (no concurrent writer): every row
     keeps a copy, and future batches N > max read ``batch_id < N`` which
@@ -620,47 +603,32 @@ def compact_signature_store(
 
     Crash-safe ordering — duplicates are harmless to the dedup semantics
     (candidate hits are set-joined), loss is not, so the merged rows are
-    ADDED to the surviving partition before anything is deleted:
+    ADDED to the surviving directory before anything is deleted:
 
     1. write the full-row-distinct merge to a sibling staging dir (the
        leading underscore keeps it out of Spark partition discovery);
-    2. move its part-files INTO the ``batch_id=<max>`` dirs (crash
-       mid-move → duplicate rows at worst, every row still present
-       somewhere);
-    3. delete the older partitions and the staging dir (crash mid-delete
-       → leftover duplicates, again harmless; re-running compaction
+    2. move its part-files INTO ``batch_id=<max>`` (crash mid-move →
+       duplicate rows at worst, every row still present somewhere);
+    3. delete the older directories, the part-files ``batch_id=<max>``
+       held before the move, and the staging dir (crash mid-delete →
+       leftover duplicates, again harmless; re-running compaction
        cleans up).
     """
     import uuid
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    root = hpath(state_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return -1
-
-    def _glob(pattern: str):
-        found = fs.globStatus(hpath(pattern))
-        return list(found) if found is not None else []
+    _refuse_partitioned_store(spark, state_dir)
 
     def _batch_of(status) -> int:
         return int(status.getPath().getName().split("=", 1)[1])
 
-    parts = _glob(f"{state_dir}/pt=*/batch_id=*")
-    if not parts and _glob(f"{state_dir}/batch_id=*"):
-        raise ValueError(
-            f"{state_dir} holds a legacy flat batch_id=N store; the "
-            "bucket-partitioned cross-batch read path cannot consume it "
-            "— delete the state dir and let the stream rebuild it"
-        )
+    parts = _batch_dirs(spark, state_dir)
     batch_ids = sorted({_batch_of(s) for s in parts})
     if checkpoint_dir is not None:
         # merge only batches the stream checkpoint has COMMITTED: an
         # uncommitted batch (crash between state write and commit) will
         # be replayed, reads batch_id < N, and dynamically overwrites
-        # its own (pt, N) partitions — merging its rows upward would let
-        # that overwrite destroy them
+        # its own directory — merging its rows upward would let that
+        # overwrite destroy them
         last_committed = _last_committed_batch(spark, checkpoint_dir)
         batch_ids = [b for b in batch_ids if b <= last_committed]
     if len(batch_ids) <= 1:
@@ -670,7 +638,7 @@ def compact_signature_store(
     from pyspark.sql import functions as F
 
     # schema-agnostic: full-row distinct works for the MinHash store
-    # (pt, bucket, id, sig) and the embedding store (pt, bucket, id, v)
+    # (band, bucket, id, sig) and the embedding store (tbl, bucket, id, v)
     # alike — crash-leftover duplicates are byte-identical rows. The
     # batch_id filter is a literal partition predicate (no-op when every
     # batch is compactable).
@@ -680,30 +648,27 @@ def compact_signature_store(
         .drop("batch_id")
         .dropDuplicates()
     )
-    staging = f"{state_dir.rstrip('/')}/_compacting"
-    merged.write.mode("overwrite").partitionBy("pt").parquet(staging)
+    root = state_dir.rstrip("/")
+    staging = f"{root}/_compacting"
+    merged.write.mode("overwrite").parquet(staging)
+    fs, hpath = _hadoop_fs(spark, state_dir)
 
-    def _move_parts(src_dir, dest_dir) -> None:
-        fs.mkdirs(dest_dir)
-        for st in fs.listStatus(src_dir):
-            name = st.getPath().getName()
-            if name.startswith("part-"):
-                fs.rename(
-                    st.getPath(),
-                    hpath(dest_dir, f"compact-{uuid.uuid4().hex}-{name}"),
-                )
+    def _part_files(d):
+        return [
+            st.getPath()
+            for st in fs.listStatus(d)
+            if st.getPath().getName().startswith(("part-", "compact-"))
+        ]
 
-    for st in _glob(f"{staging}/pt=*"):
-        _move_parts(
-            st.getPath(),
-            hpath(
-                f"{state_dir.rstrip('/')}/"
-                f"{st.getPath().getName()}/batch_id={max_id}"
-            ),
-        )
+    dest = hpath(f"{root}/batch_id={max_id}")
+    superseded = _part_files(dest)
+    for f in _part_files(hpath(staging)):
+        fs.rename(f, hpath(dest, f"compact-{uuid.uuid4().hex}-{f.getName()}"))
     for st in parts:
         if _batch_of(st) != max_id and _batch_of(st) in batch_ids:
             fs.delete(st.getPath(), True)
+    for f in superseded:
+        fs.delete(f, False)
     fs.delete(hpath(staging), True)
     return max_id
 
@@ -719,7 +684,6 @@ def incremental_unique_embeddings(
     num_planes: int = 12,
     num_tables: int = 4,
     seed: int = 42,
-    store_partitions: int = 4,
     schema: str = "vec_id bigint, embedding array<double>",
     compact_batches: int | None = 64,
     max_files_per_trigger: int = 16,
@@ -729,9 +693,8 @@ def incremental_unique_embeddings(
     ``threshold``) — the third member of the streaming dedup trio
     (exact fingerprints / MinHash text / embeddings).
 
-    State is precomputed bucket rows (bucket, id, v array<double>)
-    parquet partitioned by (pt, batch_id) with
-    pt = table·P + pmod(bucket, P), P = ``store_partitions`` — the full
+    State is precomputed bucket rows (tbl, bucket, id, v array<double>)
+    in one ``batch_id=N`` parquet directory per micro-batch — the full
     vector is stored per blocking table (a 64-dim embedding is ~0.5 KB,
     cheaper than a re-embeddable document), so candidate verification is
     EXACT cosine computed IN the bucket join, unlike the MinHash store's
@@ -741,17 +704,15 @@ def incremental_unique_embeddings(
     four tables ≈ 0.73; raise ``num_tables`` for higher recall, every
     candidate is exactly verified so precision is 1.0 regardless.
 
-    The cross-batch store read carries literal partition filters —
-    ``batch_id < current`` (replay-safe) and ``pt IN (batch's
-    partitions)`` — so each micro-batch opens only the ≤ num_tables·P
-    store directories it can collide with, never the whole history:
-    per-batch store I/O stays O(batch) at any stream age.
-    Replay-idempotence follows the same recipe as the MinHash variant:
-    per-batch-partition dynamic overwrites, store reads restricted to
-    strictly-older batches; every stream start auto-compacts committed
-    batches once ``compact_batches`` distinct batch partitions exist
+    The cross-batch join matches (tbl, bucket) against every strictly
+    older batch (the literal partition filter ``batch_id < current``
+    keeps a replayed batch from seeing itself). Replay-idempotence
+    follows the same recipe as the MinHash variant: per-batch dynamic
+    overwrite of ``batch_id=N``; every stream start auto-compacts
+    committed batches once ``compact_batches`` batch directories exist
     (None disables; :func:`compact_signature_store` is schema-agnostic
-    and can also run manually). Within-batch cluster
+    and can also run manually). A store in the retired (pt, batch_id)
+    layout raises ``ValueError`` when the stream is defined. Within-batch cluster
     representatives keep the LEXICOGRAPHICALLY smallest id (ids are
     handled as strings, like every dedup operator here) — zero-pad
     numeric ids upstream if numeric-min semantics matter; the output id
@@ -781,9 +742,7 @@ def incremental_unique_embeddings(
         out = parts[0]
         for p in parts[1:]:
             out = out.union(p)
-        return out.select(
-            _store_pt("tbl", "bucket", store_partitions), "bucket", "id", "v"
-        )
+        return out.select("tbl", "bucket", "id", "v")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # dim guard IN the value path: zip_with would pad a wrong-length
@@ -825,64 +784,62 @@ def incremental_unique_embeddings(
             )
             .cache()
         )
-        # hyperplane dots are the dominant per-row compute: compute the
-        # bucket rows ONCE, cache, and derive the within-batch join, the
-        # cross-batch probe, and the store write from the same rows
-        rows = bucket_rows(vecs).cache()
+        # released in ``finally``: a failing batch must not leave its
+        # frames in the session's cache across stream restarts
+        cached = [vecs]
+        try:
+            # hyperplane dots are the dominant per-row compute: compute the
+            # bucket rows ONCE, cache, and derive the within-batch join, the
+            # cross-batch probe, and the store write from the same rows
+            rows = bucket_rows(vecs).cache()
+            cached.append(rows)
 
-        # within-batch: bucket candidates verified by exact cosine
-        # IN-join (vectors travel with their buckets) → CC → keep min
-        edges = (
-            rows.alias("a")
-            .join(
-                rows.alias("b"),
-                (F.col("a.pt") == F.col("b.pt"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .filter(cosine_sim(F.col("a.v"), F.col("b.v")) >= threshold)
-            .select(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
-        )
-        losers = connected_components(edges).filter(
-            F.col("node") != F.col("component")
-        ).select(F.col("node").alias("id"))
-        survivors = vecs.join(losers, "id", "left_anti").cache()
-
-        # cross-batch: pruned read of the bucket-partitioned store —
-        # strictly-older batches (replay-safe) AND only the pt
-        # partitions this batch's buckets hit
-        new_rows = rows.join(losers, "id", "left_anti")
-        pts = [r["pt"] for r in new_rows.select("pt").distinct().collect()]
-        store = _read_store_pruned(
-            spark, state_dir, batch_id, pts, num_tables * store_partitions
-        )
-        if store is not None:
-            hits = (
-                new_rows.alias("nw")
+            # within-batch: bucket candidates verified by exact cosine
+            # IN-join (vectors travel with their buckets) → CC → keep min
+            edges = (
+                rows.alias("a")
                 .join(
-                    store.alias("od"),
-                    (F.col("nw.pt") == F.col("od.pt"))
-                    & (F.col("nw.bucket") == F.col("od.bucket")),
+                    rows.alias("b"),
+                    (F.col("a.tbl") == F.col("b.tbl"))
+                    & (F.col("a.bucket") == F.col("b.bucket"))
+                    & (F.col("a.id") < F.col("b.id")),
                 )
-                .filter(cosine_sim(F.col("nw.v"), F.col("od.v")) >= threshold)
-                .select(F.col("nw.id").alias("id"))
-                .distinct()
+                .filter(cosine_sim(F.col("a.v"), F.col("b.v")) >= threshold)
+                .select(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
             )
-            final = survivors.join(hits, "id", "left_anti").cache()
-            final_rows = new_rows.join(hits, "id", "left_anti")
-        else:
-            final = survivors
-            final_rows = new_rows
+            losers = connected_components(edges).filter(
+                F.col("node") != F.col("component")
+            ).select(F.col("node").alias("id"))
+            survivors = vecs.join(losers, "id", "left_anti").cache()
+            cached.append(survivors)
 
-        final.write.mode("overwrite").parquet(
-            f"{output_dir}/batch_id={batch_id}"
-        )
-        _write_store(final_rows, state_dir, batch_id)
-        vecs.unpersist()
-        rows.unpersist()
-        survivors.unpersist()
-        if final is not survivors:
-            final.unpersist()
+            # cross-batch: the survivors' bucket rows against every
+            # strictly-older batch
+            final, final_rows = survivors, rows.join(losers, "id", "left_anti")
+            store = _read_older_batches(spark, state_dir, batch_id)
+            if store is not None:
+                hits = (
+                    final_rows.alias("nw")
+                    .join(
+                        store.alias("od"),
+                        (F.col("nw.tbl") == F.col("od.tbl"))
+                        & (F.col("nw.bucket") == F.col("od.bucket")),
+                    )
+                    .filter(cosine_sim(F.col("nw.v"), F.col("od.v")) >= threshold)
+                    .select(F.col("nw.id").alias("id"))
+                    .distinct()
+                )
+                final = survivors.join(hits, "id", "left_anti").cache()
+                cached.append(final)
+                final_rows = final_rows.join(hits, "id", "left_anti")
+
+            final.write.mode("overwrite").parquet(
+                f"{output_dir}/batch_id={batch_id}"
+            )
+            _write_store(final_rows, state_dir, batch_id)
+        finally:
+            for df in cached:
+                df.unpersist()
 
     _check_store_layout(
         spark,
@@ -893,7 +850,6 @@ def incremental_unique_embeddings(
             "num_planes": num_planes,
             "num_tables": num_tables,
             "seed": seed,
-            "store_partitions": store_partitions,
         },
     )
     _auto_compact(spark, state_dir, checkpoint_dir, compact_batches)

@@ -45,7 +45,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--streaming-dedup", choices=["minhash", "exact"],
                    default="minhash",
                    help="streaming front-end flavor: 'minhash' catches "
-                        "near-duplicates via the bucket-partitioned "
+                        "near-duplicates via the per-batch "
                         "signature store; 'exact' catches byte-identical "
                         "content via the Spark state store (cheaper)")
     p.add_argument("--streaming-max-files", type=int, default=16,
@@ -64,13 +64,9 @@ def main(argv: list[str] | None = None) -> int:
                         "(>= num-hashes; 0 = use the blocking signature "
                         "only — cheaper store, measured higher false-drop "
                         "rate, see BENCH/streaming_store.md)")
-    p.add_argument("--store-partitions", type=int, default=4,
-                   help="pt fan-out per band in the signature store "
-                        "(raise on large clusters so single partitions "
-                        "stay small)")
     p.add_argument("--compact-batches", type=int, default=64,
                    help="auto-compact the signature store at stream start "
-                        "once this many batch partitions accumulated "
+                        "once this many batch directories accumulated "
                         "(0 disables)")
     p.add_argument("--warehouse", required=True)
     p.add_argument("--mode", choices=["full_text", "abstract"],
@@ -127,7 +123,6 @@ def main(argv: list[str] | None = None) -> int:
                 threshold=args.minhash_threshold,
                 num_hashes=args.minhash_num_hashes,
                 bands=args.minhash_bands,
-                store_partitions=args.store_partitions,
                 verify_hashes=args.minhash_verify_hashes or None,
                 compact_batches=args.compact_batches or None,
                 max_files_per_trigger=args.streaming_max_files,

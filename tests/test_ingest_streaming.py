@@ -225,12 +225,12 @@ def test_streaming_fuzzy_dedup_catches_near_dup_batches_later(spark, tmp_path):
     assert ids2 == ids  # replay-idempotent: same rows, no dupes
     assert spark.read.parquet(out_dir).count() == 4
 
-    # -- compaction: one batch left per pt, same answers afterwards -------
+    # -- compaction: one batch dir left, same answers afterwards ----------
     compact_signature_store(spark, state)
     import glob
 
-    batch_dirs = glob.glob(f"{state}/pt=*/batch_id=*")
-    assert batch_dirs  # bucket-partitioned layout
+    batch_dirs = glob.glob(f"{state}/batch_id=*")
+    assert batch_dirs  # flat batch_id=N layout
     assert len({d.rsplit("=", 1)[1] for d in batch_dirs}) == 1
     write([_span_doc("d0", base_text), _span_doc("d1", _salad(rng, 40))])
     run()
@@ -315,7 +315,7 @@ def test_streaming_embedding_dedup_cross_batch(spark, tmp_path):
     )
 
     compact_signature_store(spark, state)
-    batch_dirs = glob.glob(f"{state}/pt=*/batch_id=*")
+    batch_dirs = glob.glob(f"{state}/batch_id=*")
     assert batch_dirs and len({d.rsplit("=", 1)[1] for d in batch_dirs}) == 1
     write([(6, base), (7, rng.normal(size=dim))])
     run()
@@ -358,7 +358,7 @@ def test_streaming_embedding_dedup_dim_mismatch_fails_in_plan(
     # failed batch commits nothing: no output rows, no store partitions
     assert not os.path.exists(f"{out_dir}/batch_id=0")
     assert not any(
-        p.startswith("pt=") for p in os.listdir(str(tmp_path / "state"))
+        p.startswith("batch_id=") for p in os.listdir(str(tmp_path / "state"))
     )
 
 
@@ -470,57 +470,198 @@ def test_streaming_fuzzy_dedup_collapses_same_batch_duplicate_rows(
     assert {r["doc_id"] for r in out.collect()} == {"x0", "x1"}
 
 
-def test_streaming_store_read_prunes_partitions(spark, tmp_path):
-    """The cross-batch dedup store scan must read ONLY the (pt, batch)
-    partitions the incoming batch hits: both predicates are literal
-    partition filters in the scan plan, so per-batch store I/O is bounded
-    by the batch's bucket spread, not by stream history."""
+def test_streaming_store_reads_strictly_older_batches(spark, tmp_path):
+    """The flat store holds one batch_id=N directory per batch; the
+    cross-batch read for batch N sees only batches below N through a
+    literal partition filter on the scan, a replayed batch rewrites only
+    its own directory, and compaction keeps one copy of each row."""
+    import os
+
     from llm_information_extraction_spark.streaming.incremental import (
-        _read_store_pruned,
+        _read_older_batches,
         _write_store,
+        compact_signature_store,
     )
 
-    schema = "pt int, bucket long, id string, sig array<bigint>"
+    schema = "band int, bucket long, id string, sig array<bigint>"
     state = str(tmp_path / "state")
-    _write_store(
-        spark.createDataFrame(
-            [(0, 11, "a", [1, 2]), (1, 12, "b", [3, 4]), (2, 13, "c", [5, 6])],
-            schema,
-        ),
-        state,
-        0,
-    )
-    rows1 = spark.createDataFrame(
-        [(0, 11, "d", [1, 2]), (3, 14, "e", [7, 8])], schema
-    )
-    _write_store(rows1, state, 1)
-
-    # batch 1 store view: strictly-older rows (batch 0 only), pt ∈ {0, 2}
-    pruned = _read_store_pruned(spark, state, 1, [0, 2])
-    got = {(r["pt"], r["id"]) for r in pruned.collect()}
-    assert got == {(0, "a"), (2, "c")}
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters")[1].split("]")[0]
-    assert "pt" in pf and "batch_id" in pf  # pruned at the SCAN, not after
-
-    # empty probe set → no store read at all
-    assert _read_store_pruned(spark, state, 1, []) is None
     # missing store → None (first batch)
-    assert _read_store_pruned(spark, str(tmp_path / "nope"), 1, [0]) is None
+    assert _read_older_batches(spark, state, 1) is None
+    rows = {
+        0: [(0, 11, "a", [1, 2]), (1, 12, "b", [3, 4])],
+        1: [(0, 11, "c", [1, 2])],
+        2: [(3, 14, "d", [7, 8])],
+    }
+    for b, r in rows.items():
+        _write_store(spark.createDataFrame(r, schema), state, b)
+    assert sorted(p for p in os.listdir(state) if "=" in p) == [
+        "batch_id=0", "batch_id=1", "batch_id=2"
+    ]
 
-    # replayed batch rewrites exactly its own (pt, batch) partitions:
-    # no duplicates, batch 0 untouched
-    _write_store(rows1, state, 1)
-    assert spark.read.parquet(state).count() == 5
-    assert _read_store_pruned(spark, state, 99, [0, 1, 2, 3]).count() == 5
+    older = _read_older_batches(spark, state, 2)
+    assert {(r["id"], r["batch_id"]) for r in older.collect()} == {
+        ("a", 0), ("b", 0), ("c", 1)
+    }
+    plan = older._jdf.queryExecution().executedPlan().toString()
+    assert "batch_id" in plan.split("PartitionFilters")[1].split("]")[0]
+    assert _read_older_batches(spark, state, 0).count() == 0
 
-    # saturated pt space: the IN-list is skipped (prunes nothing), the
-    # batch_id filter still applies
-    sat = _read_store_pruned(spark, state, 1, [0, 1, 2, 3], total_pts=4)
-    assert sat.count() == 3  # batch 0 only
-    plan = sat._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters")[1].split("]")[0]
-    assert "batch_id" in pf and " IN " not in pf
+    # replayed batch 1 rewrites exactly its own directory: no duplicates
+    _write_store(spark.createDataFrame(rows[1], schema), state, 1)
+    assert spark.read.parquet(state).count() == 4
+    assert _read_older_batches(spark, state, 99).count() == 4
+
+    # compaction folds every batch into batch_id=2, one copy of each row
+    assert compact_signature_store(spark, state) == 2
+    assert [p for p in os.listdir(state) if "=" in p] == ["batch_id=2"]
+    assert spark.read.parquet(state).count() == 4
+
+
+def test_streaming_retired_partitioned_store_raises_before_any_job(
+    spark, tmp_path
+):
+    """A store in the retired (pt, batch_id) layout — pt=K directories,
+    or a layout marker recording the partition count — is refused when
+    the stream is defined, before any Spark job; compaction refuses a
+    pt=K/batch_id=N store the same way."""
+    import json
+    import os
+
+    from llm_information_extraction_spark.session import job_group
+    from llm_information_extraction_spark.streaming.incremental import (
+        compact_signature_store,
+        incremental_fuzzy_unique_documents,
+        incremental_unique_embeddings,
+    )
+
+    by_marker = tmp_path / "marker"
+    by_marker.mkdir()
+    (by_marker / "_layout.json").write_text(json.dumps({
+        "kind": "embedding", "dim": 8, "num_planes": 12, "num_tables": 4,
+        "seed": 42, "store_partitions": 4,
+    }))
+    by_dirs = tmp_path / "dirs"
+    os.makedirs(by_dirs / "pt=3" / "batch_id=0")
+    (tmp_path / "in").mkdir()
+
+    group = "test:retired-store"
+    with job_group(spark, group):
+        with pytest.raises(ValueError, match="retired"):
+            incremental_unique_embeddings(
+                spark, str(tmp_path / "in"), str(tmp_path / "out"),
+                str(tmp_path / "ckpt"), str(by_marker), dim=8,
+            )
+        with pytest.raises(ValueError, match="retired"):
+            incremental_fuzzy_unique_documents(
+                spark, str(tmp_path / "in"), str(tmp_path / "out"),
+                str(tmp_path / "ckpt"), str(by_dirs),
+            )
+        with pytest.raises(ValueError, match="retired"):
+            compact_signature_store(spark, str(by_dirs))
+    assert not spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+def test_streaming_failed_batch_releases_cached_frames(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch that fails after caching its frames unpersists them:
+    nothing stays in the session's cache manager for the next run."""
+    import numpy as np
+    from pyspark.errors.exceptions.base import StreamingQueryException
+
+    from llm_information_extraction_spark.sources.synthetic import (
+        DOCUMENTS_SCHEMA,
+    )
+    from llm_information_extraction_spark.streaming import incremental
+
+    def failing_write(rows, state_dir, batch_id):
+        raise RuntimeError("store write failed")
+
+    monkeypatch.setattr(incremental, "_write_store", failing_write)
+    rng = np.random.default_rng(4)
+    spark.createDataFrame(
+        [_span_doc("a", _salad(rng, 40)), _span_doc("b", _salad(rng, 40))],
+        DOCUMENTS_SCHEMA,
+    ).coalesce(1).write.parquet(str(tmp_path / "docs"))
+    spark.createDataFrame(
+        [(1, [0.1] * 8), (2, [0.2, -0.1] * 4)],
+        "vec_id bigint, embedding array<double>",
+    ).coalesce(1).write.parquet(str(tmp_path / "vecs"))
+    spark.catalog.clearCache()
+    for tag, start in (
+        ("docs", incremental.incremental_fuzzy_unique_documents),
+        ("vecs", lambda *a: incremental.incremental_unique_embeddings(*a, dim=8)),
+    ):
+        q = start(
+            spark, str(tmp_path / tag), str(tmp_path / f"{tag}_out"),
+            str(tmp_path / f"{tag}_ckpt"), str(tmp_path / f"{tag}_state"),
+        )
+        with pytest.raises(StreamingQueryException, match="store write failed"):
+            q.awaitTermination(180)
+            raise AssertionError("query should have failed")  # pragma: no cover
+        q.stop()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), tag
+
+
+def test_streaming_fuzzy_dedup_empty_text_batch_then_normal_batch(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch of empty-text docs (no shingles) runs through; the
+    next batch reads its stored rows (or finds no store when it wrote
+    none) and keeps the right ids."""
+    import os
+    import time
+
+    import numpy as np
+
+    from llm_information_extraction_spark.sources.synthetic import (
+        DOCUMENTS_SCHEMA,
+    )
+    from llm_information_extraction_spark.streaming import incremental
+
+    reads = {}
+    real_read = incremental._read_older_batches
+
+    def spy_read(spark_, state_dir, batch_id):
+        store = real_read(spark_, state_dir, batch_id)
+        reads[batch_id] = None if store is None else store.count()
+        return store
+
+    monkeypatch.setattr(incremental, "_read_older_batches", spy_read)
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    state = str(tmp_path / "state")
+    rng = np.random.default_rng(8)
+    batches = [
+        [_span_doc("e0", ""), _span_doc("e1", ""), _span_doc("e2", " ")],
+        [_span_doc("n0", _salad(rng, 40)), _span_doc("n1", _salad(rng, 40))],
+    ]
+    for rows in batches:
+        spark.createDataFrame(rows, DOCUMENTS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        q = incremental.incremental_fuzzy_unique_documents(
+            spark, in_dir, out_dir, str(tmp_path / "ckpt"), state
+        )
+        q.awaitTermination(180)
+        q.stop()
+        for _ in range(100):
+            if not q.isActive:
+                break
+            time.sleep(0.2)
+        assert q.exception() is None
+
+    out = {
+        b: {r["doc_id"] for r in spark.read.parquet(f"{out_dir}/batch_id={b}").collect()}
+        for b in (0, 1)
+    }
+    assert out[1] == {"n0", "n1"}
+    # the empty texts share one signature: exact duplicates, min id kept
+    assert out[0] == {"e0"}
+    assert reads[0] is None
+    if os.path.exists(f"{state}/batch_id=0"):
+        assert reads[1] == spark.read.parquet(f"{state}/batch_id=0").count() > 0
+    else:
+        assert reads[1] is None
 
 
 def test_streaming_store_layout_mismatch_fails_fast(spark, tmp_path):
@@ -643,7 +784,7 @@ def test_compact_checkpoint_aware_spares_uncommitted_batch(spark, tmp_path):
 
     assert compact_signature_store(spark, state, checkpoint_dir=ckpt) == 1
     batch_dirs = {
-        d.rsplit("=", 1)[1] for d in glob.glob(f"{state}/pt=*/batch_id=*")
+        d.rsplit("=", 1)[1] for d in glob.glob(f"{state}/batch_id=*")
     }
     assert batch_dirs == {"1", "2"}  # 0 merged into 1; 2 untouched
     rows = {(r["id"], r["batch_id"]) for r in spark.read.parquet(state).collect()}
@@ -665,7 +806,7 @@ def test_compact_checkpoint_aware_spares_uncommitted_batch(spark, tmp_path):
         == -1
     )
     assert len({
-        d.rsplit("=", 1)[1] for d in glob.glob(f"{state2}/pt=*/batch_id=*")
+        d.rsplit("=", 1)[1] for d in glob.glob(f"{state2}/batch_id=*")
     }) == 2
     # compact_batches=0 means DISABLED (CLI contract), never
     # "compact on every start"
@@ -676,7 +817,7 @@ def test_compact_checkpoint_aware_spares_uncommitted_batch(spark, tmp_path):
     _auto_compact(spark, state2, str(tmp_path / "nockpt"), 0)
     _auto_compact(spark, state2, str(tmp_path / "nockpt"), None)
     assert len({
-        d.rsplit("=", 1)[1] for d in glob.glob(f"{state2}/pt=*/batch_id=*")
+        d.rsplit("=", 1)[1] for d in glob.glob(f"{state2}/batch_id=*")
     }) == 2
 
 
@@ -730,7 +871,7 @@ def test_streaming_auto_compaction_bounds_store_directories(spark, tmp_path):
 
     def n_batch_dirs():
         return len(
-            {d.rsplit("=", 1)[1] for d in glob.glob(f"{state}/pt=*/batch_id=*")}
+            {d.rsplit("=", 1)[1] for d in glob.glob(f"{state}/batch_id=*")}
         )
 
     write([(0, base), (1, rng.normal(size=dim))])
