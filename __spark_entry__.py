@@ -649,15 +649,15 @@ def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossless blocked SimHash pairs, portable-hash variant: bits come
-    from md5 (which DuckDB also has), so the oracle recomputes the WHOLE
+    """Lossless blocked SimHash pairs. The signature bits come from md5
+    (which DuckDB also has), so the oracle recomputes the WHOLE
     pipeline — shingles → bit sums → signatures → brute-force Hamming —
     in SQL and must agree exactly. This also proves the multi-table
     blocking loses no pair."""
     d = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    pairs = simhash_near_dup_pairs(d, max_hamming=3, hash_fn="md5")
+    pairs = simhash_near_dup_pairs(d, max_hamming=3)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
@@ -1162,7 +1162,7 @@ def oracle_sql() -> dict[str, str]:
     words = f"list_filter(string_split({norm}, ' '), x -> x <> '')"
 
     # -- generated md5-SimHash replication (simhash_pairs oracle) ----------
-    # mirrors dedup.simhash_signatures(hash_fn='md5') bit for bit:
+    # mirrors dedup.simhash_signatures bit for bit:
     # bit b of a shingle = bit (3 - b%4) of hex digit b//4 of md5(shingle);
     # signature bit set iff 2*sum(bit) >= n_shingles; brute-force Hamming.
     digit_exprs = ",\n                   ".join(

@@ -1,9 +1,10 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Shingling, the xxhash64 SimHash bits and Jaccard via set-similarity
-joins are Catalyst expressions (whole-stage codegen). MinHash signatures
-and the md5 SimHash signature fold their per-shingle hashes in numpy
-over Arrow batches (``mapInPandas``), one kernel each. Only the final
+Shingling and Jaccard via set-similarity joins are Catalyst expressions
+(whole-stage codegen). MinHash signatures and the md5 SimHash signature
+fold their per-shingle hashes in numpy over Arrow batches
+(``mapInPandas``), one kernel each; the Python side hashes word grams
+only through :func:`_word_gram_md5s`. Only the final
 connected-components grouping runs the iterative join loop from
 :mod:`.canonicalize`.
 
@@ -22,6 +23,8 @@ Scale notes (100 TB):
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -88,6 +91,23 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
         )
 
     return F.transform(F.array(words), build)[0]
+
+
+def _word_gram_md5s(text: str, n: int) -> list[int]:
+    """The distinct word ``n``-grams of one :func:`normalize_text`-ed
+    text, each as its md5 prefix: the first 8 digest bytes read as a
+    big-endian unsigned 64-bit int, in no particular order.
+
+    The one Python replay of :func:`word_shingles`' rules: split on
+    single spaces, a slice past the end gives a shorter gram, and a
+    text of fewer than ``n`` words gives one partial gram (an empty
+    text gives the empty gram). Every Python word-gram kernel builds
+    on this helper instead of splitting text itself.
+    """
+    md5, ib = hashlib.md5, int.from_bytes
+    ws = text.split(" ")
+    grams = {" ".join(ws[i : i + n]) for i in range(max(len(ws) - n + 1, 1))}
+    return [ib(md5(g.encode()).digest()[:8], "big") for g in grams]
 
 
 # ---------------------------------------------------------------------------
@@ -624,56 +644,30 @@ def minhash_dedup_groups(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-def simhash64(col: Column | str, n: int = 2) -> Column:
-    """64-bit SimHash of word n-gram shingles — pure expressions.
-
-    bit b of the signature = sign of Σ_shingles (±1 by bit b of
-    xxhash64(shingle)). One ``aggregate`` pass with a 64-slot array
-    accumulator of bit-sums, then folded back into a single long.
-    """
-    sh = word_shingles(col, n)
-    bit_idx = F.sequence(F.lit(0), F.lit(63))
-    sums = F.aggregate(
-        sh,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(
-                bit_idx,
-                # getbit accepts a column bit position (shiftrightunsigned
-                # in the Python API only takes int literals)
-                lambda b: F.call_function("getbit", F.xxhash64(s), b).cast("long"),
-            ),
-            lambda a, bit: a + bit * 2 - 1,
-        ),
-    )
-    # fold sign bits back into one 64-bit long (bit 63 = long sign bit)
-    out = F.lit(0).cast("long")
-    for b in range(64):
-        mask = F.lit((1 << b) if b < 63 else -(2**63)).cast("long")
-        out = out.bitwiseOR(
-            F.when(F.element_at(sums, b + 1) >= 0, mask).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
-
-
-def _simhash_sigs_arrow_md5(
-    df: DataFrame, id_col: str, text_col: str, n: int
+def simhash_signatures(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 2,
 ) -> DataFrame:
-    """(id, sig bigint) — the md5 SimHash signature with the 64
-    bit-count sums vectorized in numpy over Arrow batches (guide §4.2).
+    """(id, sig bigint) — 64-bit SimHash over each document's distinct
+    word ``n``-grams (:func:`word_shingles` rules), md5 bits.
 
-    The JVM computes ONE packed 64-bit value per shingle
-    (``conv(hex[1:8]) << 32 | conv(hex[9:16])`` — hex digit i of a half
-    sits at bits [4·(7−i), 4·(7−i)+3]); the Python side extracts bit
-    ``3 − b%4`` of hex digit ``b//4`` with shifts and sums per document
-    via ``reduceat``, then packs ``2·sum ≥ count`` into the signature —
-    bit-identical to the 65-aggregate flavor (kept reachable as
-    ``hash_fn='md5_agg'`` and pinned by
-    ``test_simhash_md5_arrow_matches_agg``) and to the DuckDB oracle.
+    Bit b of a gram's hash is bit ``3 - b%4`` of hex digit ``b//4`` of
+    ``md5(gram)``, which is bit ``63 - b`` of the md5 prefix from
+    :func:`_word_gram_md5s`. Signature bit b is set iff at least half
+    the grams have it set (``2·sum ≥ count``; ties set the bit). md5
+    exists in DuckDB/Postgres/etc., so the signature is reproducible
+    outside Spark and the ``simhash_pairs`` oracle recomputes it in SQL.
+
+    The JVM ships only the normalized text; grams are hashed in Python
+    and the 64 bit counts summed per document in numpy over Arrow
+    batches (``mapInPandas``). A null, empty or all-blank
+    text has the one empty gram, so all such documents share one
+    signature.
     """
+    from itertools import chain
+
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
@@ -684,147 +678,27 @@ def _simhash_sigs_arrow_md5(
             StructField("sig", LongType(), True),
         ]
     )
-    # round 6: shingling + md5 + 64-bit packing moved INTO the kernel —
-    # the JVM ships only the normalized text (so the Python split sees
-    # exactly word_shingles' input, the _gram_keys_arrow pattern) and
-    # the md5 → conv(substring)×2 → shiftleft expression chain (the
-    # cold-JIT-heaviest part of the query) disappears.
-    # int.from_bytes(digest[:8], 'big') == conv(hex[1:8]) << 32 |
-    # conv(hex[9:16]) — the same first 8 digest bytes big-endian.
-    # Distinctness is set semantics; bit sums don't depend on order.
     src = df.select(
         F.col(id_col).alias("id"), normalize_text(text_col).alias("__t")
     )
-    # bit b of the signature reads bit (3 - b%4) of hex digit b//4;
-    # digit i of a 32-bit half occupies bits [4*(7 - i%8), ...+3], and
-    # the first 8 digits live in the high half of the packed long
-    shifts = np.array(
-        [
-            (32 if b < 32 else 0) + 4 * (7 - (b // 4) % 8) + (3 - b % 4)
-            for b in range(64)
-        ],
-        dtype=np.uint64,
-    )
 
     def run(batches):
-        import hashlib
-
-        md5 = hashlib.md5
-        ib = int.from_bytes
+        one = np.uint64(1)
         for pdf in batches:
-            nrows = len(pdf)
-            if not nrows:
-                continue
-            flat_list: list = []
-            lens = np.empty(nrows, dtype=np.int64)
-            for j, txt in enumerate(pdf["__t"]):
-                ws = (txt or "").split(" ")
-                seen = set()
-                for i in range(max(len(ws) - n + 1, 1)):
-                    g = " ".join(ws[i : i + n])
-                    if g not in seen:
-                        seen.add(g)
-                        flat_list.append(
-                            ib(md5(g.encode()).digest()[:8], "big")
-                        )
-                lens[j] = len(seen)
-            sig = np.zeros(nrows, dtype=np.uint64)
-            nonempty = lens > 0
-            if nonempty.any():
-                flat = np.array(flat_list, dtype=np.uint64)
-                starts = np.zeros(int(nonempty.sum()), dtype=np.int64)
-                np.cumsum(lens[nonempty][:-1], out=starts[1:])
-                rows = np.nonzero(nonempty)[0]
-                cnt = lens[nonempty]
-                one = np.uint64(1)
-                for b in range(64):
-                    bits = (flat >> shifts[b]) & one
-                    sums = np.add.reduceat(bits.view(np.int64), starts)
-                    sig[rows] |= (2 * sums >= cnt).astype(
-                        np.uint64
-                    ) << np.uint64(b)
+            per_doc = [_word_gram_md5s(t, n) for t in pdf["__t"]]
+            # every text has at least one gram, so no segment is empty
+            cnt = np.fromiter(map(len, per_doc), np.int64, len(per_doc))
+            flat = np.fromiter(chain.from_iterable(per_doc), np.uint64)
+            starts = np.zeros(len(cnt), dtype=np.int64)
+            np.cumsum(cnt[:-1], out=starts[1:])
+            sig = np.zeros(len(cnt), dtype=np.uint64)
+            for b in range(64):
+                bits = (flat >> np.uint64(63 - b)) & one
+                sums = np.add.reduceat(bits.view(np.int64), starts)
+                sig |= (2 * sums >= cnt).astype(np.uint64) << np.uint64(b)
             yield pd.DataFrame({"id": pdf["id"], "sig": sig.view(np.int64)})
 
     return src.mapInPandas(run, schema=out_schema)
-
-
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 2,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """(id, sig bigint) via explode → hash → 64 sum-aggregates → pack.
-
-    Same signature values as :func:`simhash64` (same shingles, same
-    xxhash64 bits) but codegen-friendly: bit b is set iff
-    Σ bit_b(h) * 2 > n_shingles (i.e. the ±1 sum is ≥ 0; ties → set,
-    matching ``sum*2 - count >= 0``).
-
-    ``hash_fn='md5'`` derives the 64 bits from the first 16 hex digits
-    of ``md5(shingle)`` instead (bit b = bit ``3 - b%4`` of hex digit
-    ``b//4``): md5 exists in DuckDB/Postgres/etc., so this variant is
-    reproducible OUTSIDE Spark and drives the driver's bit-exact oracle.
-    Since round 6 it runs through :func:`_simhash_sigs_arrow_md5`
-    (bit-identical, numpy bit-count sums — measured 2.3 s → 0.9 s at
-    sf1.0); ``hash_fn='md5_agg'`` keeps the 65-aggregate flavor
-    reachable so the equality test pins the two. xxhash64 stays the
-    default (one 64-bit hash, all codegen).
-    """
-    if hash_fn == "md5":
-        return _simhash_sigs_arrow_md5(df, id_col, text_col, n)
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, n)).alias("shingle"),
-    )
-    if hash_fn == "md5_agg":
-        # parse the 16 hex digits as TWO 32-bit conv() calls instead of
-        # sixteen single-digit ones (round 6: 14 fewer string parses per
-        # shingle row — measured ~2.3x on the signature stage); hex
-        # digit i of a half sits at bits [4*(7-i), 4*(7-i)+3] of its
-        # 32-bit value, so every extracted bit is IDENTICAL to the
-        # per-digit form (bit b = bit 3-b%4 of digit b//4)
-        hexd = F.md5("shingle")
-        src = exploded.select(
-            "id",
-            F.conv(F.substring(hexd, 1, 8), 16, 10).cast("long").alias("h0"),
-            F.conv(F.substring(hexd, 9, 8), 16, 10).cast("long").alias("h1"),
-        )
-
-        def bit(b: int) -> Column:
-            half, i = divmod(b // 4, 8)
-            shift = 4 * (7 - i) + (3 - b % 4)
-            return (
-                F.shiftright(F.col(f"h{half}"), shift)
-                .bitwiseAND(F.lit(1))
-                .cast("long")
-            )
-
-    elif hash_fn == "xxhash64":
-        src = exploded.select("id", F.xxhash64("shingle").alias("h"))
-
-        def bit(b: int) -> Column:
-            return F.shiftrightunsigned(F.col("h"), b).bitwiseAND(
-                F.lit(1).cast("long")
-            )
-
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-    aggs = [F.count(F.lit(1)).alias("cnt")] + [
-        F.sum(bit(b)).alias(f"b{b}") for b in range(64)
-    ]
-    sums = src.groupBy("id").agg(*aggs)
-    sig = F.lit(0).cast("long")
-    for b in range(64):
-        mask = F.lit((1 << b) if b < 63 else -(2**63)).cast("long")
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"b{b}") * 2 >= F.col("cnt"), mask).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sums.select("id", sig.alias("sig"))
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -877,25 +751,12 @@ def _simhash_block_plan(
     )
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n: int = 2,
-    hash_fn: str = "xxhash64",
-    min_key_bits: int = 16,
+def _simhash_table_keys(
+    sig: DataFrame, max_hamming: int, min_key_bits: int = 16
 ) -> DataFrame:
-    """Pairs with SimHash Hamming distance ≤ ``max_hamming`` —
-    (id_a, id_b, hamming), id_a < id_b. Lossless (every qualifying pair
-    is emitted): candidates come from the multi-table wide-key blocking
-    of :func:`_simhash_block_plan`, then the exact Hamming filter.
-
-    Each table is one shuffle keyed by (table, key) with ≥
-    ``min_key_bits``-bit keys, so per-bucket collision lists stay
-    O(n/2^bits) and the self-join cost is O(tables · n) rows in, not
-    O(n²/buckets) out — the property that makes this safe at 100 TB.
-    """
+    """(id, sig, band, key) — one row per (signature, blocking table) of
+    the :func:`_simhash_block_plan` for ``max_hamming``: ``band`` is the
+    table index and ``key`` packs that table's signature blocks."""
     widths, offsets, tables = _simhash_block_plan(max_hamming, min_key_bits)
 
     def block_val(k: int) -> Column:
@@ -910,9 +771,7 @@ def simhash_near_dup_pairs(
             key = F.shiftleft(key, widths[k]).bitwiseOR(block_val(k))
         return key
 
-    # cached: the banded self-join reads it for both sides
-    sig = simhash_signatures(df, id_col, text_col, n, hash_fn).cache()
-    banded = sig.select(
+    return sig.select(
         "id",
         "sig",
         F.explode(
@@ -926,6 +785,33 @@ def simhash_near_dup_pairs(
             )
         ).alias("bk"),
     ).select("id", "sig", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
+def simhash_near_dup_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 3,
+    n: int = 2,
+    min_key_bits: int = 16,
+) -> DataFrame:
+    """Pairs with SimHash Hamming distance ≤ ``max_hamming`` —
+    (id_a, id_b, hamming), id_a < id_b, over :func:`simhash_signatures`.
+    Lossless (every qualifying pair is emitted): candidates come from
+    the multi-table wide-key blocking of :func:`_simhash_block_plan`
+    (:func:`_simhash_table_keys`), then the exact Hamming filter.
+
+    Each table is one shuffle keyed by (table, key) with ≥
+    ``min_key_bits``-bit keys, so per-bucket collision lists stay
+    O(n/2^bits) and the self-join cost is O(tables · n) rows in, not
+    O(n²/buckets) out — the property that makes this safe at 100 TB.
+
+    Null, empty and all-blank texts all hash the one empty gram, so
+    they share one signature and pair with each other at Hamming 0.
+    """
+    # cached: the banded self-join reads it for both sides
+    sig = simhash_signatures(df, id_col, text_col, n).cache()
+    banded = _simhash_table_keys(sig, max_hamming, min_key_bits)
     a = banded.select(
         F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "key"
     )
@@ -942,54 +828,4 @@ def simhash_near_dup_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
         .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# ---------------------------------------------------------------------------
-# embedding cosine near-dup
-# ---------------------------------------------------------------------------
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float/double> columns (zip_with dot
-    + aggregate norms, all JVM-side)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    nb = F.sqrt(
-        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Pairs with cosine ≥ threshold — brute-force O(n²) variant.
-
-    Correctness baseline for small n; the scale path is
-    :func:`..operators.similarity.rp_lsh_near_dup_pairs` (random
-    hyperplane bucketing before the exact check).
-    """
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).cast("array<double>").alias("v_a"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).cast("array<double>").alias("v_b"),
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", cosine_sim(F.col("v_a"), F.col("v_b")).alias("cosine")
-        )
-        .filter(F.col("cosine") >= threshold)
     )

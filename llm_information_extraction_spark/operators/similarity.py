@@ -20,12 +20,27 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import cosine_sim
-
 
 def _as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")
+
+
+def cosine_sim(a: Column, b: Column) -> Column:
+    """Cosine similarity of two array<float/double> columns (zip_with dot
+    + aggregate norms, all JVM-side); 0.0 when either norm is 0."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    na = F.sqrt(
+        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
+    )
+    nb = F.sqrt(
+        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v)
+    )
+    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
 def _blas_topk_single(
@@ -36,7 +51,7 @@ def _blas_topk_single(
     (guide §4.2), tie-safe truncation to each partition's top-``k``
     under (cosine desc, id asc). Callers apply the exact global
     ``orderBy(...).limit(k)``. NULL or zero-norm vectors score 0.0,
-    matching :func:`..operators.dedup.cosine_sim`.
+    matching :func:`cosine_sim`.
     """
     import numpy as np
     import pandas as pd
@@ -558,10 +573,11 @@ def embedding_near_dup_pairs_blocked(
     groups and every row is replicated to each of its block's
     B(B+1)/2 − (B−1) block-*pair* groups via one explode; an
     ``applyInPandas`` over (pa, pb) then runs one numpy matmul per
-    group. Same output contract as dedup.embedding_near_dup_pairs;
-    each vector crosses the shuffle B times (vs n times for a cross
-    join) and the O(n²·d) flops run in BLAS instead of interpreted
-    expression lambdas.
+    group. Output: (id_a, id_b, cosine), id_a < id_b, every pair with
+    cosine ≥ ``threshold`` (zero-norm vectors score 0). Each vector
+    crosses the shuffle B times (vs n times for a cross join) and the
+    O(n²·d) flops run in BLAS instead of interpreted expression
+    lambdas.
 
     Round-6 shape: plain rows through one exchange — no
     ``collect_list`` block arrays (object aggregates, computed once
@@ -661,8 +677,9 @@ def rp_lsh_near_dup_pairs(
 ) -> DataFrame:
     """Approximate cosine near-dup pairs: bucket join → exact verify.
 
-    Same output contract as dedup.embedding_near_dup_pairs but the join
-    is on the LSH bucket instead of a cross join — the 100-TB path.
+    Same output contract as :func:`embedding_near_dup_pairs_blocked`
+    (the exact path) but the join is on the LSH bucket instead of every
+    block pair — the 100-TB path.
     Recall < 1 by construction (raise recall with multiple bucket tables:
     re-run with different seeds and union).
     """

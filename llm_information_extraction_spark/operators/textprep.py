@@ -20,6 +20,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.normalize import normalize_text
+from .dedup import _word_gram_md5s
+
+
 def _raw_words(text_col: str) -> Column:
     """Whitespace tokens of the raw (case-preserving) text, empties
     dropped. Shared by chunking and packing so the two operators (and
@@ -176,30 +180,27 @@ def pack_sequences(
     )
 
 
-def _portable_gram_key(gram: Column) -> Column:
-    """56-bit md5-derived key for an n-gram (portable across engines:
-    DuckDB computes the identical value, which is what makes
-    decontamination oracle-checkable). 56 bits (14 hex chars) keeps the
-    value inside a signed long under ANSI mode; collision probability
-    for 10⁹ distinct grams is ~10⁻²."""
-    return F.conv(F.substring(F.md5(gram), 1, 14), 16, 10).cast("long")
-
-
 def _gram_keys_arrow(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """(id, k) — one row per DISTINCT word ``n``-gram of the normalized
-    text, keyed like :func:`_portable_gram_key`, computed in Python over
-    Arrow batches (guide §4.2: the md5-per-gram + hex-parse work runs
-    ~2× faster through hashlib on pre-normalized strings than through
-    the explode → md5 → conv expression chain — measured 1.6 s → 0.8 s
-    over sf1.0's 4.4M train grams). Normalization (lower, collapse
-    whitespace, trim) stays JVM-side so the Python split sees exactly
-    ``word_shingles``' input; gram construction replays its semantics
-    (slice past the end → shorter gram, < n words → one partial gram).
-    Key equality with the expression path is pinned by
+    text (:func:`.dedup.word_shingles` rules), keyed by the gram's
+    first 14 md5 hex digits as a 56-bit long (``h >> 8`` of the
+    :func:`.dedup._word_gram_md5s` prefix). DuckDB computes the same
+    key, which makes decontamination oracle-checkable; 56 bits keep it
+    inside a signed long, and the collision probability for 10⁹
+    distinct grams is ~10⁻².
+
+    Normalization runs JVM-side (:func:`normalize_text`); grams are
+    hashed in Python over Arrow batches (hashlib on
+    pre-normalized strings ran ~2× faster than the explode → md5 → conv
+    expression chain, 1.6 s → 0.8 s over sf1.0's 4.4M train grams).
+    Key equality with that expression chain is pinned by
     ``test_contaminated_gram_keys_arrow_matches_expr``.
     """
+    from itertools import chain
+
+    import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -209,32 +210,19 @@ def _gram_keys_arrow(
             StructField("k", LongType(), True),
         ]
     )
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " "
-        )
+    src = df.select(
+        F.col(id_col).alias("id"), normalize_text(text_col).alias("__t")
     )
-    src = df.select(F.col(id_col).alias("id"), norm.alias("__t"))
 
     def run(batches):
-        import hashlib
-
-        md5 = hashlib.md5
         for pdf in batches:
-            ids_out: list = []
-            ks: list = []
-            for did, txt in zip(pdf["id"], pdf["__t"]):
-                ws = (txt or "").split(" ")
-                seen = set()
-                for i in range(max(len(ws) - n + 1, 1)):
-                    g = " ".join(ws[i : i + n])
-                    if g not in seen:
-                        seen.add(g)
-                        ids_out.append(did)
-                        ks.append(
-                            int(md5(g.encode()).hexdigest()[:14], 16)
-                        )
-            yield pd.DataFrame({"id": ids_out, "k": ks})
+            per_doc = [_word_gram_md5s(t, n) for t in pdf["__t"]]
+            cnt = np.fromiter(map(len, per_doc), np.int64, len(per_doc))
+            # the first 14 hex digits of md5(gram): the top 56 prefix bits
+            k = np.fromiter(chain.from_iterable(per_doc), np.uint64) >> np.uint64(8)
+            yield pd.DataFrame(
+                {"id": np.repeat(pdf["id"].to_numpy(), cnt), "k": k.view(np.int64)}
+            )
 
     return src.mapInPandas(run, schema=schema)
 
@@ -258,7 +246,9 @@ def contaminated_ids(
     side when it is small (the common case: eval benchmarks are tiny
     next to a training corpus). A document shorter than ``n`` words
     contributes one partial gram (its full normalized text), so an exact
-    short-text match still flags — ``word_shingles`` semantics.
+    short-text match still flags — ``word_shingles`` semantics. Null,
+    empty and all-blank texts all give the one empty gram, so every
+    such training document is flagged when the eval set holds one too.
 
     ``max_gram_docs``: ignore eval grams matched by MORE than this many
     distinct training documents. On template-heavy corpora the raw rule

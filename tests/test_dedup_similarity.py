@@ -15,14 +15,14 @@ from llm_information_extraction_spark.functions.textmetrics import (
     token_count,
 )
 from llm_information_extraction_spark.operators.dedup import (
-    embedding_near_dup_pairs,
     exact_dedup,
     exact_duplicate_groups,
     hamming64,
     minhash_dedup_groups,
     ngram_jaccard_pairs,
-    simhash64,
     simhash_near_dup_pairs,
+    simhash_signatures,
+    word_shingles,
 )
 from llm_information_extraction_spark.operators.multimodal import (
     extract_media_features,
@@ -33,6 +33,7 @@ from llm_information_extraction_spark.operators.multimodal import (
 from llm_information_extraction_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_join,
+    embedding_near_dup_pairs_blocked,
     rp_lsh_near_dup_pairs,
 )
 
@@ -359,24 +360,98 @@ def test_minhash_bad_banding_geometry_raises_before_any_job(spark, bands):
     assert not spark.sparkContext.statusTracker().getJobIdsForGroup(group)
 
 
-def test_simhash_md5_arrow_matches_agg(spark):
-    """The numpy-vectorized md5 signature path (hash_fn='md5') must be
-    BIT-IDENTICAL to the 65-aggregate expression flavor (kept reachable
-    as hash_fn='md5_agg') — the oracle's bit-exactness rests on it."""
-    from llm_information_extraction_spark.operators.dedup import (
-        simhash_signatures,
+def simhash_md5_agg_oracle(df, id_col="doc_id", text_col="text", n=2):
+    """(id, sig) — the SimHash signature as pure Spark expressions:
+    explode ``word_shingles``, parse md5's first 16 hex digits as two
+    32-bit ``conv`` halves, one sum per signature bit, set bit b iff
+    ``2·sum ≥ count``. Bit b of a shingle is bit ``3 - b%4`` of hex
+    digit ``b//4`` (digit i of a half sits at bits [4·(7−i), 4·(7−i)+3]),
+    the rule the DuckDB ``simhash_pairs`` oracle spells out in SQL."""
+    hexd = F.md5("shingle")
+    src = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(word_shingles(text_col, n)).alias("shingle"),
+    ).select(
+        "id",
+        F.conv(F.substring(hexd, 1, 8), 16, 10).cast("long").alias("h0"),
+        F.conv(F.substring(hexd, 9, 8), 16, 10).cast("long").alias("h1"),
     )
 
+    def bit(b):
+        half, i = divmod(b // 4, 8)
+        return (
+            F.shiftright(F.col(f"h{half}"), 4 * (7 - i) + (3 - b % 4))
+            .bitwiseAND(F.lit(1))
+            .cast("long")
+        )
+
+    sums = src.groupBy("id").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        *[F.sum(bit(b)).alias(f"b{b}") for b in range(64)],
+    )
+    sig = F.lit(0).cast("long")
+    for b in range(64):
+        mask = F.lit((1 << b) if b < 63 else -(2**63)).cast("long")
+        sig = sig.bitwiseOR(
+            F.when(F.col(f"b{b}") * 2 >= F.col("cnt"), mask).otherwise(
+                F.lit(0).cast("long")
+            )
+        )
+    return sums.select("id", sig.alias("sig"))
+
+
+def _sigs(df):
+    return {r["id"]: r["sig"] for r in df.collect()}
+
+
+def _pairs(pairs_df):
+    return {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs_df.collect()}
+
+
+def test_simhash_kernel_matches_md5_agg_oracle(spark):
+    """The numpy md5 signature kernel must be BIT-IDENTICAL to the
+    expression oracle — the DuckDB oracle's bit-exactness rests on it."""
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    arrow = {
-        r["id"]: r["sig"]
-        for r in simhash_signatures(d, hash_fn="md5").collect()
+    kernel = _sigs(simhash_signatures(d))
+    assert kernel == _sigs(simhash_md5_agg_oracle(d))
+    assert len(kernel) == d.count()
+
+
+def test_md5_kernels_pin_degenerate_texts(spark):
+    """Null, empty, blank, one-word (< n words) and two-word texts, and
+    an empty frame: both md5 word-gram kernels equal their expression
+    oracles. Null, "" and blank texts all hash the one empty gram, so
+    they share a signature, pair at Hamming 0, and an all-null train
+    set is fully contaminated by an all-null eval set."""
+    from test_textprep import gram_keys, gram_keys_oracle
+
+    from llm_information_extraction_spark.operators.textprep import (
+        contaminated_ids,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "Solo"), (5, "two  Words")],
+        "doc_id bigint, text string",
+    )
+    for frame in (docs, docs.limit(0)):
+        assert _sigs(simhash_signatures(frame)) == _sigs(
+            simhash_md5_agg_oracle(frame)
+        )
+        for n in (2, 13):
+            assert gram_keys(frame, n) == gram_keys_oracle(frame, n)
+    sigs = _sigs(simhash_signatures(docs))
+    assert sigs[1] == sigs[2] == sigs[3]
+    assert len({sigs[1], sigs[4], sigs[5]}) == 3
+    pairs = _pairs(simhash_near_dup_pairs(docs, max_hamming=3))
+    assert {p: h for p, h in pairs.items() if h == 0} == {
+        (1, 2): 0, (1, 3): 0, (2, 3): 0
     }
-    agg = {
-        r["id"]: r["sig"]
-        for r in simhash_signatures(d, hash_fn="md5_agg").collect()
+    nulls = spark.createDataFrame(
+        [(i, None) for i in range(3)], "doc_id bigint, text string"
+    )
+    assert {r["doc_id"] for r in contaminated_ids(nulls, nulls).collect()} == {
+        0, 1, 2
     }
-    assert arrow == agg and len(arrow) == d.count()
 
 
 def test_winnow_fingerprints_guarantee(spark):
@@ -431,25 +506,17 @@ def test_stop_shingle_filter_breaks_boilerplate_chaining(spark):
 
 
 def test_simhash_near_dups(dup_corpus):
-    sigs = {
-        r["doc_id"]: r["sig"]
-        for r in dup_corpus.select(
-            "doc_id", simhash64("text").alias("sig")
-        ).collect()
-    }
+    sigs = _sigs(simhash_signatures(dup_corpus))
     assert sigs[1] == sigs[2] == sigs[5]
     assert sigs[1] != sigs[4]
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dup_pairs(
-            # hamming budgets > 6 need an explicit narrow-key opt-in —
-            # fine on a 5-doc corpus, refused by default (scale guard)
-            dup_corpus, max_hamming=12, min_key_bits=4
-        ).collect()
-    }
-    assert pairs[(1, 2)] == 0
-    assert (1, 3) in pairs  # one-word edit stays within the budget
-    assert all(4 not in p for p in pairs)
+    wide = _pairs(
+        # hamming budgets > 6 need an explicit narrow-key opt-in — fine
+        # on a 5-doc corpus, refused by default (scale guard)
+        simhash_near_dup_pairs(dup_corpus, max_hamming=12, min_key_bits=4)
+    )
+    assert wide[(1, 2)] == 0
+    assert (1, 3) in wide  # one-word edit stays within the budget
+    assert all(4 not in p for p in wide)
 
 
 def _random_docs(spark, n, words_per_doc=12, vocab=1000):
@@ -518,31 +585,17 @@ def test_simhash_refuses_degenerate_band_widths():
 def test_simhash_candidate_pairs_stay_linear(spark):
     """On 10⁵ random docs the per-table buckets must spread: total
     candidate pairs Σ c·(c−1)/2 stays O(n), nowhere near the O(n²/2^bits)
-    a narrow-key scheme produces."""
-    from pyspark.sql import functions as F
-
+    a narrow-key scheme produces. Buckets are the library's own
+    blocking keys, the rows ``simhash_near_dup_pairs`` self-joins."""
     from llm_information_extraction_spark.operators.dedup import (
-        _simhash_block_plan,
-        simhash_signatures,
+        _simhash_table_keys,
     )
 
     n = 100_000
-    docs = _random_docs(spark, n)
-    widths, offsets, tables = _simhash_block_plan(3)
-    sig = simhash_signatures(docs, "doc_id", "text")
-    key_cols = []
-    for t, blocks in enumerate(tables):
-        key = F.lit(0).cast("long")
-        for k in blocks:
-            key = F.shiftleft(key, widths[k]).bitwiseOR(
-                F.shiftrightunsigned(F.col("sig"), offsets[k]).bitwiseAND(
-                    F.lit((1 << widths[k]) - 1).cast("long")
-                )
-            )
-        key_cols.append(F.struct(F.lit(t).alias("band"), key.alias("key")))
+    sig = simhash_signatures(_random_docs(spark, n), "doc_id", "text")
     buckets = (
-        sig.select(F.explode(F.array(*key_cols)).alias("bk"))
-        .groupBy("bk.band", "bk.key")
+        _simhash_table_keys(sig, max_hamming=3)
+        .groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     cand = buckets.agg(
@@ -552,12 +605,7 @@ def test_simhash_candidate_pairs_stay_linear(spark):
 
 
 def test_simhash_md5_variant_finds_exact_dups(dup_corpus):
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dup_pairs(
-            dup_corpus, max_hamming=3, hash_fn="md5"
-        ).collect()
-    }
+    pairs = _pairs(simhash_near_dup_pairs(dup_corpus, max_hamming=3))
     assert pairs[(1, 2)] == 0 and pairs[(2, 5)] == 0 and pairs[(1, 5)] == 0
     assert all(4 not in p for p in pairs)
 
@@ -573,7 +621,8 @@ def test_embedding_near_dup_and_lsh(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     exact = {
-        (r["id_a"], r["id_b"]) for r in embedding_near_dup_pairs(df, threshold=0.99).collect()
+        (r["id_a"], r["id_b"])
+        for r in embedding_near_dup_pairs_blocked(df, threshold=0.99).collect()
     }
     assert (1, 2) in exact and (1, 3) in exact and (2, 3) in exact
     assert all(4 not in p for p in exact)
