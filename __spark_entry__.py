@@ -117,6 +117,7 @@ from llm_information_extraction_spark.operators.linking import (
 )
 from llm_information_extraction_spark.operators.payload import build_payload
 from llm_information_extraction_spark.operators.similarity import cosine_topk
+from llm_information_extraction_spark.session import local_frame
 from llm_information_extraction_spark.sources.interleave import (
     interleave_flat_documents,
 )
@@ -236,7 +237,7 @@ def clean_split_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lang_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    cmap = spark.createDataFrame(_LANG_MAP, "surface string, canonical string")
+    cmap = local_frame(spark, _LANG_MAP, "surface string, canonical string")
     return canonicalize_join(
         d.select("doc_id", F.col("lang")), "lang", cmap, out_col="lang_canonical"
     ).select("doc_id", "lang_canonical")

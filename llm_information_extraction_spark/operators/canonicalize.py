@@ -23,8 +23,13 @@ smallest member, which is deterministic.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import local_frame
+
+_CC_SCHEMA = "node string, component string"
 
 
 def _ensure_checkpoint_dir(sc, checkpoint_dir: str) -> None:
@@ -86,12 +91,13 @@ def _edge_stats(e: DataFrame) -> tuple:
     return (row["n"], row["chk"])
 
 
-def _local_components(spark, edge_rows) -> DataFrame:
-    """Driver-side union-find over a BOUNDED edge list (the small-graph
-    fast path of :func:`connected_components`). Min-root union keeps
-    every set's root at its lexicographically smallest node id, so the
-    output is identical to the distributed large-star/small-star result:
-    (node, component = min id in the component)."""
+def _local_components(spark, edges: pa.Table) -> DataFrame:
+    """Driver-side union-find over a BOUNDED ``(src, dst)`` Arrow table
+    (the small-graph fast path of :func:`connected_components`). Min-root
+    union keeps every set's root at its lexicographically smallest node
+    id, so the output is identical to the distributed
+    large-star/small-star result: (node, component = min id in the
+    component)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -102,16 +108,21 @@ def _local_components(spark, edge_rows) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in edge_rows:
-        a, b = r["src"], r["dst"]
+    for a, b in zip(
+        edges.column("src").to_pylist(), edges.column("dst").to_pylist()
+    ):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "node string, component string")
+    nodes = list(parent)
+    comps = pa.table({
+        "node": pa.array(nodes, pa.string()),
+        "component": pa.array([find(n) for n in nodes], pa.string()),
+    })
+    return local_frame(spark, comps, _CC_SCHEMA)
 
 
 def connected_components(
@@ -162,21 +173,16 @@ def connected_components(
         # ONE bounded read decides empty/local/distributed (round 6:
         # the separate isEmpty() job was redundant — an empty head IS
         # the empty check on this path)
-        head = e.limit(local_threshold + 1).collect()
-        if len(head) <= local_threshold:
+        head = e.limit(local_threshold + 1).toArrow()
+        if head.num_rows <= local_threshold:
             # the checkpointed edge blocks have no reader after this
             # point — release them now (streaming dedup calls CC every
             # micro-batch; waiting for driver GC would accumulate one
             # materialized edge set per batch in the block manager)
             e.unpersist()
-            if not head:
-                return edges.sparkSession.createDataFrame(
-                    [], "node string, component string"
-                )
             return _local_components(edges.sparkSession, head)
     elif e.isEmpty():
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "node string, component string")
+        return local_frame(edges.sparkSession, [], _CC_SCHEMA)
 
     prev_stats = _edge_stats(e)
     for _ in range(max_iterations):

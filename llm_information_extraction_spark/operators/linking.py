@@ -33,15 +33,20 @@ from pyspark.sql.types import DoubleType
 
 from .. import vocab
 from ..functions.normalize import normalize_text
+from ..session import local_frame
 
 SIM_THRESH = 0.95  # evaluation_gpt4_vs_gpt5.py:28
 
 
 def vocabulary_df(spark: SparkSession) -> DataFrame:
-    """The gazetteer dimension (field, surface, canonical) — FIXTURES.md T3."""
-    return spark.createDataFrame(
-        vocab.gazetteer_rows(), schema="field string, surface string, canonical string"
-    ).dropDuplicates(["field", "surface"])
+    """The gazetteer dimension (field, surface, canonical) — FIXTURES.md T3.
+
+    A ``LocalTableScan`` with one row per ``(field, surface)`` key
+    (``vocab.gazetteer_rows`` checks the keys), so references to it plan
+    no shuffle."""
+    return local_frame(
+        spark, vocab.gazetteer_rows(), "field string, surface string, canonical string"
+    )
 
 
 @pandas_udf(DoubleType())

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def _as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -401,7 +403,8 @@ def ivf_topk_join(
     Returns (query_id, id, cosine, rank ≤ k).
     """
     spark = index.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>",
     )

@@ -1,9 +1,18 @@
-"""SparkSession factory tuned for the KG-construction pipeline.
+"""SparkSession factory tuned for the KG-construction pipeline, plus the
+two helpers every stage uses on the driver.
 
 Defaults are sized for local[$CPUS] testing but every knob is the one you
 would set on a real multi-executor cluster: AQE (runtime re-planning +
 skew-join splitting), Arrow for every pandas UDF boundary, and a shuffle
 partition count matched to parallelism instead of the 200 default.
+
+- :func:`local_frame` is the one way a driver-built frame (gazetteer,
+  union-find components, IVF centroids, catalog rows) enters Spark: as an
+  Arrow table that Spark plans as a JVM ``LocalTableScan``. The list path
+  of ``createDataFrame`` plans a PythonRDD scan instead, whose every scan
+  is a Python job that starts a second pool of Python workers next to the
+  pandas-UDF pool.
+- :func:`job_group` names the Spark jobs a block starts.
 """
 
 from __future__ import annotations
@@ -12,7 +21,10 @@ import os
 from contextlib import contextmanager
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 #: repo root (parent of this package) — exported to executor PYTHONPATH so
 #: Python workers can unpickle our mapInPandas/pandas_udf closures no matter
@@ -95,3 +107,23 @@ def job_group(spark: SparkSession, group: str):
     finally:
         for k, v in prev.items():
             sc.setLocalProperty(k, v)  # None clears the property
+
+
+def local_frame(
+    spark: SparkSession, rows: pa.Table | list[tuple], schema: StructType | str
+) -> DataFrame:
+    """A driver-built frame as a ``LocalTableScan``: no Python worker and
+    no job to materialize it.
+
+    ``rows`` is a list of tuples in ``schema`` column order, or a
+    ``pyarrow.Table`` already in the Arrow form of ``schema`` (a StructType
+    or a DDL string)."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+    return spark.createDataFrame(rows, schema)

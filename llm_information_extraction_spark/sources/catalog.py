@@ -34,8 +34,13 @@ import tempfile
 from dataclasses import dataclass, field
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+from ..session import local_frame
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -65,8 +70,6 @@ class Commit:
 
 def _footer_rows(directory: str) -> dict[str, int]:
     """Rows per ``part-*`` file of a Spark parquet write (footers only)."""
-    import pyarrow.parquet as pq
-
     return {
         p.name: pq.read_metadata(p).num_rows
         for p in sorted(Path(directory).glob("part-*"))
@@ -176,23 +179,20 @@ class Catalog:
 
     def append(self, table: str, rows: list[dict], schema: StructType) -> int:
         """Append driver-built ``rows`` to ``table`` as one new file;
-        returns the snapshot id. The parquet branch writes the file with
-        pyarrow and starts no Spark job; Iceberg appends with
-        ``writeTo(...).append()``."""
+        returns the snapshot id. Both branches build one Arrow table: the
+        parquet branch writes it with pyarrow and starts no Spark job;
+        Iceberg appends it as a local frame with ``writeTo(...).append()``."""
+        arrow = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
         if self._iceberg:
-            writer = self.spark.createDataFrame(rows, schema).writeTo(table)
+            writer = local_frame(self.spark, arrow, schema).writeTo(table)
             if self.spark.catalog.tableExists(table):
                 writer.append()
             else:
                 writer.create()
             return self._commit_meta(table, f"iceberg:{table}", None)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         path, parent = self._next_path(table, ".parquet")
         path.parent.mkdir(parents=True, exist_ok=True)
-        pq.write_table(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), path)
+        pq.write_table(arrow, path)
         return self._commit_meta(
             table, str(path), None, schema=schema.json(),
             rows={path.name: len(rows)}, parent=parent,

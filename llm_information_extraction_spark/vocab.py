@@ -190,8 +190,20 @@ def gazetteer_rows() -> list[tuple[str, str, str]]:
     alias surfaces that collide with another field's vocabulary (e.g.
     Disease_study alias 'ad' vs diffusion measure 'ad') are extraction
     false-positive triggers.
+
+    Each ``(field, surface)`` key appears once, so the dimension needs no
+    dedup downstream; a key with two canonicals raises ``ValueError``.
     """
-    return sorted(set(_primary_rows() + _alias_rows()))
+    rows = sorted(set(_primary_rows() + _alias_rows()))
+    seen: dict[tuple[str, str], str] = {}
+    for field, surface, canonical in rows:
+        prev = seen.setdefault((field, surface), canonical)
+        if prev != canonical:
+            raise ValueError(
+                f"gazetteer key ({field!r}, {surface!r}) has two canonicals: "
+                f"{prev!r} and {canonical!r}"
+            )
+    return rows
 
 
 def extraction_rows() -> list[tuple[str, str, str]]:

@@ -9,6 +9,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 import check_contract  # noqa: E402
+import cpu_breakdown  # noqa: E402
 import make_synth_sf  # noqa: E402
 
 
@@ -43,3 +44,19 @@ def test_make_synth_sf_replica0_keeps_source():
     assert out.column("n_chars").to_pylist()[2:] == [
         len(t) for t in out.column("text").to_pylist()[2:]
     ]
+
+
+@pytest.mark.parametrize("name, cls", [
+    ("C1 CompilerThre", "jit_c1"),
+    ("C2 CompilerThre", "jit_c2"),
+    ("GC Thread#3", "gc"),
+    ("G1 Conc#0", "gc"),
+    ("G1 Refine#0", "gc"),
+    ("Executor task l", "executor_tasks"),
+    ("Thread-4", "driver_py4j"),
+    ("dag-scheduler-e", "other"),
+    ("VM Thread", "other"),
+    ("java", "other"),
+])
+def test_cpu_breakdown_thread_class(name, cls):
+    assert cpu_breakdown.thread_class(name) == cls
