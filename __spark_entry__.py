@@ -730,7 +730,7 @@ def ivf_topk_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ivf_topk_join_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCHED IVF serving under the driver: every 100th vector is a
-    query, answered in ONE broadcast-join job (`ivf_topk_join`). With
+    query, answered in one pass over the index (`ivf_topk_join`). With
     n_probe == n_centroids every cell is probed, so each query's result
     is exact top-k and the oracle is a DuckDB window over the full
     cosine cross join — the k-means assignment cancels out. Ranks are

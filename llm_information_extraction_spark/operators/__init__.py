@@ -1,24 +1,32 @@
-from .payload import (  # noqa: F401
-    build_payload,
-    prune_empty_spans,
-    span_signature,
-)
-from .extraction import extract_triples  # noqa: F401
-from .dedup import (  # noqa: F401
-    exact_dedup,
-    minhash_dedup_groups,
-    simhash_near_dup_pairs,
-)
-from .graph import (  # noqa: F401
-    co_mention_edges,
-    pagerank,
-    predicate_object_degrees,
-)
-from .similarity import (  # noqa: F401
-    cosine_topk,
-    ivf_index,
-    ivf_topk,
-    ivf_topk_from_path,
-    ivf_topk_join,
-    ivf_write,
-)
+"""Operator entry points, resolved lazily: importing one operator
+module (as every Python worker does when it unpickles a kernel that
+references a module-level helper) loads only that module, not the
+whole package."""
+
+import importlib
+
+_EXPORTS = {
+    "build_payload": "payload",
+    "prune_empty_spans": "payload",
+    "span_signature": "payload",
+    "extract_triples": "extraction",
+    "exact_dedup": "dedup",
+    "minhash_dedup_groups": "dedup",
+    "simhash_near_dup_pairs": "dedup",
+    "co_mention_edges": "graph",
+    "pagerank": "graph",
+    "predicate_object_degrees": "graph",
+    "cosine_topk": "similarity",
+    "ivf_index": "similarity",
+    "ivf_topk": "similarity",
+    "ivf_topk_join": "similarity",
+    "ivf_write": "similarity",
+}
+
+__all__ = sorted(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(f".{_EXPORTS[name]}", __name__), name)

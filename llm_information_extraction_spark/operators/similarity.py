@@ -1,26 +1,51 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and near-dup pairs over embedding columns
+(array<float> / array<double>).
 
-- :func:`cosine_topk` — exact brute-force top-k for one query vector:
-  one scan, JVM-side dot products (``zip_with``/``aggregate``), global
-  top-k via ``orderBy(...).limit(k)`` (Spark executes TakeOrderedAndProject
-  — per-partition heaps, no full sort).
-- :func:`cosine_topk_join` — top-k neighbors for a *set* of queries:
-  broadcast the queries, per-partition scoring, window rank. Queries must
-  be small (they are broadcast).
-- :func:`rp_lsh_buckets` / :func:`rp_lsh_near_dup_pairs` — the scale path:
-  random-hyperplane (sign) LSH buckets computed with a seeded
-  deterministic pseudo-random matrix derived from xxhash64, so bucketing
-  needs no driver-side randomness and is reproducible across runs
-  (Charikar'02 SimHash-for-cosine).
+Every cosine here, and in the streaming embedding dedup, comes from
+ONE float64 numpy scorer: ``dot / (‖a‖·‖b‖)``, where a null or
+zero-norm vector scores 0.0. :func:`_cosine_matrix` scores a block of
+rows against a block of queries (one BLAS product);
+:func:`_cosine_rows` scores aligned pair rows. Spark reaches the scorer
+through two ``mapInPandas`` wrappers:
+
+- :func:`_topk_candidates` — per-partition, tie-safe top-k candidates
+  for a collected query set held as per-cell query matrices; the
+  caller then ranks the candidates exactly. :func:`cosine_topk` and
+  :func:`ivf_topk` are its one-query case; :func:`cosine_topk_join`
+  and the broadcast shape of :func:`ivf_topk_join` its many-query case.
+- :func:`_pair_cosines` — a ``cosine`` column for rows that were
+  already joined: the shuffle shape of :func:`ivf_topk_join`, the
+  :func:`rp_lsh_near_dup_pairs` verify and the streaming embedding
+  verifies. Each join keeps its shape; memory is bounded by the Arrow
+  batch.
+
+:func:`embedding_near_dup_pairs_blocked` calls the matrix form once per
+block pair. :func:`rp_lsh_buckets` is random-hyperplane (sign) LSH over
+a seeded deterministic pseudo-random matrix, so bucketing needs no
+driver-side randomness and is reproducible across runs
+(Charikar'02 SimHash-for-cosine).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
-from ..session import local_frame
+#: ivf_topk_join collects its queries and broadcasts the probe set
+#: (queries × n_probe rows) up to this size; above it, index and probes
+#: are repartitioned by cell and joined
+_BROADCAST_PROBE_ROWS = 100_000
 
 
 def _as_double_array(col: Column | str) -> Column:
@@ -28,74 +53,148 @@ def _as_double_array(col: Column | str) -> Column:
     return c.cast("array<double>")
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float/double> columns (zip_with dot
-    + aggregate norms, all JVM-side); 0.0 when either norm is 0."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    nb = F.sqrt(
-        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
+def _matrix(vecs) -> np.ndarray:
+    """float64 (n, dim) matrix of a sequence of vectors; a null vector
+    becomes a zero row, which the scorer scores 0.0."""
+    vecs = list(vecs)
+    dim = next((len(v) for v in vecs if v is not None), 0)
+    zero = np.zeros(dim)
+    return np.asarray(
+        [zero if v is None else v for v in vecs], dtype=np.float64
+    ).reshape(len(vecs), dim)
 
 
-def _blas_topk_single(
-    src: DataFrame, query: list[float], k: int
-) -> DataFrame:
-    """(id, cosine) partial top-k candidates for ONE query vector over
-    ``src(id, v)`` — per-partition float64 BLAS scoring in mapInPandas
-    (guide §4.2), tie-safe truncation to each partition's top-``k``
-    under (cosine desc, id asc). Callers apply the exact global
-    ``orderBy(...).limit(k)``. NULL or zero-norm vectors score 0.0,
-    matching :func:`cosine_sim`.
+def _norms(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row norms with zeros replaced by 1.0, and the zero-norm mask."""
+    n = np.linalg.norm(m, axis=1)
+    zero = n == 0.0
+    n[zero] = 1.0
+    return n, zero
+
+
+def _cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(len(a), len(b)) cosines of every row of ``a`` against every row
+    of ``b``: ``dot / (‖a‖·‖b‖)``; a zero-norm row scores 0.0."""
+    if not (a.shape[1] and b.shape[1]):  # one side holds only nulls
+        return np.zeros((len(a), len(b)))
+    na, za = _norms(a)
+    nb, zb = _norms(b)
+    s = (a @ b.T) / (na[:, None] * nb[None, :])
+    s[za, :] = 0.0
+    s[:, zb] = 0.0
+    return s
+
+
+def _cosine_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Cosine of each aligned row pair ``(a[i], b[i])``: the arithmetic
+    of :func:`_cosine_matrix`, one dot per row."""
+    if not (a.shape[1] and b.shape[1]):
+        return np.zeros(len(a))
+    na, za = _norms(a)
+    nb, zb = _norms(b)
+    s = np.einsum("ij,ij->i", a, b) / (na * nb)
+    s[za | zb] = 0.0
+    return s
+
+
+def _topk(scores: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the top ``k`` scores under (score desc, id asc).
+
+    Tie-safe: every row at or above the k-th score is kept before the
+    (score, id) order truncates, so the kept set holds the global top-k
+    whatever the partitioning.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    n = len(scores)
+    if n > k:
+        thr = np.partition(scores, n - k)[n - k]
+        cand = np.nonzero(scores >= thr)[0]
+    else:
+        cand = np.arange(n)
+    return cand[np.lexsort((ids[cand], -scores[cand]))][:k]
 
+
+def _topk_candidates(
+    items: DataFrame, probes: list, query_type: DataType, k: int
+) -> DataFrame:
+    """(query_id, id, cosine) rows holding every query's exact top-``k``
+    items under (cosine desc, id asc).
+
+    ``items`` is (cell, id, v); ``probes`` is a driver-side list of
+    (query_id, cell, vector), one entry per cell a query probes. The
+    probes become one dense query matrix per cell, carried in the
+    kernel's closure (PySpark broadcasts a closure above 1 MB itself).
+    Each Arrow batch of an item partition is scored per cell with one
+    :func:`_cosine_matrix` product and emits only each query's
+    :func:`_topk` rows, so about partitions·queries·k candidates reach
+    the caller's exact rank instead of |items|·queries scored rows.
+    """
     out_schema = StructType(
         [
-            StructField("id", src.schema["id"].dataType, True),
+            StructField("query_id", query_type, True),
+            StructField("id", items.schema["id"].dataType, True),
             StructField("cosine", DoubleType(), True),
         ]
     )
-    q = np.asarray([float(x) for x in query], dtype=np.float64)
-    qn = float(np.linalg.norm(q))
+    by_cell: dict = {}
+    for qid, cell, vec in probes:
+        by_cell.setdefault(cell, []).append((qid, vec))
+    mats = {
+        cell: ([qid for qid, _ in qs], _matrix(v for _, v in qs))
+        for cell, qs in by_cell.items()
+    }
 
     def score(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            ids = pdf["id"].to_numpy()
-            col = np.zeros(n, dtype=np.float64)
-            if qn > 0.0:
-                ok = pdf["v"].notna().to_numpy()
-                if ok.any():
-                    vm = np.asarray(
-                        pdf["v"][ok].to_list(), dtype=np.float64
-                    )
-                    vn = np.linalg.norm(vm, axis=1)
-                    vzero = vn == 0.0
-                    vn[vzero] = 1.0
-                    s = (vm @ q) / (vn * qn)
-                    s[vzero] = 0.0
-                    col[ok] = s
-            if n > k:
-                thr = np.partition(col, n - k)[n - k]
-                cand = np.nonzero(col >= thr)[0]
-            else:
-                cand = np.arange(n)
-            sel = cand[np.lexsort((ids[cand], -col[cand]))][:k]
-            yield pd.DataFrame({"id": ids[sel], "cosine": col[sel]})
+            out_q: list = []
+            out_i: list = []
+            out_c: list = []
+            for cell, grp in pdf.groupby("cell", sort=False):
+                if cell not in mats:
+                    continue
+                qids, qm = mats[cell]
+                ids = grp["id"].to_numpy()
+                sims = _cosine_matrix(_matrix(grp["v"]), qm)
+                for j, qid in enumerate(qids):
+                    sel = _topk(sims[:, j], ids, k)
+                    out_q.extend([qid] * len(sel))
+                    out_i.extend(ids[sel])
+                    out_c.extend(sims[sel, j])
+            yield pd.DataFrame(
+                {"query_id": out_q, "id": out_i, "cosine": out_c}
+            )
 
-    return src.select("id", "v").mapInPandas(score, schema=out_schema)
+    return items.mapInPandas(score, schema=out_schema)
+
+
+def _pair_cosines(
+    pairs: DataFrame, a: str, b: str, *keep: Column | str
+) -> DataFrame:
+    """(*keep, cosine) for each row of ``pairs``, an already-joined
+    frame: the cosine of its vector columns ``a`` and ``b``
+    (:func:`_cosine_rows`, one Arrow batch at a time). Rows are not
+    regrouped, so a hot join key costs rows, never an n×n matrix."""
+    src = pairs.select(*keep, F.col(a).alias("_a"), F.col(b).alias("_b"))
+    out_schema = StructType(
+        src.schema.fields[:-2] + [StructField("cosine", DoubleType(), True)]
+    )
+
+    def score(batches):
+        for pdf in batches:
+            yield pdf.iloc[:, :-2].assign(
+                cosine=_cosine_rows(_matrix(pdf["_a"]), _matrix(pdf["_b"]))
+            )
+
+    return src.mapInPandas(score, schema=out_schema)
+
+
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """Exact per-query top-``k``: (query_id, id, cosine, rank)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def cosine_topk(
@@ -107,16 +206,22 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k rows by cosine similarity to ``query``.
 
-    Returns (id, cosine) ordered desc, deterministic tiebreak by id.
-    Scoring runs per partition as one BLAS matvec (round 6 — formerly
-    one interpreted higher-order aggregate per row); the global
-    order-and-limit stays exact.
+    Returns (id, cosine) ordered desc, deterministic tiebreak by id: the
+    one-query case of :func:`_topk_candidates` (one BLAS matvec per
+    Arrow batch), then the exact global ``orderBy(...).limit(k)``
+    (TakeOrderedAndProject — per-partition heaps, no full sort).
     """
-    src = df.select(
-        F.col(id_col).alias("id"), _as_double_array(vec_col).alias("v")
+    items = df.select(
+        F.lit(0).alias("cell"),
+        F.col(id_col).alias("id"),
+        _as_double_array(vec_col).alias("v"),
     )
-    scored = _blas_topk_single(src, query, k)
-    return scored.orderBy(F.col("cosine").desc(), F.col("id").asc()).limit(k)
+    return (
+        _topk_candidates(items, [(0, 0, query)], IntegerType(), k)
+        .select("id", "cosine")
+        .orderBy(F.col("cosine").desc(), F.col("id").asc())
+        .limit(k)
+    )
 
 
 def cosine_topk_join(
@@ -127,38 +232,26 @@ def cosine_topk_join(
     item_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "embedding",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """For every query row, its exact top-k items by cosine.
 
-    Broadcast-nested-loop over a *small* query set: shuffle-free scoring,
-    then a per-query window top-k. Returns (query_id, id, cosine, rank).
-
-    ``broadcast_queries=False`` drops the broadcast hint for query sets
-    too large to build a broadcast relation (offline all-pairs-style
-    jobs): the cross join degrades to a partition-pairing cartesian —
-    strictly more data movement, but it completes where a broadcast
-    build would OOM. Results are identical either way.
+    The query set must be small: it is collected once and scored
+    against every item partition by :func:`_topk_candidates`, then each
+    query's candidates are ranked by a (cosine desc, id asc) window.
+    Returns (query_id, id, cosine, rank).
     """
     q = queries.select(
         F.col(query_id).alias("query_id"),
         _as_double_array(query_vec).alias("q_vec"),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-    scored = items.select(
-        F.col(item_id).alias("id"), _as_double_array(item_vec).alias("v")
-    ).crossJoin(q).select(
-        "query_id",
-        "id",
-        cosine_sim(F.col("v"), F.col("q_vec")).alias("cosine"),
+    probes = [(r["query_id"], 0, r["q_vec"]) for r in q.collect()]
+    src = items.select(
+        F.lit(0).alias("cell"),
+        F.col(item_id).alias("id"),
+        _as_double_array(item_vec).alias("v"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _rank(
+        _topk_candidates(src, probes, q.schema["query_id"].dataType, k), k
     )
 
 
@@ -286,6 +379,17 @@ def ivf_index(
     return assigned, centroids
 
 
+def _probe_cells(
+    centroids: list[list[float]], qm: np.ndarray, n_probe: int
+) -> np.ndarray:
+    """(len(qm), ≤ n_probe) cells each query row probes: its
+    ``n_probe`` cosine-closest centroids, ties to the lower cell index
+    (stable sort). The one probe choice of :func:`ivf_topk` and both
+    shapes of :func:`ivf_topk_join`."""
+    sims = _cosine_matrix(qm, np.asarray(centroids, dtype=np.float64))
+    return np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
+
+
 def ivf_topk(
     index: DataFrame,
     centroids: list[list[float]],
@@ -299,26 +403,12 @@ def ivf_topk(
     The cell filter prunes (1 - n_probe/n_centroids) of the corpus before
     any per-vector work — the IVF scale path from the ANN literature;
     recall rises with n_probe (== exact when n_probe == n_centroids).
+    Against a persisted index (``ivf_topk(spark.read.parquet(path),
+    ...)``, see :func:`ivf_write`) the filter prunes partitions.
     """
-    import numpy as np
-
-    q = np.asarray(query, dtype=float)
-    qn = q / (np.linalg.norm(q) or 1.0)
-    cents = np.asarray(centroids, dtype=float)
-    norms = np.linalg.norm(cents, axis=1)
-    norms[norms == 0] = 1.0
-    sims = (cents / norms[:, None]) @ qn
-    # stable sort: centroid-similarity ties break by cell index, matching
-    # ivf_topk_join's window ordering (csim desc, cell asc) — an unstable
-    # quicksort argsort could pick a different probe set on tied sims
-    probe_cells = [int(i) for i in np.argsort(-sims, kind="stable")[:n_probe]]
-
-    src = index.filter(F.col("cell").isin(probe_cells)).select("id", "v")
-    return (
-        _blas_topk_single(src, [float(x) for x in query], k)
-        .orderBy(F.col("cosine").desc(), F.col("id").asc())
-        .limit(k)
-    )
+    cells = _probe_cells(centroids, _matrix([query]), n_probe)[0]
+    probed = index.filter(F.col("cell").isin([int(c) for c in cells]))
+    return cosine_topk(probed, query, k, id_col="id", vec_col="v")
 
 
 def ivf_write(index: DataFrame, path: str) -> None:
@@ -333,18 +423,6 @@ def ivf_write(index: DataFrame, path: str) -> None:
     index.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 
-def ivf_topk_from_path(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Probe a persisted IVF index (see :func:`ivf_write`)."""
-    return ivf_topk(spark.read.parquet(path), centroids, query, k, n_probe)
-
-
 def ivf_topk_join(
     index: DataFrame,
     centroids: list[list[float]],
@@ -353,214 +431,80 @@ def ivf_topk_join(
     n_probe: int = 4,
     query_id: str = "query_id",
     query_vec: str = "embedding",
-    broadcast_queries: bool | None = None,
-    broadcast_limit: int = 100_000,
 ) -> DataFrame:
-    """Approximate top-k for a whole DataFrame of queries in ONE job —
-    the real IVF serving shape (a python loop of :func:`ivf_topk` calls
-    runs one job per query and rescans the index each time).
+    """Approximate top-k for a whole DataFrame of queries in one pass
+    over the index — the real IVF serving shape (a python loop of
+    :func:`ivf_topk` calls runs one job per query and rescans the index
+    each time).
 
-    Probe-cell assignment happens in-plan: queries × centroids (both
-    broadcast-small) → per-query top-``n_probe`` cells by centroid
-    cosine, then ONE join of (query, cell, q_vec) against the index fans
-    each index row out to only the queries probing its cell. The index
-    is scanned exactly once for the whole batch; per-query work stays
-    bounded by its n_probe cells. Tie-breaks are aligned with
-    :func:`ivf_topk` (centroid-sim ties break by cell index in both, and
-    item-cosine ties by vector id) — per-query results match the
-    one-at-a-time path up to last-ulp differences between numpy's and
-    Spark's float summation on centroid similarities, which can flip
-    probe choice only when two centroid sims are within rounding noise.
+    Each query probes the cells :func:`_probe_cells` picks, the same
+    numpy choice :func:`ivf_topk` makes, so per-query results equal the
+    one-at-a-time path. One bounded collect of the queries (at most
+    ``_BROADCAST_PROBE_ROWS // n_probe + 1`` rows) picks the shape:
 
-    ``broadcast_queries``: True forces the broadcast serving shape
-    (right for online batches): the probe set (bounded — it is broadcast
-    scale by definition of this branch) is collected once, grouped by
-    cell into dense query matrices, and shipped to executors as ONE
-    Spark broadcast; an Arrow-batched ``mapInPandas`` stage then scores
-    each index partition against its cells' query matrices with one
-    float64 BLAS matmul and emits only each partition's per-query
-    top-``k`` candidates (tie-safe: candidates at the k-th score are
-    resolved by id before truncation, so the partial set provably
-    contains the global top-k). The final exact (cosine desc, id asc)
-    window then ranks ~``partitions × queries × k`` candidate rows
-    instead of ``|index| × queries`` scored rows, and the index scan is
-    pre-filtered to the probed cells (against a persisted
-    cell-partitioned index that is static partition PRUNING — stronger
-    than the runtime DPP the former probe-join shape relied on).
-    False repartitions index and probes by ``cell`` instead — the
-    offline path for probe sets too large to broadcast (an
-    all-pairs-style query DataFrame); scoring there stays in
-    expression form. None (default) picks automatically with a BOUNDED
-    limit-count of the query set (stops scanning once the limit is
-    provably exceeded): broadcast iff ``n_queries * n_probe <=
-    broadcast_limit`` rows. Both shapes return identical rows up to
-    last-ulp float summation differences (BLAS vs sequential
-    expression sum — the same tolerance already accepted between this
-    operator and numpy/DuckDB replicas); the shuffle shape adds a
-    cell-keyed exchange on each side, and a hot cell there is ordinary
-    join skew (AQE splits it).
+    - broadcast, when the probe set (queries × n_probe) fits: the
+      collected queries become per-cell query matrices for
+      :func:`_topk_candidates`. The index scan is pre-filtered to the
+      probed cells (against a persisted cell-partitioned index, static
+      partition pruning), and only per-partition top-k candidates reach
+      the final rank.
+    - shuffle, for offline query sets too large to collect: a
+      ``mapInPandas`` expands each query to its probe rows, index and
+      probes are repartitioned by cell and joined, and
+      :func:`_pair_cosines` scores each joined row. A hot cell is
+      ordinary join skew (AQE splits it).
 
+    Both shapes end in the same exact (cosine desc, id asc) window.
     Returns (query_id, id, cosine, rank ≤ k).
     """
-    spark = index.sparkSession
-    cents = local_frame(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    )
     q = queries.select(
         F.col(query_id).alias("query_id"),
         _as_double_array(query_vec).alias("q_vec"),
     )
-    probe_rank = Window.partitionBy("query_id").orderBy(
-        F.col("csim").desc(), F.col("cell").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "q_vec",
-            "cell",
-            cosine_sim(F.col("q_vec"), F.col("centroid")).alias("csim"),
-        )
-        .withColumn("pr", F.row_number().over(probe_rank))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "q_vec", "cell")
-    )
-    if broadcast_queries is None:
-        # bounded decision probe: limit-count short-circuits after
-        # ~broadcast_limit/n_probe rows, so a huge offline query set
-        # never pays a full scan just to learn it is over the limit
-        cap = broadcast_limit // max(n_probe, 1) + 1
-        broadcast_queries = q.limit(cap).count() * n_probe <= broadcast_limit
-    if broadcast_queries:
-        scored = _blas_probe_candidates(index, probes, k)
-    else:
-        joined = index.repartition("cell").join(
-            probes.repartition("cell"), "cell"
-        )
-        scored = joined.select(
-            "query_id",
-            "id",
-            cosine_sim(F.col("v"), F.col("q_vec")).alias("cosine"),
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def _blas_probe_candidates(
-    index: DataFrame, probes: DataFrame, k: int
-) -> DataFrame:
-    """(query_id, id, cosine) candidate rows for the broadcast serving
-    shape of :func:`ivf_topk_join` — guaranteed to contain every query's
-    exact top-``k`` under (cosine desc, id asc).
-
-    The probe set is broadcast scale by contract, so it is collected
-    once, grouped by cell into dense float64 matrices and shipped via
-    one ``sc.broadcast`` (the same driver-side build a broadcast hash
-    join performs). Scoring runs per index partition as one BLAS matmul
-    per (batch, cell) in ``mapInPandas`` — the O(n·q·d) flops run in
-    native code instead of one interpreted higher-order aggregate per
-    (index row, query) pair, and only per-partition top-k candidates
-    flow into the final window (bounded by partitions·queries·k rows
-    rather than |index|·queries). The index scan is pre-filtered to the
-    probed cells, so a persisted cell-partitioned index prunes unprobed
-    partitions statically.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    spark = index.sparkSession
-    out_schema = StructType(
-        [
-            StructField(
-                "query_id", probes.schema["query_id"].dataType, True
-            ),
-            StructField("id", index.schema["id"].dataType, True),
-            StructField("cosine", DoubleType(), True),
+    cap = _BROADCAST_PROBE_ROWS // max(n_probe, 1) + 1
+    rows = q.limit(cap).collect()
+    if len(rows) < cap:
+        cells = _probe_cells(centroids, _matrix(r["q_vec"] for r in rows), n_probe)
+        probes = [
+            (r["query_id"], int(c), r["q_vec"])
+            for r, cs in zip(rows, cells)
+            for c in cs
         ]
-    )
-    # bounded collect: |probes| = n_queries · n_probe ≤ broadcast_limit
-    # rows on this branch — the identical driver footprint the former
-    # F.broadcast(probes) hash relation had
-    probe_rows = probes.collect()
-    by_cell: dict = {}
-    for r in probe_rows:
-        by_cell.setdefault(r["cell"], []).append(
-            (r["query_id"], r["q_vec"])
+        probed = index.filter(F.col("cell").isin(sorted({p[1] for p in probes})))
+        return _rank(
+            _topk_candidates(
+                probed.select("cell", "id", "v"),
+                probes,
+                q.schema["query_id"].dataType,
+                k,
+            ),
+            k,
         )
-    cell_mats = {}
-    for cell, qs in by_cell.items():
-        qids = [qid for qid, _ in qs]
-        qm = np.asarray([v for _, v in qs], dtype=np.float64)
-        qn = np.linalg.norm(qm, axis=1)
-        qzero = qn == 0.0
-        qn[qzero] = 1.0
-        cell_mats[cell] = (qids, qm, qn, qzero)
-    bc = spark.sparkContext.broadcast(cell_mats)
 
-    def score(batches):
-        mats = bc.value
+    def expand(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            out_q: list = []
-            out_i: list = []
-            out_c: list = []
-            for cell, grp in pdf.groupby("cell", sort=False):
-                m = mats.get(cell)
-                if m is None:
-                    continue
-                qids, qm, qn, qzero = m
-                grp = grp[grp["v"].notna()]
-                n = len(grp)
-                if not n:
-                    continue
-                ids = grp["id"].to_numpy()
-                vm = np.asarray(grp["v"].to_list(), dtype=np.float64)
-                vn = np.linalg.norm(vm, axis=1)
-                vzero = vn == 0.0
-                vn[vzero] = 1.0
-                # cosine = dot / (||v|| · ||q||); zero-norm → 0.0
-                # (cosine_sim parity)
-                sims = (vm @ qm.T) / (vn[:, None] * qn[None, :])
-                if vzero.any():
-                    sims[vzero, :] = 0.0
-                if qzero.any():
-                    sims[:, qzero] = 0.0
-                for j, qid in enumerate(qids):
-                    col = sims[:, j]
-                    if n > k:
-                        # tie-safe partial top-k: keep EVERY row at or
-                        # above the k-th score, then order by
-                        # (score desc, id asc) and truncate — the kept
-                        # set contains the global top-k by construction
-                        thr = np.partition(col, n - k)[n - k]
-                        cand = np.nonzero(col >= thr)[0]
-                    else:
-                        cand = np.arange(n)
-                    sel = cand[np.lexsort((ids[cand], -col[cand]))][:k]
-                    out_q.extend([qid] * len(sel))
-                    out_i.extend(ids[sel])
-                    out_c.extend(col[sel])
+            cells = _probe_cells(centroids, _matrix(pdf["q_vec"]), n_probe)
+            p = cells.shape[1]
             yield pd.DataFrame(
-                {"query_id": out_q, "id": out_i, "cosine": out_c}
+                {
+                    "query_id": pdf["query_id"].to_numpy().repeat(p),
+                    "cell": cells.ravel(),
+                    "q_vec": pdf["q_vec"].to_numpy().repeat(p),
+                }
             )
 
-    probed_cells = sorted(by_cell)
-    src = index.select("cell", "id", "v")
-    if probed_cells:
-        src = src.filter(F.col("cell").isin(probed_cells))
-    else:
-        src = src.limit(0)
-    return src.mapInPandas(score, schema=out_schema).select(
-        "query_id", "id", "cosine"
+    probes = q.mapInPandas(
+        expand,
+        schema=StructType(
+            [
+                q.schema["query_id"],
+                StructField("cell", IntegerType(), True),
+                q.schema["q_vec"],
+            ]
+        ),
     )
+    joined = index.repartition("cell").join(probes.repartition("cell"), "cell")
+    return _rank(_pair_cosines(joined, "v", "q_vec", "query_id", "id"), k)
 
 
 def embedding_near_dup_pairs_blocked(
@@ -575,12 +519,12 @@ def embedding_near_dup_pairs_blocked(
     The scalable exact path: vectors are hashed into ``num_blocks``
     groups and every row is replicated to each of its block's
     B(B+1)/2 − (B−1) block-*pair* groups via one explode; an
-    ``applyInPandas`` over (pa, pb) then runs one numpy matmul per
-    group. Output: (id_a, id_b, cosine), id_a < id_b, every pair with
-    cosine ≥ ``threshold`` (zero-norm vectors score 0). Each vector
-    crosses the shuffle B times (vs n times for a cross join) and the
-    O(n²·d) flops run in BLAS instead of interpreted expression
-    lambdas.
+    ``applyInPandas`` over (pa, pb) then runs one :func:`_cosine_matrix`
+    product per group. Output: (id_a, id_b, cosine), id_a < id_b, every
+    pair with cosine ≥ ``threshold`` (null and zero-norm vectors score
+    0). Each vector crosses the shuffle B times (vs n times for a cross
+    join) and the O(n²·d) flops run in BLAS instead of interpreted
+    expression lambdas.
 
     Round-6 shape: plain rows through one exchange — no
     ``collect_list`` block arrays (object aggregates, computed once
@@ -592,15 +536,6 @@ def embedding_near_dup_pairs_blocked(
     Choose num_blocks ≈ sqrt(n·d·8 / 64MB) so a block pair fits in task
     memory.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     id_type = dict(df.dtypes)[id_col]
     out_schema = StructType(
         [
@@ -639,16 +574,8 @@ def embedding_near_dup_pairs_blocked(
             return empty
         ids_a = a["id"].to_numpy()
         ids_b = ids_a if same else b["id"].to_numpy()
-        ma = np.asarray(a["v"].to_list(), dtype=np.float64)
-        na = np.linalg.norm(ma, axis=1)
-        na[na == 0] = 1.0
-        if same:
-            mb, nb = ma, na
-        else:
-            mb = np.asarray(b["v"].to_list(), dtype=np.float64)
-            nb = np.linalg.norm(mb, axis=1)
-            nb[nb == 0] = 1.0
-        sims = (ma / na[:, None]) @ (mb / nb[:, None]).T
+        ma = _matrix(a["v"])
+        sims = _cosine_matrix(ma, ma if same else _matrix(b["v"]))
         ii, jj = np.where(sims >= threshold)
         if same:
             tri = ii < jj  # each unordered pair once within a block
@@ -682,9 +609,9 @@ def rp_lsh_near_dup_pairs(
 
     Same output contract as :func:`embedding_near_dup_pairs_blocked`
     (the exact path) but the join is on the LSH bucket instead of every
-    block pair — the 100-TB path.
-    Recall < 1 by construction (raise recall with multiple bucket tables:
-    re-run with different seeds and union).
+    block pair — the 100-TB path; :func:`_pair_cosines` verifies each
+    joined pair. Recall < 1 by construction (raise recall with multiple
+    bucket tables: re-run with different seeds and union).
     """
     b = rp_lsh_buckets(df, dim, num_planes, id_col, vec_col, seed)
     src = df.select(
@@ -692,12 +619,9 @@ def rp_lsh_near_dup_pairs(
     ).join(b, "id")
     a = src.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), "bucket")
     c = src.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), "bucket")
+    pairs = a.join(c, "bucket").filter(F.col("id_a") < F.col("id_b"))
     return (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", cosine_sim(F.col("v_a"), F.col("v_b")).alias("cosine")
-        )
+        _pair_cosines(pairs, "v_a", "v_b", "id_a", "id_b")
         .filter(F.col("cosine") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )

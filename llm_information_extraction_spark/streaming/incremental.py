@@ -721,7 +721,7 @@ def incremental_unique_embeddings(
     from pyspark.sql import functions as F
 
     from ..operators.canonicalize import connected_components
-    from ..operators.similarity import cosine_sim, rp_lsh_buckets
+    from ..operators.similarity import _pair_cosines, rp_lsh_buckets
 
     stream = (
         spark.readStream.schema(schema)
@@ -796,16 +796,22 @@ def incremental_unique_embeddings(
 
             # within-batch: bucket candidates verified by exact cosine
             # IN-join (vectors travel with their buckets) → CC → keep min
+            pairs = rows.alias("a").join(
+                rows.alias("b"),
+                (F.col("a.tbl") == F.col("b.tbl"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.id") < F.col("b.id")),
+            )
             edges = (
-                rows.alias("a")
-                .join(
-                    rows.alias("b"),
-                    (F.col("a.tbl") == F.col("b.tbl"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col("a.id") < F.col("b.id")),
+                _pair_cosines(
+                    pairs,
+                    "a.v",
+                    "b.v",
+                    F.col("a.id").alias("src"),
+                    F.col("b.id").alias("dst"),
                 )
-                .filter(cosine_sim(F.col("a.v"), F.col("b.v")) >= threshold)
-                .select(F.col("a.id").alias("src"), F.col("b.id").alias("dst"))
+                .filter(F.col("cosine") >= threshold)
+                .select("src", "dst")
             )
             losers = connected_components(edges).filter(
                 F.col("node") != F.col("component")
@@ -818,15 +824,15 @@ def incremental_unique_embeddings(
             final, final_rows = survivors, rows.join(losers, "id", "left_anti")
             store = _read_older_batches(spark, state_dir, batch_id)
             if store is not None:
+                pairs = final_rows.alias("nw").join(
+                    store.alias("od"),
+                    (F.col("nw.tbl") == F.col("od.tbl"))
+                    & (F.col("nw.bucket") == F.col("od.bucket")),
+                )
                 hits = (
-                    final_rows.alias("nw")
-                    .join(
-                        store.alias("od"),
-                        (F.col("nw.tbl") == F.col("od.tbl"))
-                        & (F.col("nw.bucket") == F.col("od.bucket")),
-                    )
-                    .filter(cosine_sim(F.col("nw.v"), F.col("od.v")) >= threshold)
-                    .select(F.col("nw.id").alias("id"))
+                    _pair_cosines(pairs, "nw.v", "od.v", F.col("nw.id").alias("id"))
+                    .filter(F.col("cosine") >= threshold)
+                    .select("id")
                     .distinct()
                 )
                 final = survivors.join(hits, "id", "left_anti").cache()

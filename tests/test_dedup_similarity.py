@@ -4,9 +4,16 @@ Runs over the driver's read-only testdata (TESTDATA.md) plus small
 hand-built corpora with known duplicate structure.
 """
 
+import re
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from llm_information_extraction_spark.functions.textmetrics import (
     detect_lang,
@@ -30,14 +37,18 @@ from llm_information_extraction_spark.operators.multimodal import (
     resize_media,
     synth_media,
 )
+from llm_information_extraction_spark.operators import similarity
 from llm_information_extraction_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_join,
     embedding_near_dup_pairs_blocked,
+    ivf_topk,
+    ivf_topk_join,
     rp_lsh_near_dup_pairs,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = Path(__file__).resolve().parent.parent
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -659,12 +670,6 @@ def test_cosine_topk_join(spark):
         assert len(rows) == 4
         assert rows[0]["id"] == qid  # rank 1 is self
         assert [r["rank"] for r in sorted(rows, key=lambda x: x["rank"])] == [1, 2, 3, 4]
-    # the no-broadcast shape (query sets too large to broadcast) must
-    # return identical rows
-    plain = cosine_topk_join(emb, queries, k=4, broadcast_queries=False)
-    assert sorted(
-        (r["query_id"], r["rank"], r["id"]) for r in plain.collect()
-    ) == sorted((r["query_id"], r["rank"], r["id"]) for r in got)
 
 
 def test_ivf_topk_recall(spark):
@@ -764,11 +769,10 @@ def test_ivf_topk_join_empty_queries(spark):
     assert out.count() == 0
 
 
-def test_ivf_topk_join_shuffle_fallback_matches_broadcast(spark):
+def test_ivf_topk_join_shuffle_fallback_matches_broadcast(spark, monkeypatch):
     """The cell-repartition shuffle shape (probe sets too large to
-    broadcast) must return exactly the broadcast serving shape's rows,
-    and the auto knob must pick it when n_queries*n_probe exceeds the
-    limit."""
+    broadcast) must return exactly the broadcast serving shape's rows;
+    it is picked when n_queries * n_probe exceeds the module limit."""
     from llm_information_extraction_spark.operators.similarity import (
         ivf_index,
         ivf_topk_join,
@@ -786,19 +790,17 @@ def test_ivf_topk_join_shuffle_fallback_matches_broadcast(spark):
             for r in df.collect()
         )
 
-    bc = ivf_topk_join(
-        index, centroids, queries, k=5, n_probe=3, broadcast_queries=True
-    )
-    sh = ivf_topk_join(
-        index, centroids, queries, k=5, n_probe=3, broadcast_queries=False
-    )
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    bc = ivf_topk_join(index, centroids, queries, k=5, n_probe=3)
+    assert "Join" not in plan(bc)
+    # 20 queries * 3 probes = 60 > limit → shuffle shape: index and
+    # probes joined on cell
+    monkeypatch.setattr(similarity, "_BROADCAST_PROBE_ROWS", 10)
+    sh = ivf_topk_join(index, centroids, queries, k=5, n_probe=3)
+    assert "Join" in plan(sh)
     assert rows(sh) == rows(bc)
-    # auto mode: 20 queries * 3 probes = 60 > limit → shuffle path; the
-    # plan must carry no broadcast of the probe set
-    auto = ivf_topk_join(
-        index, centroids, queries, k=5, n_probe=3, broadcast_limit=10
-    )
-    assert rows(auto) == rows(bc)
 
 
 def test_ivf_index_undersized_fit_sample_falls_back_to_full(spark):
@@ -893,7 +895,6 @@ def test_ivf_persisted_index_prunes_partitions(spark, tmp_path):
     from llm_information_extraction_spark.operators.similarity import (
         ivf_index,
         ivf_topk,
-        ivf_topk_from_path,
         ivf_write,
     )
 
@@ -904,13 +905,186 @@ def test_ivf_persisted_index_prunes_partitions(spark, tmp_path):
 
     q = emb.orderBy("vec_id").first()
     query = [float(x) for x in q["embedding"]]
-    disk = ivf_topk_from_path(spark, path, centroids, query, k=10, n_probe=3)
+    disk = ivf_topk(spark.read.parquet(path), centroids, query, k=10, n_probe=3)
     plan = disk._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan.split(
         "PartitionFilters"
     )[1].split("]")[0]
     mem = ivf_topk(index, centroids, query, k=10, n_probe=3)
     assert [r["id"] for r in disk.collect()] == [r["id"] for r in mem.collect()]
+
+
+def cosine_sim(a: Column, b: Column) -> Column:
+    """Test-side expression oracle for every library cosine: zip_with
+    dot over aggregate norms, all JVM-side; 0.0 when either vector is
+    null or has norm 0."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
+    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
+
+
+# null and zero-norm vectors in both cells, in the index and the queries
+NULL_INDEX = [
+    (1, [0.9, 0.1], 0), (2, [-0.9, 0.1], 0), (3, None, 0), (4, [0.0, 0.0], 0),
+    (5, [0.0, 1.0], 1), (6, [1.8, 0.2], 1), (7, None, 1), (8, [0.0, 0.0], 1),
+]
+NULL_CENTROIDS = [[1.0, 0.0], [0.0, 1.0]]
+NULL_QUERIES = [(10, [1.0, 0.0]), (11, None), (12, [0.0, 0.0]), (13, [0.2, 0.9])]
+
+
+def _null_frames(spark):
+    index = spark.createDataFrame(NULL_INDEX, "id bigint, v array<double>, cell int")
+    queries = spark.createDataFrame(
+        NULL_QUERIES, "query_id bigint, embedding array<double>"
+    )
+    return index, queries
+
+
+def _oracle_topk(spark, index, queries, k, n_probe):
+    """Per-query top-k by ``cosine_sim`` over the ``n_probe`` cells
+    whose centroids score highest (ties to the lower cell)."""
+    cents = spark.createDataFrame(
+        list(enumerate(NULL_CENTROIDS)), "cell int, centroid array<double>"
+    )
+    q = queries.select("query_id", F.col("embedding").alias("q_vec"))
+    probe = Window.partitionBy("query_id").orderBy(
+        F.col("csim").desc(), F.col("cell").asc()
+    )
+    rank = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("id").asc()
+    )
+    return (
+        q.crossJoin(cents)
+        .withColumn("csim", cosine_sim(F.col("q_vec"), F.col("centroid")))
+        .withColumn("pr", F.row_number().over(probe))
+        .filter(F.col("pr") <= n_probe)
+        .join(index, "cell")
+        .select("query_id", "id", cosine_sim(F.col("v"), F.col("q_vec")).alias("cosine"))
+        .withColumn("rank", F.row_number().over(rank))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _ranked(df):
+    return sorted(
+        (r["query_id"], r["rank"], r["id"], round(r["cosine"], 9))
+        for r in df.collect()
+    )
+
+
+def _single_query(spark, topk_one, n_probe):
+    """Per-query runs of a one-query operator as ranked rows, next to
+    the oracle's; the null query has no list form, so it is left out."""
+    index, queries = _null_frames(spark)
+    got = []
+    for qid, vec in NULL_QUERIES:
+        if vec is not None:
+            rows = topk_one(index, vec).collect()
+            got += [(qid, i + 1, r["id"], round(r["cosine"], 9)) for i, r in enumerate(rows)]
+    listed = queries.filter(F.col("embedding").isNotNull())
+    return sorted(got), _ranked(_oracle_topk(spark, index, listed, 5, n_probe))
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "cosine_topk",
+        "cosine_topk_join",
+        "ivf_topk",
+        "ivf_topk_join_broadcast",
+        "ivf_topk_join_shuffle",
+        "blocked",
+        "rp_lsh",
+    ],
+)
+def test_null_and_zero_norm_vectors_score_zero(spark, monkeypatch, op):
+    """Every cosine operator scores a null or zero-norm vector 0.0, as
+    the ``cosine_sim`` oracle does: such rows are ranked, never dropped
+    and never a crash."""
+    index, queries = _null_frames(spark)
+    items = index.select(F.col("id").alias("vec_id"), F.col("v").alias("embedding"))
+    if op == "cosine_topk":
+        got, want = _single_query(
+            spark, lambda ix, q: cosine_topk(items, q, k=5), n_probe=2
+        )
+    elif op == "cosine_topk_join":
+        got = _ranked(cosine_topk_join(items, queries, k=5))
+        want = _ranked(_oracle_topk(spark, index, queries, 5, n_probe=2))
+    elif op == "ivf_topk":
+        got, want = _single_query(
+            spark,
+            lambda ix, q: ivf_topk(ix, NULL_CENTROIDS, q, k=5, n_probe=1),
+            n_probe=1,
+        )
+        # the query [1, 0] probes cell 0 alone
+        assert [r[2] for r in got if r[0] == 10] == [1, 3, 4, 2]
+    elif op.startswith("ivf_topk_join"):
+        if op.endswith("shuffle"):
+            monkeypatch.setattr(similarity, "_BROADCAST_PROBE_ROWS", 0)
+        got = _ranked(ivf_topk_join(index, NULL_CENTROIDS, queries, k=5, n_probe=1))
+        want = _ranked(_oracle_topk(spark, index, queries, 5, n_probe=1))
+        assert [r[2] for r in got if r[0] == 10] == [1, 3, 4, 2]
+    else:
+        a, b = items.alias("a"), items.alias("b")
+        oracle = {
+            (r["id_a"], r["id_b"], round(r["cosine"], 9))
+            for r in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+            .select(
+                F.col("a.vec_id").alias("id_a"),
+                F.col("b.vec_id").alias("id_b"),
+                cosine_sim(F.col("a.embedding"), F.col("b.embedding")).alias("cosine"),
+            )
+            .filter(F.col("cosine") >= 0.0)
+            .collect()
+        }
+        if op == "blocked":
+            pairs = embedding_near_dup_pairs_blocked(items, threshold=0.0, num_blocks=3)
+        else:
+            pairs = rp_lsh_near_dup_pairs(items, dim=2, threshold=0.0, num_planes=4)
+        got = {
+            (r["id_a"], r["id_b"], round(r["cosine"], 9)) for r in pairs.collect()
+        }
+        if op == "blocked":
+            assert got == oracle
+        else:
+            # same direction, both null, both zero: one bucket each
+            assert {(1, 6), (3, 7), (4, 8)} <= {p[:2] for p in got} and got <= oracle
+        return
+    assert got == want
+
+
+def test_cosine_sim_is_only_a_test_oracle():
+    """No library code, contract entry or tool defines or imports
+    ``cosine_sim``: every cosine comes from the numpy scorer in
+    ``operators/similarity.py``."""
+    files = sorted((ROOT / "llm_information_extraction_spark").rglob("*.py"))
+    files += [ROOT / "__spark_entry__.py"] + sorted((ROOT / "tools").rglob("*.py"))
+    hits = [
+        (path.relative_to(ROOT).as_posix(), line.strip())
+        for path in files
+        for line in path.read_text().splitlines()
+        if re.search(r"\bcosine_sim\b", line)
+    ]
+    assert hits == []
+
+
+def test_similarity_import_loads_no_other_operator():
+    """Python workers unpickle kernels that reference module-level
+    scorers; importing ``operators.similarity`` must not import the rest
+    of the operators package."""
+    code = (
+        "import sys, llm_information_extraction_spark.operators.similarity\n"
+        "print(sorted(m for m in sys.modules if '.operators.' in m))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, capture_output=True, text=True, check=True
+    ).stdout
+    assert out.strip() == "['llm_information_extraction_spark.operators.similarity']"
 
 
 def test_text_metrics_on_testdata(spark):

@@ -90,10 +90,7 @@ def test_ivf_centroid_frame_is_a_local_scan(spark):
     queries = local_frame(
         spark, [(10, [1.0, 0.05])], "query_id bigint, embedding array<double>"
     )
-    out = ivf_topk_join(
-        index, [[1.0, 0.0], [0.0, 1.0]], queries, k=2, n_probe=1,
-        broadcast_queries=True,
-    )
+    out = ivf_topk_join(index, [[1.0, 0.0], [0.0, 1.0]], queries, k=2, n_probe=1)
     _assert_local(out)
     assert [(r["id"], r["rank"]) for r in out.orderBy("rank").collect()] == [
         (1, 1), (3, 2),
