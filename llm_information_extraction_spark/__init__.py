@@ -9,8 +9,8 @@ capabilities of ``stephenkiilu/LLM-Information-extraction`` (see SURVEY.md):
   reference's per-document LLM loop, ``main.py:143-165``),
 - mention normalization + exact canonical-map entity linking
   (``evaluation_gpt4_vs_gpt5.py:43-70, 99-127``),
-- fuzzy entity linking with MinHash/LSH blocking + difflib-parity scoring
-  (``evaluation_gpt4_vs_gpt5.py:72-96``),
+- fuzzy entity linking: an exhaustive per-field difflib scan of the
+  gazetteer with the reference's scoring (``evaluation_gpt4_vs_gpt5.py:72-96``),
 - connected-components canonicalization (large-star/small-star),
 - graph materialization into ``triples`` / ``entities`` tables with
   per-stage lineage + snapshot resume,

@@ -2,8 +2,8 @@
 
 The reference's canonical maps (evaluation_gpt4_vs_gpt5.py:99-127) are a
 hand-maintained union-find: alias → canonical. At corpus scale the same
-structure is the transitive closure of the alias edge list (exact map
-edges + fuzzy ≥0.95 links), i.e. connected components. We compute them
+structure is the transitive closure of the alias edge list (gazetteer
+surface → canonical edges), i.e. connected components. We compute them
 with the **large-star / small-star** alternating DataFrame-join algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14
 — a published public algorithm), which converges in O(log² n) rounds and
@@ -30,6 +30,12 @@ from pyspark.sql import functions as F
 from ..session import local_frame
 
 _CC_SCHEMA = "node string, component string"
+
+#: a graph with at most this many DISTINCT edges is solved by the driver
+#: union-find; tests set it to 0 to pin the distributed path
+_LOCAL_CC_EDGES = 100_000
+#: star-contraction round cap of the distributed path
+_MAX_CC_ITERATIONS = 20
 
 
 def _ensure_checkpoint_dir(sc, checkpoint_dir: str) -> None:
@@ -127,26 +133,25 @@ def _local_components(spark, edges: pa.Table) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    max_iterations: int = 20,
     checkpoint_dir: str | None = None,
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """edges(src string, dst string) → (node string, component string).
 
     component = min node id in the component. Isolated nodes (no edges)
     are the caller's concern — join the result back with a coalesce.
 
-    ``local_threshold``: a graph with at most this many DISTINCT edges
-    is solved by driver-side union-find instead of the iterative
-    star-contraction loop. Each distributed round costs several
-    shuffles plus a checkpoint, which only pays off on graphs too big
-    to hold in driver memory; below the threshold (100k edges ≈ a few
-    MB of short ids — broadcast-build scale, not a corpus collect) the
-    local path returns identical components in milliseconds. The check
+    A graph with at most ``_LOCAL_CC_EDGES`` DISTINCT edges is solved by
+    driver-side union-find instead of the iterative star-contraction
+    loop (at most ``_MAX_CC_ITERATIONS`` rounds). Each distributed round
+    costs several shuffles plus a checkpoint, which only pays off on
+    graphs too big to hold in driver memory; below the threshold (100k
+    edges ≈ a few MB of short ids — broadcast-build scale, not a corpus
+    collect) the local path returns identical components in
+    milliseconds. The check
     is a bounded ``limit(threshold+1)`` read of the already-materialized
     canonical edge set, so huge graphs pay one short-circuiting scan,
-    not a count. 0 disables (always iterate — used by tests to pin the
-    distributed path).
+    not a count. An empty graph always takes the local path; at 0 every
+    other graph iterates (tests use that to pin the distributed path).
 
     ``checkpoint_dir``: when set (a cluster-visible path, e.g. HDFS/S3),
     per-round lineage truncation uses reliable ``checkpoint()`` instead of
@@ -169,23 +174,19 @@ def connected_components(
         return df.localCheckpoint(eager=True)
 
     e = _ckpt(_canonical_edges(edges))
-    if local_threshold:
-        # ONE bounded read decides empty/local/distributed (round 6:
-        # the separate isEmpty() job was redundant — an empty head IS
-        # the empty check on this path)
-        head = e.limit(local_threshold + 1).toArrow()
-        if head.num_rows <= local_threshold:
-            # the checkpointed edge blocks have no reader after this
-            # point — release them now (streaming dedup calls CC every
-            # micro-batch; waiting for driver GC would accumulate one
-            # materialized edge set per batch in the block manager)
-            e.unpersist()
-            return _local_components(edges.sparkSession, head)
-    elif e.isEmpty():
-        return local_frame(edges.sparkSession, [], _CC_SCHEMA)
+    # ONE bounded read decides empty/local/distributed: an empty head IS
+    # the empty check
+    head = e.limit(_LOCAL_CC_EDGES + 1).toArrow()
+    if head.num_rows <= _LOCAL_CC_EDGES:
+        # the checkpointed edge blocks have no reader after this
+        # point — release them now (streaming dedup calls CC every
+        # micro-batch; waiting for driver GC would accumulate one
+        # materialized edge set per batch in the block manager)
+        e.unpersist()
+        return _local_components(edges.sparkSession, head)
 
     prev_stats = _edge_stats(e)
-    for _ in range(max_iterations):
+    for _ in range(_MAX_CC_ITERATIONS):
         # -- large-star ----------------------------------------------------
         # neighborhoods in both directions
         nbrs = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -268,14 +269,12 @@ def resolve_entity_ids(
 
 def build_entities(
     vocab_df: DataFrame,
-    fuzzy_links: DataFrame | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Materialize the ``entities`` table from alias edges.
 
     vocab_df: (field, surface, canonical) — each row is an edge
-    surface↔canonical. fuzzy_links (optional): (field, surface, canonical,
-    score) edges discovered by LSH linking. Output:
+    surface↔canonical. Output:
 
         entities(entity_id string, field string, canonical string,
                  aliases array<string>, n_aliases int)
@@ -284,10 +283,6 @@ def build_entities(
     per field (tract aliases never merge with disease aliases).
     """
     base = vocab_df.select("field", "surface", "canonical")
-    if fuzzy_links is not None:
-        base = base.unionByName(
-            fuzzy_links.select("field", "surface", "canonical")
-        )
     # scope components per field by prefixing node ids with the field
     edges = base.select(
         F.concat_ws("\x1f", "field", "surface").alias("src"),

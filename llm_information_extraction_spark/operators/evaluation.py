@@ -14,7 +14,8 @@ Parity targets:
 - greedy order-dependent TP/FP/FN — whitematter_error_analysis.py:85-112
   (SIM_THRESH=0.85); reference iterates an unordered set for candidate
   golds — we iterate golds sorted, which only differs on exact score
-  ties (documented deviation);
+  ties (documented deviation); both fuzzy matchers score with
+  ``linking.best_match``, the one difflib scorer;
 - NA/Global/Specific categorisation — whitematter_distributions.py:32-91.
 
 Input convention: one row per (sample), columns ``gold`` and ``pred`` of
@@ -24,8 +25,6 @@ functions.normalize + linking for that).
 
 from __future__ import annotations
 
-from difflib import SequenceMatcher
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,8 +32,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, StringType, StructType
 
 from ..vocab import EMPTY_TOKENS
+from .linking import SIM_THRESH, best_match
 
-SEMANTIC_SIM_THRESH = 0.95  # evaluation_gpt4_vs_gpt5.py:28
 GREEDY_SIM_THRESH = 0.85  # whitematter_error_analysis.py:32
 
 
@@ -62,34 +61,20 @@ def filter_both_empty(
 def _semantic_map_udf(preds: pd.Series, golds: pd.Series) -> pd.Series:
     """Map each predicted label to its best same-row gold label.
 
-    Parity with best_semantic_match (evaluation_gpt4_vs_gpt5.py:80-96):
-    exact match short-circuits at 1.0; otherwise highest
-    SequenceMatcher.ratio ≥ 0.95 wins; below threshold the raw pred is
-    kept. Arrays are tiny (per-row label sets) so per-row Python here is
-    bounded; batches arrive via Arrow.
+    Parity with best_semantic_match (evaluation_gpt4_vs_gpt5.py:80-96),
+    via ``linking.best_match`` over the row's golds in list order: exact
+    match short-circuits at 1.0; otherwise highest SequenceMatcher.ratio
+    ≥ 0.95 wins; below threshold the raw pred is kept. Arrays are tiny
+    (per-row label sets) so per-row Python here is bounded; batches
+    arrive via Arrow.
     """
 
     def map_row(pred_list, gold_list):
-        pred_list = list(pred_list) if pred_list is not None else []
         gold_list = list(gold_list) if gold_list is not None else []
         out = []
-        for p in pred_list:
-            if not gold_list:
-                out.append(p)
-                continue
-            best_ref, best_score = None, 0.0
-            exact = False
-            for g in gold_list:
-                if p == g:
-                    out.append(g)
-                    exact = True
-                    break
-                s = SequenceMatcher(None, p or "", g or "").ratio()
-                if s > best_score:
-                    best_score, best_ref = s, g
-            if exact:
-                continue
-            out.append(best_ref if best_score >= SEMANTIC_SIM_THRESH else p)
+        for p in pred_list if pred_list is not None else []:
+            hit = best_match(p, gold_list, SIM_THRESH)
+            out.append(p if hit is None else hit[0])
         return out
 
     return pd.Series([map_row(p, g) for p, g in zip(preds, golds)])
@@ -269,9 +254,10 @@ _GREEDY_SCHEMA = StructType().add("tp", IntegerType()).add(
 def _greedy_udf(golds: pd.Series, preds: pd.Series) -> pd.DataFrame:
     """Order-dependent greedy matcher (row_tp_fp_fn,
     whitematter_error_analysis.py:85-112): preds in list order each claim
-    the best *unmatched* gold with ratio ≥ 0.85, else count as FP;
-    unmatched golds are FN. Candidate golds are iterated in sorted order
-    (the reference iterates a Python set — nondeterministic on ties)."""
+    the best *unmatched* gold with ratio ≥ 0.85 (``linking.best_match``),
+    else count as FP; unmatched golds are FN. Candidate golds are
+    iterated in sorted order (the reference iterates a Python set —
+    nondeterministic on ties)."""
 
     def row(gold_list, pred_list) -> tuple[int, int, int]:
         gold_list = list(gold_list) if gold_list is not None else []
@@ -282,14 +268,10 @@ def _greedy_udf(golds: pd.Series, preds: pd.Series) -> pd.DataFrame:
         matched: set[str] = set()
         tp = fp = 0
         for p in pred_list:
-            best_score, best_g = 0.0, None
-            for g in sorted(gold_set - matched):
-                s = SequenceMatcher(None, p or "", g or "").ratio()
-                if s > best_score:
-                    best_score, best_g = s, g
-            if best_score >= GREEDY_SIM_THRESH and best_g is not None:
+            hit = best_match(p, sorted(gold_set - matched), GREEDY_SIM_THRESH)
+            if hit is not None:
                 tp += 1
-                matched.add(best_g)
+                matched.add(hit[0])
             else:
                 fp += 1
         return tp, fp, len(gold_set - matched)

@@ -1,4 +1,4 @@
-"""Entity linking: exact canonical maps + LSH-blocked fuzzy matching.
+"""Entity linking: exact canonical maps + exhaustive difflib fuzzy matching.
 
 Two phases, mirroring the reference's exact-then-fuzzy short-circuit
 (``best_semantic_match``, /root/reference/evaluation_gpt4_vs_gpt5.py:80-96):
@@ -8,28 +8,32 @@ Two phases, mirroring the reference's exact-then-fuzzy short-circuit
    ``create_map`` literals; the large gazetteer goes through a broadcast
    hash join (map-side, zero shuffle of the mention side).
 
-2. **Fuzzy** — only surfaces that resolved to nothing go through
-   MinHash-LSH blocking (char 3-gram shingles → MinHash →
-   ``approxSimilarityJoin``) against the vocabulary, then exact
-   ``difflib.SequenceMatcher.ratio()`` scoring in a pandas UDF with the
-   reference's threshold semantics (``seq_sim ≥ 0.95``, SIM_THRESH at
-   ``:28``; both-empty → 1.0, one-empty → 0.0, ``:72-78``).
+2. **Fuzzy** — only surfaces that resolved to nothing are scanned, in one
+   ``mapInPandas`` kernel, against every vocabulary surface of their own
+   field with :func:`best_match`: the exact-match short-circuit, then the
+   best ``difflib.SequenceMatcher.ratio()`` ≥ the reference's threshold
+   (``SIM_THRESH`` at ``:28``; both-empty → 1.0, one-empty → 0.0,
+   ``:72-78``, which is what ``ratio()`` itself returns).
+   :func:`best_match` is the one difflib scorer: the evaluation UDFs
+   (``evaluation._semantic_map_udf`` and ``_greedy_udf``) call it too.
 
 Scale shape: fuzzy matching runs over **distinct unresolved surfaces**
 (typically ≪ corpus size), never over mentions — at 10^12 docs the
 mentions table only ever sees broadcast joins against the resolved
-surface→canonical dimension.
+surface→canonical dimension. The vocabulary side is the bounded
+gazetteer (409 rows, at most 319 per field), so the scan is exhaustive:
+no blocking step can drop a pair that scores above the threshold.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
 from difflib import SequenceMatcher
+from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from .. import vocab
 from ..functions.normalize import normalize_text
@@ -49,25 +53,42 @@ def vocabulary_df(spark: SparkSession) -> DataFrame:
     )
 
 
-@pandas_udf(DoubleType())
-def seq_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact difflib.SequenceMatcher.ratio() parity (F5 in SURVEY §2.4).
+@lru_cache(maxsize=4096)
+def _matcher(ref: str) -> SequenceMatcher:
+    """A matcher with ``b = ref``. difflib caches its per-``b`` tables
+    (``b2j``, the ``quick_ratio`` counts), so one matcher per candidate,
+    kept for the life of the Python worker, pays them once; each query
+    only swaps in ``a`` with ``set_seq1``."""
+    return SequenceMatcher(None, "", ref)
 
-    Inputs are assumed pre-normalized; both-empty → 1.0, one-empty → 0.0
-    (evaluation_gpt4_vs_gpt5.py:72-78). Arrow-batched; the per-pair Python
-    cost is paid only on the small post-blocking candidate set.
+
+def best_match(
+    s: str | None, candidates: Iterable[str | None], threshold: float
+) -> tuple[str | None, float] | None:
+    """The reference's ``best_semantic_match`` over ``candidates`` in order.
+
+    A candidate equal to ``s`` returns at once with score 1.0. Otherwise
+    the first candidate with the maximal difflib ``ratio()`` (``a`` =
+    ``s or ""``, ``b`` = ``ref or ""``, no junk function) wins if that
+    ratio is ≥ ``threshold``; returns ``(candidate, ratio)`` or None.
+    A candidate is skipped when ``real_quick_ratio()`` or
+    ``quick_ratio()`` is already below the score it would have to reach;
+    both bound ``ratio()`` from above, so the result equals a full scan.
+    This is the only difflib scorer in the library (F5/J4/J5).
     """
-
-    def ratio(x: str | None, y: str | None) -> float:
-        x = x or ""
-        y = y or ""
-        if not x and not y:
-            return 1.0
-        if not x or not y:
-            return 0.0
-        return SequenceMatcher(None, x, y).ratio()
-
-    return pd.Series([ratio(x, y) for x, y in zip(a, b)])
+    hit = None
+    for ref in candidates:
+        if ref == s:
+            return ref, 1.0
+        m = _matcher(ref or "")
+        m.set_seq1(s or "")
+        floor = threshold if hit is None else hit[1]
+        if m.real_quick_ratio() < floor or m.quick_ratio() < floor:
+            continue
+        r = m.ratio()
+        if r >= threshold and (hit is None or r > hit[1]):
+            hit = ref, r
+    return hit
 
 
 def exact_canonicalize(mentions: DataFrame) -> DataFrame:
@@ -86,134 +107,55 @@ def exact_canonicalize(mentions: DataFrame) -> DataFrame:
     return mentions.withColumn("obj", expr)
 
 
-def _char_ngrams(col, n: int = 3):
-    """Padded character n-gram shingles as array<string> (for MinHash)."""
-    padded = F.concat(F.lit("^"), F.regexp_replace(col, r"\s+", "_"), F.lit("$"))
-    length = F.length(padded)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(length - n + 1, F.lit(1))),
-        lambda i: padded.substr(i, F.lit(n)),
-    )
-
-
-def _field_scoped_grams(df: DataFrame, surface_col: str) -> DataFrame:
-    """Attach field-prefixed char-3-gram shingles as ``grams``.
-
-    Each gram is tagged ``field\\x1f<gram>`` so grams from different
-    fields can never collide in the CountVectorizer vocabulary or hash to
-    the same MinHash bucket membership — the LSH blocking becomes
-    field-scoped without changing same-field Jaccard.
-    """
-    grams = F.array_distinct(
-        F.transform(
-            _char_ngrams(F.col(surface_col)),
-            lambda g: F.concat_ws("\x1f", F.col("field"), g),
-        )
-    )
-    return df.withColumn("grams", grams).filter(F.size("grams") > 0)
-
-
-def lsh_candidate_pairs(
-    l_g: DataFrame,
-    r_g: DataFrame,
-    jaccard_max_distance: float = 0.7,
-    num_hash_tables: int = 6,
-) -> DataFrame:
-    """MinHashLSH candidate pairs over pre-shingled inputs (``grams``).
-
-    Returns the raw approxSimilarityJoin output (datasetA/datasetB
-    structs + jaccard_dist) BEFORE any field filtering — factored out so
-    tests can assert the field-scoped blocking produces zero cross-field
-    candidates (the expensive difflib scorer only ever sees in-field
-    pairs).
-    """
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH
-
-    # shared vocabulary of shingles → sparse vectors → MinHash
-    cv = CountVectorizer(
-        inputCol="grams", outputCol="features", binary=True, minDF=1.0
-    ).fit(l_g.select("grams").union(r_g.select("grams")))
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
-    ).fit(cv.transform(l_g))
-    return lsh.approxSimilarityJoin(
-        cv.transform(l_g), cv.transform(r_g), jaccard_max_distance,
-        distCol="jaccard_dist",
-    )
-
-
 def fuzzy_link_surfaces(
     unresolved: DataFrame,
     vocab_df: DataFrame,
     threshold: float = SIM_THRESH,
-    jaccard_max_distance: float = 0.7,
-    num_hash_tables: int = 6,
 ) -> DataFrame:
     """Map unresolved surfaces to vocabulary canonicals by fuzzy similarity.
 
-    unresolved: (field, surface) distinct, normalized.
-    Returns (field, surface, canonical, score) for pairs with
-    difflib ratio ≥ threshold, best-match-per-surface (ties broken by
-    canonical asc for determinism).
-
-    Blocking: MinHashLSH over **field-prefixed** char-3-gram shingles
-    bounds the candidate set (Jaccard distance ≤ ``jaccard_max_distance``);
-    a difflib ratio of 0.95 implies high shingle overlap, so the block is
-    lossless in practice for the reference threshold. Prefixing each gram
-    with its field makes cross-field grams unequal, so blocking is
-    field-scoped BEFORE the join — per-field vocabularies share surface
-    shapes, and unscoped LSH would inflate the difflib-scored candidate
-    set with cross-field pairs. Same-field Jaccard is unchanged by the
-    prefix. The post-join field equality filter stays as a safety assert.
+    unresolved: (field, surface); normalized and made distinct here.
+    vocab_df: the bounded (field, surface, canonical) dimension, collected
+    once on the driver (``vocabulary_df`` is a ``LocalTableScan``).
+    Returns (field, surface, canonical, score) for each surface whose
+    :func:`best_match` over its OWN field's vocabulary clears
+    ``threshold``: field scoping is structural, a surface is never
+    compared with another field's surfaces. Candidates are scanned in
+    (canonical, surface) order, so the first strict maximum is the best
+    score with ties broken by canonical asc. The scan is exhaustive, so
+    the result depends only on each surface, not on the rest of the input.
     """
-    left = unresolved.select(
-        "field", normalize_text("surface").alias("surface")
-    ).dropDuplicates()
-    right = vocab_df.select(
-        "field",
-        normalize_text("surface").alias("vocab_surface"),
-        normalize_text("canonical").alias("canonical"),
-    ).dropDuplicates(["field", "vocab_surface"])
-
-    l_g, r_g = _field_scoped_grams(left, "surface"), _field_scoped_grams(
-        right, "vocab_surface"
-    )
-    if l_g.isEmpty() or r_g.isEmpty():
-        return left.limit(0).select(
+    by_field: dict[str, dict[str, str]] = {}
+    for field, surface, canonical in sorted(
+        vocab_df.select(
             "field",
-            "surface",
-            F.lit(None).cast("string").alias("canonical"),
-            F.lit(0.0).alias("score"),
-        )
+            normalize_text("surface").alias("surface"),
+            normalize_text("canonical").alias("canonical"),
+        ).collect(),
+        key=lambda r: (r[0], r[2], r[1]),
+    ):
+        by_field.setdefault(field, {}).setdefault(surface, canonical)
 
-    pairs = (
-        lsh_candidate_pairs(l_g, r_g, jaccard_max_distance, num_hash_tables)
-        .filter(F.col("datasetA.field") == F.col("datasetB.field"))
-        .select(
-            F.col("datasetA.field").alias("field"),
-            F.col("datasetA.surface").alias("surface"),
-            F.col("datasetB.vocab_surface").alias("vocab_surface"),
-            F.col("datasetB.canonical").alias("canonical"),
+    def link(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for field, surface in zip(pdf["field"], pdf["surface"]):
+                refs = by_field.get(field, {})
+                hit = best_match(surface, refs, threshold)
+                if hit is not None:
+                    rows.append((field, surface, refs[hit[0]], hit[1]))
+            if rows:
+                yield pd.DataFrame(
+                    rows, columns=["field", "surface", "canonical", "score"]
+                )
+
+    return (
+        unresolved.select("field", normalize_text("surface").alias("surface"))
+        .dropDuplicates()
+        .mapInPandas(
+            link, "field string, surface string, canonical string, score double"
         )
     )
-    scored = pairs.withColumn(
-        "score",
-        F.when(F.col("surface") == F.col("vocab_surface"), F.lit(1.0)).otherwise(
-            seq_sim_udf(F.col("surface"), F.col("vocab_surface"))
-        ),
-    ).filter(F.col("score") >= threshold)
-    # deterministic best-match: order by (score desc, canonical asc)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("field", "surface").orderBy(
-        F.col("score").desc(), F.col("canonical").asc()
-    )
-    best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("field", "surface", "canonical", "score")
-    )
-    return best
 
 
 def link_mentions(
@@ -224,10 +166,11 @@ def link_mentions(
     """mentions(doc_id, pred, obj) → triples(doc_id, pred, obj) canonical.
 
     Phase 1: literal canonical maps (always) + broadcast gazetteer join.
-    Phase 2 (``fuzzy=True``): LSH+difflib linking of still-unknown
-    surfaces for vocabulary fields, applied back via a second broadcast
-    join. Output deduplicated per (doc_id, pred, obj) — the reference's
-    per-paper ``list(set())`` (main.py:201-203), made deterministic.
+    Phase 2 (``fuzzy=True``): difflib linking (:func:`fuzzy_link_surfaces`)
+    of still-unknown surfaces for vocabulary fields, applied back via a
+    second broadcast join. Output deduplicated per (doc_id, pred, obj) —
+    the reference's per-paper ``list(set())`` (main.py:201-203), made
+    deterministic.
     """
     canon = exact_canonicalize(mentions)
     gaz = F.broadcast(
@@ -243,13 +186,9 @@ def link_mentions(
 
     if fuzzy:
         vocab_fields = {f for f, _, _ in vocab.gazetteer_rows()}
-        unresolved = (
-            joined.filter(
-                F.col("__canonical").isNull() & F.col("pred").isin(list(vocab_fields))
-            )
-            .select(F.col("pred").alias("field"), F.col("obj").alias("surface"))
-            .dropDuplicates()
-        )
+        unresolved = joined.filter(
+            F.col("__canonical").isNull() & F.col("pred").isin(list(vocab_fields))
+        ).select(F.col("pred").alias("field"), F.col("obj").alias("surface"))
         fuzzy_map = fuzzy_link_surfaces(unresolved, vocab_df)
         fm = F.broadcast(
             fuzzy_map.select(

@@ -50,11 +50,7 @@ from pyspark.sql.types import (
 
 from ..operators.canonicalize import build_entities
 from ..operators.extraction import extract_triples
-from ..operators.linking import (
-    fuzzy_link_surfaces,
-    link_mentions,
-    vocabulary_df,
-)
+from ..operators.linking import link_mentions, vocabulary_df
 from ..operators.payload import build_payload
 from ..session import job_group
 from ..sources.catalog import Catalog, Commit
@@ -215,19 +211,16 @@ class KGPipeline:
         miss a near pair whose shared MinHash buckets all have a
         dissimilar min document (its documented caveat).
         """
-        from ..functions.textmetrics import doc_fingerprint
+        from ..operators.dedup import exact_dedup, minhash_dedup_groups
 
         if self.config.dedup not in ("exact", "minhash"):
             raise ValueError(f"unknown dedup mode {self.config.dedup!r}")
 
-        payload = build_payload(docs, mode="full_text")
-        with_fp = payload.withColumn("__fp", doc_fingerprint("payload"))
-        keep = with_fp.groupBy("__fp").agg(F.min("doc_id").alias("doc_id"))
-        unique = with_fp.join(keep, ["__fp", "doc_id"]).select(*docs.columns)
+        unique = exact_dedup(
+            build_payload(docs, mode="full_text"), text_col="payload"
+        ).select(*docs.columns)
 
         if self.config.dedup == "minhash":
-            from ..operators.dedup import minhash_dedup_groups
-
             groups = minhash_dedup_groups(
                 build_payload(unique, mode="full_text"),
                 text_col="payload",
@@ -267,26 +260,12 @@ class KGPipeline:
         )
 
     def _build_entities(self, triples: DataFrame) -> DataFrame:
-        vdf = vocabulary_df(self.spark)
-        fuzzy_links = None
-        if self.config.fuzzy:
-            from .. import vocab as _vocab
-            from ..functions.normalize import normalize_text
-
-            vocab_fields = list({f for f, _, _ in _vocab.gazetteer_rows()})
-            known = vdf.select(
-                F.col("field").alias("pred"),
-                normalize_text("surface").alias("obj"),
-            )
-            unresolved = (
-                triples.filter(F.col("pred").isin(vocab_fields))
-                .select("pred", normalize_text("obj").alias("obj"))
-                .dropDuplicates()
-                .join(known, ["pred", "obj"], "left_anti")
-                .select(F.col("pred").alias("field"), F.col("obj").alias("surface"))
-            )
-            fuzzy_links = fuzzy_link_surfaces(unresolved, vdf)
-        return build_entities(vdf, fuzzy_links)
+        """Entities come from the gazetteer alone. Every gazetteer
+        canonical is a surface of its field (``vocab.gazetteer_rows``
+        checks it), so a triple object that is not a known surface is one
+        the triples stage's exhaustive fuzzy scan already failed to link:
+        re-linking the triples would find nothing."""
+        return build_entities(vocabulary_df(self.spark))
 
     # -- driver ---------------------------------------------------------------
     def run(self, resume: bool = True, stop_after: str | None = None) -> dict:

@@ -193,6 +193,9 @@ def gazetteer_rows() -> list[tuple[str, str, str]]:
 
     Each ``(field, surface)`` key appears once, so the dimension needs no
     dedup downstream; a key with two canonicals raises ``ValueError``.
+    Every canonical is itself a surface of its field, so a linked object
+    is always a known surface and re-linking it finds nothing new; a
+    canonical without its own row raises ``ValueError`` too.
     """
     rows = sorted(set(_primary_rows() + _alias_rows()))
     seen: dict[tuple[str, str], str] = {}
@@ -202,6 +205,12 @@ def gazetteer_rows() -> list[tuple[str, str, str]]:
             raise ValueError(
                 f"gazetteer key ({field!r}, {surface!r}) has two canonicals: "
                 f"{prev!r} and {canonical!r}"
+            )
+    for field, surface, canonical in rows:
+        if (field, canonical) not in seen:
+            raise ValueError(
+                f"gazetteer canonical ({field!r}, {canonical!r}) of surface "
+                f"{surface!r} is not a surface of its field"
             )
     return rows
 

@@ -72,7 +72,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--mode", choices=["full_text", "abstract"],
                    default="full_text")
     p.add_argument("--fuzzy", action="store_true",
-                   help="enable LSH fuzzy entity linking")
+                   help="enable difflib fuzzy entity linking of "
+                        "surfaces the exact gazetteer join leaves unlinked")
     p.add_argument("--dedup", choices=["none", "exact", "minhash"],
                    default="none",
                    help="corpus dedup stage before extraction")

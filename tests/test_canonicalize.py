@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from llm_information_extraction_spark.operators import canonicalize
 from llm_information_extraction_spark.operators.canonicalize import (
     build_entities,
     connected_components,
@@ -19,13 +20,14 @@ def test_transitive_chain(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
 
 
-def test_long_path_converges(spark):
+def test_long_path_converges(spark, monkeypatch):
     # a path graph of 30 nodes must collapse to a single component
     edges = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(29)],
         "src string, dst string",
     )
-    comps = connected_components(edges, local_threshold=0)
+    monkeypatch.setattr(canonicalize, "_LOCAL_CC_EDGES", 0)
+    comps = connected_components(edges)
     assert comps.select("component").distinct().count() == 1
     assert comps.count() == 30
     assert comps.agg(F.min("component")).collect()[0][0] == "n00"
@@ -87,7 +89,7 @@ def test_build_entities_merges_aliases(spark):
     assert rows[("tract", "fornix")]["aliases"] == ["fornix"]
 
 
-def test_cc_reliable_checkpoint_mode(spark, tmp_path):
+def test_cc_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
     """checkpoint_dir= switches lineage truncation to reliable
     checkpoint() (survives executor loss on a real cluster); results
     must be identical to the localCheckpoint default."""
@@ -100,18 +102,17 @@ def test_cc_reliable_checkpoint_mode(spark, tmp_path):
         (r["node"], r["component"])
         for r in connected_components(edges).collect()
     }
+    monkeypatch.setattr(canonicalize, "_LOCAL_CC_EDGES", 0)
     reliable = {
         (r["node"], r["component"])
-        for r in connected_components(
-            edges, checkpoint_dir=ckpt, local_threshold=0
-        ).collect()
+        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
     }
     assert reliable == local
     import os
     assert os.listdir(ckpt)  # checkpoint files actually landed on disk
 
 
-def test_cc_local_fast_path_matches_iterative(spark):
+def test_cc_local_fast_path_matches_iterative(spark, monkeypatch):
     """The driver-side union-find fast path must return exactly the
     distributed star-contraction result on an arbitrary graph (chains,
     a star, duplicate and reversed edges, isolated pair)."""
@@ -126,8 +127,9 @@ def test_cc_local_fast_path_matches_iterative(spark):
         (r["node"], r["component"])
         for r in connected_components(df).collect()
     }
+    monkeypatch.setattr(canonicalize, "_LOCAL_CC_EDGES", 0)
     iterative = {
         (r["node"], r["component"])
-        for r in connected_components(df, local_threshold=0).collect()
+        for r in connected_components(df).collect()
     }
     assert local == iterative and local

@@ -2,23 +2,35 @@
 
 Checks difflib-parity scoring (seq_sim, evaluation_gpt4_vs_gpt5.py:72-78),
 the SIM_THRESH=0.95 gate (:28), exact-match short-circuit (:88-90), and
-LSH-blocked fuzzy linking of typo'd aliases onto the vocabulary.
+exhaustive per-field fuzzy linking of typo'd aliases onto the vocabulary
+against a brute-force ``SequenceMatcher`` scan.
 """
 
+import random
+import re
+import sys
 from difflib import SequenceMatcher
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
+from llm_information_extraction_spark import vocab
 from llm_information_extraction_spark.operators.linking import (
+    best_match,
     exact_canonicalize,
     fuzzy_link_surfaces,
     link_mentions,
-    seq_sim_udf,
     vocabulary_df,
 )
 
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT / "tools"))
 
-def test_seq_sim_parity(spark):
+from fuzzy_link_ab import typo  # noqa: E402
+
+
+def test_seq_sim_parity():
     pairs = [
         ("corpus callosum", "corpus callosum"),
         ("corpus callosum", "corpus calosum"),
@@ -27,16 +39,14 @@ def test_seq_sim_parity(spark):
         ("", "fornix"),
         ("posteior arcuate fascisculus", "posterior arcuate fasciculus"),
     ]
-    df = spark.createDataFrame(pairs, "a string, b string")
-    got = [r[0] for r in df.select(seq_sim_udf("a", "b")).collect()]
-    for (a, b), g in zip(pairs, got):
+    for a, b in pairs:
         if not a and not b:
             want = 1.0
         elif not a or not b:
             want = 0.0
         else:
             want = SequenceMatcher(None, a, b).ratio()
-        assert abs(g - want) < 1e-12, (a, b, g, want)
+        assert best_match(a, [b], 0.0) == (b, want), (a, b)
 
 
 def test_exact_canonicalize_maps(spark):
@@ -83,34 +93,138 @@ def test_fuzzy_link_typos(spark):
 
 
 def test_fuzzy_blocking_is_field_scoped(spark):
-    """Cross-field candidates must never reach the difflib scorer: the
-    shingles are field-prefixed, so two fields sharing the exact same
-    surface text produce disjoint gram sets (Jaccard 1.0 distance) and
-    the LSH join drops them before scoring."""
-    from llm_information_extraction_spark.operators.linking import (
-        _field_scoped_grams,
-        lsh_candidate_pairs,
+    """A surface is scored only against its own field's vocabulary: text
+    that exists only in another field's vocabulary never links."""
+    vdf = spark.createDataFrame(
+        [
+            ("field_a", "corpus callosum", "corpus callosum"),
+            ("field_a", "fornix", "fornix"),
+            ("field_b", "alzheimers disease", "alzheimers disease"),
+            ("field_b", "cingulum", "cingulum"),
+        ],
+        "field string, surface string, canonical string",
     )
+    unresolved = spark.createDataFrame(
+        [
+            ("field_a", "cingulum"),            # exact text, other field
+            ("field_a", "alzheimers diseas"),   # typo of another field's text
+            ("field_a", "fornix"),
+            ("field_b", "alzheimers diseas"),
+            ("field_c", "fornix"),              # field with no vocabulary
+        ],
+        "field string, surface string",
+    )
+    got = {
+        (r["field"], r["surface"]): r["canonical"]
+        for r in fuzzy_link_surfaces(unresolved, vdf).collect()
+    }
+    assert got == {
+        ("field_a", "fornix"): "fornix",
+        ("field_b", "alzheimers diseas"): "alzheimers disease",
+    }
 
-    shared = ["corpus callosum", "fornix", "alzheimers disease", "cingulum"]
-    left = spark.createDataFrame(
-        [("field_a", s) for s in shared], "field string, surface string"
+
+def _brute_force_links(rows, threshold):
+    """Test oracle: score every same-field gazetteer row with a fresh
+    SequenceMatcher (exact match → 1.0) and keep the best at or above
+    ``threshold`` by (score desc, canonical asc)."""
+    gaz = vocab.gazetteer_rows()
+    out = {}
+    for field, surface in rows:
+        s = " ".join(surface.lower().split())
+        best = None
+        for f, ref, canonical in gaz:
+            if f != field:
+                continue
+            score = 1.0 if ref == s else SequenceMatcher(None, s, ref).ratio()
+            if score >= threshold and (
+                best is None or (-score, canonical) < (-best[1], best[0])
+            ):
+                best = (canonical, score)
+        if best is not None:
+            out[(field, s)] = best
+    return out
+
+
+@pytest.mark.parametrize("threshold", [0.85, 0.95])
+def test_fuzzy_link_matches_brute_force_scan(spark, threshold):
+    """The linker equals an exhaustive scan over the gazetteer, including
+    short or heavily edited surfaces whose character shingles share
+    little with their match (``geu`` → ``genu`` scores 0.857)."""
+    rng = random.Random(1)
+    gaz = vocab.gazetteer_rows()
+    rows = [
+        ("whitematter_tracts", "geu"),
+        ("whitematter_tracts", "foormnix"),
+        ("whitematter_tracts", "solf"),
+        ("whitematter_tracts", "  Corpus   CALLOSUM "),
+        ("Disease_study", "alzheimers diseas"),
+    ]
+    for field, surface, _ in rng.sample(gaz, 160):
+        rows.append((field, typo(rng, surface, rng.choice([1, 1, 2]))))
+    for _ in range(40):
+        field = rng.choice(gaz)[0]
+        rows.append((field, "".join(rng.choice("xyzq ") for _ in range(9))))
+    unresolved = spark.createDataFrame(rows, "field string, surface string")
+    got = {
+        (r["field"], r["surface"]): (r["canonical"], r["score"])
+        for r in fuzzy_link_surfaces(unresolved, vocabulary_df(spark), threshold).collect()
+    }
+    want = _brute_force_links(rows, threshold)
+    assert got == want
+    if threshold == 0.85:
+        assert want[("whitematter_tracts", "geu")][0] == "genu"
+
+
+def test_relinking_first_pass_leftovers_finds_nothing(spark):
+    """Every gazetteer canonical is a known surface of its field, so the
+    triple objects that are not known surfaces are exactly what the first
+    fuzzy pass could not link; a second pass over them returns no row."""
+    vdf = vocabulary_df(spark)
+    mentions = spark.createDataFrame(
+        [
+            ("d1", "whitematter_tracts", "corpus callosumm"),
+            ("d1", "whitematter_tracts", "slf"),
+            ("d1", "whitematter_tracts", "geu"),
+            ("d2", "whitematter_tracts", "not a tract at all"),
+            ("d2", "Disease_study", "alzheimers diseas"),
+            ("d2", "Disease_study", "zzzz"),
+        ],
+        "doc_id string, pred string, obj string",
     )
-    right = spark.createDataFrame(
-        [("field_b", s) for s in shared] + [("field_a", s) for s in shared],
-        "field string, vocab_surface string",
+    triples = link_mentions(mentions, vdf, fuzzy=True)
+    known = vdf.select(F.col("field").alias("pred"), F.col("surface").alias("obj"))
+    leftovers = (
+        triples.join(known, ["pred", "obj"], "left_anti")
+        .filter(F.col("pred").isin([f for f, _, _ in vocab.gazetteer_rows()]))
+        .select(F.col("pred").alias("field"), F.col("obj").alias("surface"))
     )
-    pairs = lsh_candidate_pairs(
-        _field_scoped_grams(left, "surface"),
-        _field_scoped_grams(right, "vocab_surface"),
-    ).select(
-        F.col("datasetA.field").alias("fa"),
-        F.col("datasetB.field").alias("fb"),
-    )
-    cross = pairs.filter(F.col("fa") != F.col("fb")).count()
-    same = pairs.filter(F.col("fa") == F.col("fb")).count()
-    assert cross == 0
-    assert same >= len(shared)  # identical in-field surfaces all block
+    assert {r["surface"] for r in leftovers.collect()} == {
+        "geu", "not a tract at all", "zzzz",
+    }
+    assert fuzzy_link_surfaces(leftovers, vdf).count() == 0
+
+
+def test_sequence_matcher_only_in_best_match():
+    """Every difflib score in the library, contract entry and tools comes
+    from ``linking.best_match`` (its cached ``_matcher``), and linking
+    uses no ``pyspark.ml`` blocking."""
+    files = sorted((ROOT / "llm_information_extraction_spark").rglob("*.py"))
+    files += [ROOT / "__spark_entry__.py"] + sorted((ROOT / "tools").rglob("*.py"))
+    hits = [
+        (path.relative_to(ROOT).as_posix(), line.strip())
+        for path in files
+        for line in path.read_text().splitlines()
+        if "SequenceMatcher(" in line
+    ]
+    assert hits == [
+        (
+            "llm_information_extraction_spark/operators/linking.py",
+            'return SequenceMatcher(None, "", ref)',
+        )
+    ]
+    linking = ROOT / "llm_information_extraction_spark/operators/linking.py"
+    assert not re.search(r"pyspark\.ml\b", linking.read_text())
 
 
 def test_link_mentions_fuzzy_end_to_end(spark):

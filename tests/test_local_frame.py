@@ -10,6 +10,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from llm_information_extraction_spark import vocab
+from llm_information_extraction_spark.operators import canonicalize
 from llm_information_extraction_spark.operators.canonicalize import (
     connected_components,
 )
@@ -44,6 +45,16 @@ def test_gazetteer_rejects_key_with_two_canonicals(monkeypatch):
         vocab.gazetteer_rows()
 
 
+def test_gazetteer_rejects_canonical_that_is_not_a_surface(monkeypatch):
+    alias = vocab._alias_rows()
+    field = alias[0][0]
+    monkeypatch.setattr(
+        vocab, "_alias_rows", lambda: alias + [(field, "slff", "no such tract")]
+    )
+    with pytest.raises(ValueError, match="not a surface of its field"):
+        vocab.gazetteer_rows()
+
+
 def test_cc_local_path_is_a_local_scan(spark):
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("x", "y")], "src string, dst string"
@@ -55,10 +66,11 @@ def test_cc_local_path_is_a_local_scan(spark):
     ]
 
 
-@pytest.mark.parametrize("local_threshold", [100_000, 0])
-def test_cc_empty_edges_is_a_local_scan(spark, local_threshold):
+@pytest.mark.parametrize("local_edges", [100_000, 0])
+def test_cc_empty_edges_is_a_local_scan(spark, monkeypatch, local_edges):
     edges = spark.createDataFrame([], "src string, dst string")
-    cc = connected_components(edges, local_threshold=local_threshold)
+    monkeypatch.setattr(canonicalize, "_LOCAL_CC_EDGES", local_edges)
+    cc = connected_components(edges)
     _assert_local(cc)
     assert cc.columns == ["node", "component"]
     assert cc.count() == 0
