@@ -999,17 +999,22 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def entity_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph materialization (SURVEY §2.7): the ``entities`` dimension
-    built by large-star/small-star connected components over the alias
-    graph. The oracle inlines the same 409 vocabulary rows as VALUES and
-    recomputes components via a recursive CTE, the representative
-    canonical via count-then-value arg-max, and the sorted alias list —
-    so the distributed CC implementation is value-checked end-to-end."""
+    """Graph materialization (SURVEY §2.7): the ``entities`` dimension,
+    per-field connected components of the gazetteer's alias graph. The
+    table is a pure function of the 409 gazetteer rows, so
+    ``canonicalize.entity_rows`` builds it on the driver (the same
+    min-root union-find as connected components' small-graph path) and
+    it enters Spark as a ``LocalTableScan``. The oracle inlines the same
+    rows as VALUES and recomputes components via a recursive CTE, the
+    representative canonical via count-then-value arg-max, and the
+    sorted alias list."""
+    from llm_information_extraction_spark import vocab
     from llm_information_extraction_spark.operators.canonicalize import (
-        build_entities,
+        ENTITY_SCHEMA,
+        entity_rows,
     )
 
-    e = build_entities(vocabulary_df(spark))
+    e = local_frame(spark, entity_rows(vocab.gazetteer_rows()), ENTITY_SCHEMA)
     return e.select(
         "entity_id",
         "field",
@@ -1831,7 +1836,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY user_id, session_seq
         """,
         "entity_table": f"""
-            -- recompute build_entities in SQL: per-field connected
+            -- recompute entity_rows in SQL: per-field connected
             -- components over surface<->canonical alias edges (recursive
             -- closure == the large-star/small-star fixpoint), entity_id =
             -- lexicographically smallest member, canonical = arg-max by

@@ -16,12 +16,17 @@ needs only groupBy/join primitives:
 
 Each round is one shuffle; ``localCheckpoint`` truncates the lineage so
 the plan doesn't grow across iterations (SURVEY §4 requirement). Node ids
-are strings (entity surfaces); ordering is lexicographic, so the
-component representative — the entity id — is the lexicographically
-smallest member, which is deterministic.
+are strings; ordering is lexicographic, so the component representative
+is the lexicographically smallest member, which is deterministic.
+:func:`connected_components` serves the dedup groupings. The gazetteer's
+alias graph is package data of a few hundred rows, so the ``entities``
+table (:func:`entity_rows`) runs the same min-root union-find on the
+driver that CC's small-graph fast path runs.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -97,16 +102,31 @@ def _edge_stats(e: DataFrame) -> tuple:
     return (row["n"], row["chk"])
 
 
-def _local_components(spark, edges: pa.Table) -> DataFrame:
-    """Driver-side union-find over a BOUNDED ``(src, dst)`` Arrow table
-    (the small-graph fast path of :func:`connected_components`). Min-root
-    union keeps every set's root at its lexicographically smallest node
-    id, so the output is identical to the distributed
-    large-star/small-star result: (node, component = min id in the
-    component)."""
-    parent: dict[str, str] = {}
+def _release(df: DataFrame) -> None:
+    """Free the blocks behind ``df``, a frame made by ``cache()`` /
+    ``persist()`` or by ``localCheckpoint()`` / ``checkpoint()``.
 
-    def find(x: str) -> str:
+    ``DataFrame.unpersist()`` reaches only the first kind: a checkpoint
+    is a ``LogicalRDD`` over an RDD persisted outside the cache manager,
+    and its blocks stay in the block manager for the session's life
+    unless that RDD itself is unpersisted. A frame derived from ``df``
+    fails once its checkpoint blocks are freed, so release only frames
+    nothing reads any more."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+def _union_find(pairs) -> dict:
+    """node → min node id of its component, over ``(a, b)`` pairs of
+    comparable node ids (strings, or :func:`entity_rows`' (field, alias)
+    tuples). Min-root union keeps every set's root at its smallest node
+    id, the component id the distributed large-star/small-star loop
+    converges to. A self-pair just registers its node."""
+    parent: dict = {}
+
+    def find(x):
         root = x
         while parent[root] != root:
             root = parent[root]
@@ -114,19 +134,27 @@ def _local_components(spark, edges: pa.Table) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in zip(
-        edges.column("src").to_pylist(), edges.column("dst").to_pylist()
-    ):
+    for a, b in pairs:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    nodes = list(parent)
+    return {n: find(n) for n in parent}
+
+
+def _local_components(spark, edges: pa.Table) -> DataFrame:
+    """Driver-side :func:`_union_find` over a BOUNDED ``(src, dst)`` Arrow
+    table (the small-graph fast path of :func:`connected_components`):
+    (node, component = min id in the component), identical to the
+    distributed result."""
+    comp = _union_find(
+        zip(edges.column("src").to_pylist(), edges.column("dst").to_pylist())
+    )
     comps = pa.table({
-        "node": pa.array(nodes, pa.string()),
-        "component": pa.array([find(n) for n in nodes], pa.string()),
+        "node": pa.array(list(comp), pa.string()),
+        "component": pa.array(list(comp.values()), pa.string()),
     })
     return local_frame(spark, comps, _CC_SCHEMA)
 
@@ -152,6 +180,11 @@ def connected_components(
     canonical edge set, so huge graphs pay one short-circuiting scan,
     not a count. An empty graph always takes the local path; at 0 every
     other graph iterates (tests use that to pin the distributed path).
+
+    The call keeps none of its checkpoints on the local path, and only
+    the last round's on the distributed path: the returned frame reads
+    it, so its blocks live as long as that frame (Spark's context
+    cleaner frees them once the frame is garbage-collected).
 
     ``checkpoint_dir``: when set (a cluster-visible path, e.g. HDFS/S3),
     per-round lineage truncation uses reliable ``checkpoint()`` instead of
@@ -182,7 +215,7 @@ def connected_components(
         # point — release them now (streaming dedup calls CC every
         # micro-batch; waiting for driver GC would accumulate one
         # materialized edge set per batch in the block manager)
-        e.unpersist()
+        _release(e)
         return _local_components(edges.sparkSession, head)
 
     prev_stats = _edge_stats(e)
@@ -218,7 +251,7 @@ def connected_components(
         # e2 is materialized: the previous round's checkpoint blocks are
         # dead weight — release them or k iterations hold k edge-set
         # copies in the block manager (OOMs large graphs in local mode)
-        e.unpersist()
+        _release(e)
         e = e2
         if cur_stats == prev_stats:
             break
@@ -267,68 +300,48 @@ def resolve_entity_ids(
     )
 
 
-def build_entities(
-    vocab_df: DataFrame,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Materialize the ``entities`` table from alias edges.
+#: schema of the ``entities`` table :func:`entity_rows` fills
+ENTITY_SCHEMA = (
+    "entity_id string, field string, canonical string, "
+    "aliases array<string>, n_aliases int"
+)
 
-    vocab_df: (field, surface, canonical) — each row is an edge
-    surface↔canonical. Output:
 
-        entities(entity_id string, field string, canonical string,
-                 aliases array<string>, n_aliases int)
+def entity_rows(
+    gazetteer_rows: list[tuple[str, str, str]],
+) -> list[tuple[str, str, str, list[str], int]]:
+    """The ``entities`` table, in :data:`ENTITY_SCHEMA` column order,
+    from ``(field, surface, canonical)`` alias rows (each row is an edge
+    surface↔canonical), sorted by (field, entity_id).
 
-    entity_id = lexicographically-smallest alias in the component, scoped
-    per field (tract aliases never merge with disease aliases).
+    Per field (tract aliases never merge with disease aliases), the
+    connected components of the alias edges (:func:`_union_find`) are
+    the entities: entity_id = the component's lexicographically smallest
+    alias, aliases = its sorted members, canonical = the arg-max over
+    (votes, value) of the canonicals its rows name, one vote per row.
+    The entity table is a pure function of the gazetteer, so it is built
+    here on the driver and enters Spark through ``session.local_frame``.
     """
-    base = vocab_df.select("field", "surface", "canonical")
-    # scope components per field by prefixing node ids with the field
-    edges = base.select(
-        F.concat_ws("\x1f", "field", "surface").alias("src"),
-        F.concat_ws("\x1f", "field", "canonical").alias("dst"),
+    comp = _union_find(
+        ((f, s), (f, c)) for f, s, c in gazetteer_rows
     )
-    cc = connected_components(edges, checkpoint_dir=checkpoint_dir)
-    # isolated nodes (self-loop-only aliases, e.g. surface == canonical)
-    # are dropped by CC; restore them with component = themselves
-    all_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    cc = all_nodes.join(cc, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
-    )
-    members = cc.select(
-        F.split_part("node", F.lit("\x1f"), F.lit(1)).alias("field"),
-        F.split_part("node", F.lit("\x1f"), F.lit(2)).alias("alias"),
-        F.split_part("component", F.lit("\x1f"), F.lit(2)).alias("entity_id"),
-    )
-    # representative canonical = the most frequent canonical among member
-    # rows of vocab (deterministic tiebreak by value)
-    canon_votes = base.join(
-        members,
-        (base["field"] == members["field"]) & (base["surface"] == members["alias"]),
-    ).select(members["field"], "entity_id", base["canonical"])
-    top_canon = (
-        canon_votes.groupBy("field", "entity_id", "canonical")
-        .count()
-        .groupBy("field", "entity_id")
-        .agg(
-            F.max_by(
-                "canonical", F.struct(F.col("count"), F.col("canonical"))
-            ).alias("canonical")
+    members: dict[tuple, list[str]] = {}
+    for (field, alias), (_, root) in comp.items():
+        members.setdefault((field, root), []).append(alias)
+    votes: dict[tuple, Counter] = {}
+    for field, surface, canonical in gazetteer_rows:
+        votes.setdefault((field, comp[(field, surface)][1]), Counter())[
+            canonical
+        ] += 1
+    out = []
+    for (field, entity_id), aliases in sorted(members.items()):
+        vote = votes.get((field, entity_id))
+        canonical = (
+            max(vote.items(), key=lambda kv: (kv[1], kv[0]))[0]
+            if vote
+            else entity_id
         )
-    )
-    return (
-        members.groupBy("field", "entity_id")
-        .agg(F.array_sort(F.collect_set("alias")).alias("aliases"))
-        .join(top_canon, ["field", "entity_id"], "left")
-        .select(
-            "entity_id",
-            "field",
-            F.coalesce("canonical", "entity_id").alias("canonical"),
-            "aliases",
-            F.size("aliases").alias("n_aliases"),
+        out.append(
+            (entity_id, field, canonical, sorted(aliases), len(aliases))
         )
-    )
+    return out

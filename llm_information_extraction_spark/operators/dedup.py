@@ -249,6 +249,14 @@ _XXH_PRIMES = (
 )
 
 
+def _check_seeds(seed: int, num_hashes: int) -> None:
+    """Refuse a seed range ``[seed, seed + num_hashes)`` outside int32."""
+    if not (-(2**31) <= seed and seed + num_hashes - 1 < 2**31):
+        raise ValueError(
+            f"minhash seeds [{seed}, {seed + num_hashes}) must fit int32"
+        )
+
+
 def _minhash_sigs_arrow(
     hs_df: DataFrame, num_hashes: int, seed: int
 ) -> DataFrame:
@@ -270,10 +278,7 @@ def _minhash_sigs_arrow(
     must fit int32; anything else raises ``ValueError`` here, when the
     plan is built.
     """
-    if not (-(2**31) <= seed and seed + num_hashes - 1 < 2**31):
-        raise ValueError(
-            f"minhash seeds [{seed}, {seed + num_hashes}) must fit int32"
-        )
+    _check_seeds(seed, num_hashes)
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -346,15 +351,6 @@ def _minhash_sigs_arrow(
             )
 
     return hs_df.mapInPandas(run, schema=out_schema)
-
-
-def _doc_tokens(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, n)).alias("shingle"),
-    )
 
 
 def drop_frequent_shingles(
@@ -516,11 +512,17 @@ def _banded_slices(
     return banded, keys
 
 
+def _doc_shingles(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, sh): each document's distinct word-``n``-gram shingles."""
+    return df.select(
+        F.col(id_col).alias("id"), word_shingles(text_col, n).alias("sh")
+    )
+
+
 def _verified_star_edges(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
+    sh: DataFrame,
     num_hashes: int,
     bands: int,
     threshold: float,
@@ -529,26 +531,30 @@ def _verified_star_edges(
 ) -> DataFrame:
     """(src, dst) string edges for :func:`minhash_dedup_groups`: each
     document's star edge to the min id of every band bucket it shares,
-    kept only when the two documents' exact word-``n``-gram Jaccard is
-    ≥ ``threshold``."""
+    kept only when the two documents' exact shingle-set Jaccard is
+    ≥ ``threshold``.
+
+    ``sh`` is :func:`_doc_shingles`' (id, sh) frame, materialized by the
+    caller: the signature kernel's input and both verify join sides read
+    it, so no side re-derives the shingles or re-reads the input."""
     from pyspark.sql.window import Window
 
     if max_shingle_doc_freq is None:
-        sig = minhash_signatures(df, id_col, text_col, n, num_hashes, seed)
+        hs = sh.select(
+            "id", F.transform("sh", lambda s: F.xxhash64(s)).alias("hs")
+        )
     else:
         # the filter needs corpus-level shingle frequencies, so it runs
         # on the exploded token table; the survivors' base hashes are
         # grouped back per doc for the same kernel
         tok = drop_frequent_shingles(
-            _doc_tokens(df, id_col, text_col, n), max_shingle_doc_freq
+            sh.select("id", F.explode("sh").alias("shingle")),
+            max_shingle_doc_freq,
         )
-        sig = _minhash_sigs_arrow(
-            tok.groupBy("id").agg(
-                F.collect_list(F.xxhash64("shingle")).alias("hs")
-            ),
-            num_hashes,
-            seed,
+        hs = tok.groupBy("id").agg(
+            F.collect_list(F.xxhash64("shingle")).alias("hs")
         )
+    sig = _minhash_sigs_arrow(hs, num_hashes, seed)
     banded, keys = _banded_slices(sig, num_hashes, bands)
     # ONE bucket-partitioned window min (one exchange) rather than
     # groupBy + self-join, which re-derived the signature pipeline on
@@ -561,22 +567,18 @@ def _verified_star_edges(
         .filter(F.col("id") != F.col("dst"))
         .dropDuplicates()
     )
-    # shingle each document ONCE and join the arrays to both edge ends:
-    # building them per edge end (up to ``bands`` times per doc on
-    # templated corpora) was 4.5x slower at 100k docs
-    # (BENCH/dedup_scale.md).
+    # join each document's ONE shingle array to both edge ends: building
+    # them per edge end (up to ``bands`` times per doc on templated
+    # corpora) was 4.5x slower at 100k docs (BENCH/dedup_scale.md).
     # word_shingles arrays are distinct, so |array_intersect| is the
     # intersection size. No broadcast hints: AQE broadcasts the edge
     # side when it turns out small
-    sh = df.select(
-        F.col(id_col).alias("id"), word_shingles(text_col, n).alias("__sh")
-    )
     pairs = (
         star.join(sh, "id")
-        .join(sh.withColumnsRenamed({"id": "dst", "__sh": "__dsh"}), "dst")
-        .withColumn("__c", F.size(F.array_intersect("__sh", "__dsh")))
+        .join(sh.withColumnsRenamed({"id": "dst", "sh": "dsh"}), "dst")
+        .withColumn("__c", F.size(F.array_intersect("sh", "dsh")))
     )
-    jac = F.col("__c") / (F.size("__sh") + F.size("__dsh") - F.col("__c"))
+    jac = F.col("__c") / (F.size("sh") + F.size("dsh") - F.col("__c"))
     return pairs.filter(jac >= threshold).select(
         F.col("id").cast("string").alias("src"),
         F.col("dst").cast("string").alias("dst"),
@@ -609,6 +611,12 @@ def minhash_dedup_groups(
     documents end up grouped only through a path of verified
     near-duplicate edges.
 
+    Each document is shingled once: the (id, shingles) frame is
+    local-checkpointed (one job) and feeds the signatures, the optional
+    frequency filter and both verify sides; its blocks are released when
+    connected components returns. Bad banding geometry or seeds raise
+    ``ValueError`` before that job.
+
     Caveat: the two documents of a near pair meet only through the min
     of the buckets they share. If every shared bucket's min is a
     dissimilar document, both star edges fail verification and the
@@ -626,14 +634,20 @@ def minhash_dedup_groups(
 
     ``bands`` must divide ``num_hashes`` (``ValueError`` otherwise).
     """
-    from .canonicalize import connected_components
+    from .canonicalize import _release, connected_components
 
-    cc = connected_components(
-        _verified_star_edges(
-            df, id_col, text_col, n, num_hashes, bands, threshold, seed,
-            max_shingle_doc_freq,
+    # refuse bad geometry and seeds before the checkpoint job runs
+    _rows_per_band(num_hashes, bands)
+    _check_seeds(seed, num_hashes)
+    sh = _doc_shingles(df, id_col, text_col, n).localCheckpoint(eager=True)
+    try:
+        cc = connected_components(
+            _verified_star_edges(
+                sh, num_hashes, bands, threshold, seed, max_shingle_doc_freq
+            )
         )
-    )
+    finally:
+        _release(sh)
     # CC's component is the min string node id, and every node it
     # returns has an edge to another one: no singleton to drop
     return cc.select(

@@ -53,6 +53,13 @@ def _as_double_array(col: Column | str) -> Column:
     return c.cast("array<double>")
 
 
+def _has_norm(col: Column | str) -> Column:
+    """True for a vector with a nonzero element. A null or zero-norm
+    vector scores 0.0 against everything, so it can never clear a
+    positive threshold: candidate joins leave such rows out."""
+    return F.exists(_as_double_array(col), lambda x: x != 0)
+
+
 def _matrix(vecs) -> np.ndarray:
     """float64 (n, dim) matrix of a sequence of vectors; a null vector
     becomes a zero row, which the scorer scores 0.0."""
@@ -611,8 +618,11 @@ def rp_lsh_near_dup_pairs(
     (the exact path) but the join is on the LSH bucket instead of every
     block pair — the 100-TB path; :func:`_pair_cosines` verifies each
     joined pair. Recall < 1 by construction (raise recall with multiple
-    bucket tables: re-run with different seeds and union).
+    bucket tables: re-run with different seeds and union). With
+    ``threshold > 0`` null and zero-norm vectors join no candidates.
     """
+    if threshold > 0:
+        df = df.filter(_has_norm(vec_col))
     b = rp_lsh_buckets(df, dim, num_planes, id_col, vec_col, seed)
     src = df.select(
         F.col(id_col).alias("id"), _as_double_array(vec_col).alias("v")

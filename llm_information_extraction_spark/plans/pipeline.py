@@ -48,11 +48,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.canonicalize import build_entities
+from .. import vocab
+from ..operators.canonicalize import ENTITY_SCHEMA, entity_rows
 from ..operators.extraction import extract_triples
 from ..operators.linking import link_mentions, vocabulary_df
 from ..operators.payload import build_payload
-from ..session import job_group
+from ..session import job_group, local_frame
 from ..sources.catalog import Catalog, Commit
 from ..sources.synthetic import generate_documents
 
@@ -216,13 +217,14 @@ class KGPipeline:
         if self.config.dedup not in ("exact", "minhash"):
             raise ValueError(f"unknown dedup mode {self.config.dedup!r}")
 
-        unique = exact_dedup(
+        payload = exact_dedup(
             build_payload(docs, mode="full_text"), text_col="payload"
-        ).select(*docs.columns)
+        )
+        unique = payload.select(*docs.columns)
 
         if self.config.dedup == "minhash":
             groups = minhash_dedup_groups(
-                build_payload(unique, mode="full_text"),
+                payload,
                 text_col="payload",
                 threshold=self.config.minhash_threshold,
             )
@@ -264,8 +266,12 @@ class KGPipeline:
         canonical is a surface of its field (``vocab.gazetteer_rows``
         checks it), so a triple object that is not a known surface is one
         the triples stage's exhaustive fuzzy scan already failed to link:
-        re-linking the triples would find nothing."""
-        return build_entities(vocabulary_df(self.spark))
+        re-linking the triples would find nothing. The table is a pure
+        function of package data, built on the driver: its write is the
+        stage's one Spark job."""
+        return local_frame(
+            self.spark, entity_rows(vocab.gazetteer_rows()), ENTITY_SCHEMA
+        )
 
     # -- driver ---------------------------------------------------------------
     def run(self, resume: bool = True, stop_after: str | None = None) -> dict:

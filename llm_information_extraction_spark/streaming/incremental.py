@@ -721,7 +721,7 @@ def incremental_unique_embeddings(
     from pyspark.sql import functions as F
 
     from ..operators.canonicalize import connected_components
-    from ..operators.similarity import _pair_cosines, rp_lsh_buckets
+    from ..operators.similarity import _has_norm, _pair_cosines, rp_lsh_buckets
 
     stream = (
         spark.readStream.schema(schema)
@@ -795,9 +795,12 @@ def incremental_unique_embeddings(
             cached.append(rows)
 
             # within-batch: bucket candidates verified by exact cosine
-            # IN-join (vectors travel with their buckets) → CC → keep min
-            pairs = rows.alias("a").join(
-                rows.alias("b"),
+            # IN-join (vectors travel with their buckets) → CC → keep min.
+            # Zero-norm vectors share one bucket per table and score 0.0:
+            # above a positive threshold they join nothing
+            cand = rows.filter(_has_norm("v")) if threshold > 0 else rows
+            pairs = cand.alias("a").join(
+                cand.alias("b"),
                 (F.col("a.tbl") == F.col("b.tbl"))
                 & (F.col("a.bucket") == F.col("b.bucket"))
                 & (F.col("a.id") < F.col("b.id")),

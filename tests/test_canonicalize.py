@@ -1,12 +1,88 @@
 """Connected-components + entities-table tests (FIXTURES.md T4 chains)."""
 
+import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from llm_information_extraction_spark import vocab
 from llm_information_extraction_spark.operators import canonicalize
 from llm_information_extraction_spark.operators.canonicalize import (
-    build_entities,
     connected_components,
+    entity_rows,
 )
+from llm_information_extraction_spark.operators.linking import vocabulary_df
+
+
+def build_entities_oracle(vocab_df: DataFrame) -> DataFrame:
+    """The ``entities`` table as Spark operators: per-field connected
+    components over the surface↔canonical alias edges, isolated nodes
+    restored, representative canonical = arg-max by (votes, value),
+    aliases = sorted members. The test-side oracle of
+    ``canonicalize.entity_rows``."""
+    base = vocab_df.select("field", "surface", "canonical")
+    # scope components per field by prefixing node ids with the field
+    edges = base.select(
+        F.concat_ws("\x1f", "field", "surface").alias("src"),
+        F.concat_ws("\x1f", "field", "canonical").alias("dst"),
+    )
+    cc = connected_components(edges)
+    all_nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    cc = all_nodes.join(cc, "node", "left").select(
+        "node", F.coalesce("component", "node").alias("component")
+    )
+    members = cc.select(
+        F.split_part("node", F.lit("\x1f"), F.lit(1)).alias("field"),
+        F.split_part("node", F.lit("\x1f"), F.lit(2)).alias("alias"),
+        F.split_part("component", F.lit("\x1f"), F.lit(2)).alias("entity_id"),
+    )
+    canon_votes = base.join(
+        members,
+        (base["field"] == members["field"]) & (base["surface"] == members["alias"]),
+    ).select(members["field"], "entity_id", base["canonical"])
+    top_canon = (
+        canon_votes.groupBy("field", "entity_id", "canonical")
+        .count()
+        .groupBy("field", "entity_id")
+        .agg(
+            F.max_by(
+                "canonical", F.struct(F.col("count"), F.col("canonical"))
+            ).alias("canonical")
+        )
+    )
+    return (
+        members.groupBy("field", "entity_id")
+        .agg(F.array_sort(F.collect_set("alias")).alias("aliases"))
+        .join(top_canon, ["field", "entity_id"], "left")
+        .select(
+            "entity_id",
+            "field",
+            F.coalesce("canonical", "entity_id").alias("canonical"),
+            "aliases",
+            F.size("aliases").alias("n_aliases"),
+        )
+    )
+
+
+def _oracle_rows(spark, rows):
+    vdf = spark.createDataFrame(rows, "field string, surface string, canonical string")
+    return _sorted_entities(build_entities_oracle(vdf).collect())
+
+
+def _sorted_entities(rows) -> list[tuple]:
+    """Entity rows as tuples in ``entity_rows``' (field, entity_id) order."""
+    return sorted(
+        ((r["entity_id"], r["field"], r["canonical"], r["aliases"], r["n_aliases"])
+         for r in rows),
+        key=lambda t: (t[1], t[0]),
+    )
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_transitive_chain(spark):
@@ -65,28 +141,97 @@ def test_resolve_entity_ids(spark):
     assert ("DTI_study", None) in got
 
 
+_MERGE_ROWS = [
+    ("tract", "slf", "superior longitudinal fasciculus"),
+    ("tract", "slf i", "superior longitudinal fasciculus"),
+    ("tract", "superior longitudinal fasciculus",
+     "superior longitudinal fasciculus"),
+    ("tract", "fornix", "fornix"),
+    # same surface under a different field must NOT merge
+    ("disease", "fornix", "fornix"),
+]
+
+
 def test_build_entities_merges_aliases(spark):
-    vdf = spark.createDataFrame(
-        [
-            ("tract", "slf", "superior longitudinal fasciculus"),
-            ("tract", "slf i", "superior longitudinal fasciculus"),
-            ("tract", "superior longitudinal fasciculus",
-             "superior longitudinal fasciculus"),
-            ("tract", "fornix", "fornix"),
-            # same surface under a different field must NOT merge
-            ("disease", "fornix", "fornix"),
-        ],
-        "field string, surface string, canonical string",
-    )
-    ents = build_entities(vdf)
-    rows = {(r["field"], r["canonical"]): r for r in ents.collect()}
+    got = entity_rows(_MERGE_ROWS)
+    assert got == _oracle_rows(spark, _MERGE_ROWS)
+    rows = {(r[1], r[2]): r for r in got}
     slf = rows[("tract", "superior longitudinal fasciculus")]
-    assert set(slf["aliases"]) == {
+    assert set(slf[3]) == {
         "slf", "slf i", "superior longitudinal fasciculus",
     }
-    assert slf["n_aliases"] == 3
+    assert slf[4] == 3
     assert ("tract", "fornix") in rows and ("disease", "fornix") in rows
-    assert rows[("tract", "fornix")]["aliases"] == ["fornix"]
+    assert rows[("tract", "fornix")][3] == ["fornix"]
+
+
+def test_entity_rows_match_spark_oracle_on_gazetteer(spark):
+    rows = vocab.gazetteer_rows()
+    got = entity_rows(rows)
+    assert got == _oracle_rows(spark, rows)
+    assert len(got) == 402
+
+
+def test_entity_rows_vote_ties_and_chains(spark):
+    """A chain merges through a shared canonical; the representative is
+    the canonical with the most votes, ties to the larger value."""
+    rows = [
+        ("f", "b", "c"), ("f", "a", "b"), ("f", "c", "c"), ("f", "d", "d"),
+        ("f", "x", "y"), ("f", "z", "w"), ("f", "y", "w"), ("f", "w", "w"),
+        ("g", "p", "q"), ("g", "q", "p"),
+    ]
+    got = entity_rows(rows)
+    assert got == [
+        ("a", "f", "c", ["a", "b", "c"], 3),
+        ("d", "f", "d", ["d"], 1),
+        ("w", "f", "w", ["w", "x", "y", "z"], 4),
+        ("p", "g", "q", ["p", "q"], 2),
+    ]
+    assert got == _oracle_rows(spark, rows)
+
+
+def test_entities_stage_starts_at_most_one_job(spark, tmp_path):
+    from llm_information_extraction_spark.plans.pipeline import KGPipeline
+
+    p = KGPipeline(spark, str(tmp_path / "wh"))
+    rows, out = p._commit("entities", p._build_entities, None)
+    assert rows == 402
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("kg:entities")) <= 1
+    assert _sorted_entities(out.collect()) == entity_rows(vocab.gazetteer_rows())
+
+
+@pytest.mark.parametrize("local_edges", [100_000, 0])
+def test_cc_keeps_no_checkpoint(spark, monkeypatch, local_edges):
+    """``unpersist()`` does not free a checkpoint: CC releases each of
+    its own. The local path keeps none; the distributed path keeps only
+    the last round's, which its returned frame reads."""
+    monkeypatch.setattr(canonicalize, "_LOCAL_CC_EDGES", local_edges)
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(50)],
+        "src string, dst string",
+    )
+    before = _persisted(spark)
+    calls = 3 if local_edges else 1
+    for _ in range(calls):
+        comps = connected_components(edges)
+        assert comps.filter(F.col("component") == "n00").count() == 51
+    assert len(_persisted(spark) - before) == (0 if local_edges else 1)
+
+
+def test_minhash_grouping_keeps_no_checkpoint(spark):
+    from llm_information_extraction_spark.operators.dedup import (
+        minhash_dedup_groups,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f g"), (3, "x y z w")],
+        "doc_id bigint, text string",
+    )
+    before = _persisted(spark)
+    got = {(r["doc_id"], r["group_id"]) for r in
+           minhash_dedup_groups(docs, threshold=0.5).collect()}
+    assert got == {("1", "1"), ("2", "1")}
+    assert not _persisted(spark) - before
 
 
 def test_cc_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):

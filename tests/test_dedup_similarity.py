@@ -294,17 +294,21 @@ def test_minhash_filtered_branch_matches_hof_oracle(spark, monkeypatch):
 
     def spy(hs_df, num_hashes, seed):
         out = kernel(hs_df, num_hashes, seed)
-        captured.append(out)
+        # the kernel reads the grouping's shingle checkpoint, which is
+        # released when the call returns: collect inside the call
+        captured.append({r["id"]: r["sig"] for r in out.collect()})
         return out
 
     monkeypatch.setattr(dedup, "_minhash_sigs_arrow", spy)
     dedup.minhash_dedup_groups(docs, max_shingle_doc_freq=0.5)
-    (sig,) = captured
-    got = {r["id"]: r["sig"] for r in sig.collect()}
+    (got,) = captured
 
     kept = (
         dedup.drop_frequent_shingles(
-            dedup._doc_tokens(docs, "doc_id", "text", 3), 0.5
+            dedup._doc_shingles(docs, "doc_id", "text", 3).select(
+                "id", F.explode("sh").alias("shingle")
+            ),
+            0.5,
         )
         .groupBy("id")
         .agg(F.collect_set("shingle").alias("sh"))
@@ -1056,6 +1060,36 @@ def test_null_and_zero_norm_vectors_score_zero(spark, monkeypatch, op):
             assert {(1, 6), (3, 7), (4, 8)} <= {p[:2] for p in got} and got <= oracle
         return
     assert got == want
+
+
+@pytest.mark.parametrize("threshold", [0.5, 0.0])
+def test_rp_lsh_null_and_zero_vectors_join_no_candidates(spark, monkeypatch, threshold):
+    """Above a positive threshold a null or zero-norm vector can never
+    qualify, so ``rp_lsh_near_dup_pairs`` scores no candidate pair that
+    holds one; at threshold 0.0 they still pair (and score 0.0)."""
+    index, _ = _null_frames(spark)
+    items = index.select(F.col("id").alias("vec_id"), F.col("v").alias("embedding"))
+    scored = []
+    pair_cosines = similarity._pair_cosines
+
+    def spy(pairs, *cols):
+        scored.extend(tuple(r) for r in pairs.select("id_a", "id_b").collect())
+        return pair_cosines(pairs, *cols)
+
+    monkeypatch.setattr(similarity, "_pair_cosines", spy)
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in rp_lsh_near_dup_pairs(
+            items, dim=2, threshold=threshold, num_planes=4
+        ).collect()
+    }
+    degenerate = {3, 4, 7, 8}
+    assert (1, 6) in got
+    if threshold > 0:
+        assert got == {(1, 6)}
+        assert scored and not degenerate & {i for p in scored for i in p}
+    else:
+        assert {(3, 7), (4, 8)} <= set(scored)
 
 
 def test_cosine_sim_is_only_a_test_oracle():

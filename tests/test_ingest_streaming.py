@@ -238,6 +238,51 @@ def test_streaming_fuzzy_dedup_catches_near_dup_batches_later(spark, tmp_path):
     assert ids3 == ids | {"d1"}  # exact copy d0 still caught post-compact
 
 
+def test_streaming_embedding_zero_vectors_join_no_candidates(
+    spark, tmp_path, monkeypatch
+):
+    """Zero vectors share one RP-LSH bucket per table and score 0.0, so
+    the within-batch candidate join leaves them out above a positive
+    threshold; they still land in the output and in the store."""
+    import os
+
+    from llm_information_extraction_spark.operators import similarity
+    from llm_information_extraction_spark.streaming.incremental import (
+        incremental_unique_embeddings,
+    )
+
+    scored = []
+    pair_cosines = similarity._pair_cosines
+
+    def spy(pairs, a, b, *cols):
+        if a == "a.v":  # the within-batch join
+            scored.extend(
+                tuple(r) for r in pairs.select("a.id", "b.id").collect()
+            )
+        return pair_cosines(pairs, a, b, *cols)
+
+    monkeypatch.setattr(similarity, "_pair_cosines", spy)
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    state = str(tmp_path / "state")
+    rows = [(1, [0.0] * 4), (2, [0.0] * 4), (3, [1.0, 0.5, 0.2, 0.1]),
+            (4, [1.0, 0.5, 0.2, 0.1001]), (5, [-0.3, 0.9, 0.1, 0.0])]
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<double>"
+    ).coalesce(1).write.parquet(in_dir)
+    q = incremental_unique_embeddings(
+        spark, in_dir, out_dir, str(tmp_path / "ckpt"), state, dim=4,
+        threshold=0.95,
+    )
+    q.awaitTermination(180)
+    q.stop()
+    ids = {int(r["id"]) for r in spark.read.parquet(out_dir).collect()}
+    assert ids == {1, 2, 3, 5}  # 4 is a near-copy of 3
+    assert ("3", "4") in scored
+    assert not {"1", "2"} & {i for p in scored for i in p}
+    stored = {r["id"] for r in spark.read.parquet(state).collect()}
+    assert {"1", "2"} <= stored and os.listdir(state)
+
+
 def test_streaming_embedding_dedup_cross_batch(spark, tmp_path):
     """An embedding near-copy (cosine > 0.95) arriving two batches after
     the original is suppressed by the vector store with EXACT cosine

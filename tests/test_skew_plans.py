@@ -221,14 +221,50 @@ def test_verified_star_edges_plan_signs_once_and_has_no_cartesian(spark):
     components: bucket collapse by window, texts attached by equi-joins
     — never a cartesian product — and ONE signature kernel, so no join
     side re-derives the signatures."""
+    from llm_information_extraction_spark.operators.canonicalize import _release
     from llm_information_extraction_spark.operators.dedup import (
+        _doc_shingles,
         _verified_star_edges,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(
-        _verified_star_edges(docs, "doc_id", "text", 3, 64, 16, 0.8, 42, None)
-    )
+    sh = _doc_shingles(docs, "doc_id", "text", 3).localCheckpoint(eager=True)
+    try:
+        plan = _plan(_verified_star_edges(sh, 64, 16, 0.8, 42, None))
+    finally:
+        _release(sh)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("MapInPandas") == 1
+
+
+@pytest.mark.parametrize("max_freq", [None, 0.5])
+def test_minhash_grouping_shingles_each_document_once(spark, monkeypatch, max_freq):
+    """The edges minhash_dedup_groups hands to connected components read
+    ONE materialized (id, shingles) frame: the signature kernel's input
+    and both verify join sides scan it, none re-reads the input file or
+    re-derives the shingles, with or without the frequency filter."""
+    from llm_information_extraction_spark.operators import canonicalize
+    from llm_information_extraction_spark.operators.dedup import (
+        minhash_dedup_groups,
+    )
+
+    plans = []
+    cc = canonicalize.connected_components
+
+    def spy(edges, *args, **kwargs):
+        plans.append(_plan(edges))
+        return cc(edges, *args, **kwargs)
+
+    monkeypatch.setattr(canonicalize, "connected_components", spy)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    minhash_dedup_groups(docs, threshold=0.5, max_shingle_doc_freq=max_freq)
+    (plan,) = plans
+    assert "FileScan" not in plan
+    # word_shingles' distinct is the shingling pass: it ran once, into
+    # the checkpoint, so no branch of the edge plan evaluates it
+    assert "array_distinct" not in plan
+    # kernel input + two verify sides; the filter reads the token table
+    # three times (doc count, shingle counts, semi-join) instead of once
+    assert plan.count("Scan ExistingRDD") == (3 if max_freq is None else 5)
     assert plan.count("MapInPandas") == 1

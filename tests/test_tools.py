@@ -60,3 +60,30 @@ def test_make_synth_sf_replica0_keeps_source():
 ])
 def test_cpu_breakdown_thread_class(name, cls):
     assert cpu_breakdown.thread_class(name) == cls
+
+
+def test_cpu_breakdown_stage_cpu_wraps_each_commit():
+    class Pipeline:
+        def __init__(self, n):
+            self.n = n
+
+        def _commit(self, stage, build, *args):
+            return build(*args)
+
+        def run(self):
+            return [self._commit(s, lambda k: sum(range(k)), self.n) for s in ("a", "b")]
+
+    p = cpu_breakdown.stage_cpu_pipeline(Pipeline)(200_000)
+    assert p.run() == [sum(range(200_000))] * 2
+    assert list(p.stage_cpu) == ["a", "b"]
+    assert all(s >= 0 for s in p.stage_cpu.values())
+
+
+def test_cpu_breakdown_stage_report():
+    out = cpu_breakdown.stage_report({"ingest": 1.25, "unique_docs": 30.0}, 40.0)
+    assert out.splitlines() == [
+        "CPU per stage commit (driver process tree):",
+        "  ingest               1.2",
+        "  unique_docs         30.0",
+        "  outside commits      8.8",
+    ]

@@ -17,7 +17,10 @@ warehouse, snapshots again and prints the difference:
   that exited during the pass;
 - every ``pyspark.daemon`` process under the JVM with its live worker
   count and the CPU of the daemon, its live workers and the workers it
-  has reaped.
+  has reaped;
+- the process tree's CPU per pipeline stage: a snapshot before and
+  after each stage commit (the stage's build and write, and its lineage
+  and metrics rows), and the rest of the pass outside them.
 
 Linux only (reads ``/proc``).
 """
@@ -143,6 +146,35 @@ def report(before: dict, after: dict) -> str:
     return "\n".join(lines)
 
 
+def stage_cpu_pipeline(base: type) -> type:
+    """A subclass of the pipeline class ``base`` that records, in its
+    ``stage_cpu`` dict, the process tree's CPU seconds spent in each
+    stage commit (``base._commit``)."""
+
+    class StageCPU(base):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            self.stage_cpu: dict[str, float] = {}
+
+        def _commit(self, stage, build, *args):
+            t0 = procs.tree_cpu_s()
+            try:
+                return super()._commit(stage, build, *args)
+            finally:
+                self.stage_cpu[stage] = procs.tree_cpu_s() - t0
+
+    return StageCPU
+
+
+def stage_report(stage_cpu: dict[str, float], pass_s: float) -> str:
+    """Per-stage CPU lines, in commit order, and the rest of the pass."""
+    lines = ["CPU per stage commit (driver process tree):"]
+    for stage, s in stage_cpu.items():
+        lines.append(f"  {stage:<16}{s:8.1f}")
+    lines.append(f"  {'outside commits':<16}{pass_s - sum(stage_cpu.values()):8.1f}")
+    return "\n".join(lines)
+
+
 def main(argv: list[str]) -> int:
     if len(argv) != 1:
         print(__doc__, file=sys.stderr)
@@ -158,15 +190,17 @@ def main(argv: list[str]) -> int:
     jvm = find_jvm()
     wh = tempfile.mkdtemp(prefix="cpu_breakdown_wh_")
     try:
-        before = snapshot(jvm)
-        counts = KGPipeline(spark, wh, PipelineConfig(dedup="minhash"), documents=docs).run(
-            resume=False
+        pipeline = stage_cpu_pipeline(KGPipeline)(
+            spark, wh, PipelineConfig(dedup="minhash"), documents=docs
         )
+        before = snapshot(jvm)
+        counts = pipeline.run(resume=False)
         after = snapshot(jvm)
     finally:
         shutil.rmtree(wh, ignore_errors=True)
     print(f"stage rows: {counts}")
     print(report(before, after))
+    print(stage_report(pipeline.stage_cpu, after["tree_s"] - before["tree_s"]))
     spark.stop()
     return 0
 
