@@ -1008,14 +1008,11 @@ def entity_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows as VALUES and recomputes components via a recursive CTE, the
     representative canonical via count-then-value arg-max, and the
     sorted alias list."""
-    from llm_information_extraction_spark import vocab
     from llm_information_extraction_spark.operators.canonicalize import (
-        ENTITY_SCHEMA,
-        entity_rows,
+        entities_df,
     )
 
-    e = local_frame(spark, entity_rows(vocab.gazetteer_rows()), ENTITY_SCHEMA)
-    return e.select(
+    return entities_df(spark).select(
         "entity_id",
         "field",
         "canonical",

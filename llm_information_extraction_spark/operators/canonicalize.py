@@ -32,6 +32,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import vocab
 from ..session import local_frame
 
 _CC_SCHEMA = "node string, component string"
@@ -320,7 +321,7 @@ def entity_rows(
     alias, aliases = its sorted members, canonical = the arg-max over
     (votes, value) of the canonicals its rows name, one vote per row.
     The entity table is a pure function of the gazetteer, so it is built
-    here on the driver and enters Spark through ``session.local_frame``.
+    here on the driver and enters Spark through :func:`entities_df`.
     """
     comp = _union_find(
         ((f, s), (f, c)) for f, s, c in gazetteer_rows
@@ -345,3 +346,9 @@ def entity_rows(
             (entity_id, field, canonical, sorted(aliases), len(aliases))
         )
     return out
+
+
+def entities_df(spark) -> DataFrame:
+    """The ``entities`` table of the package gazetteer: :func:`entity_rows`
+    of ``vocab.gazetteer_rows()`` as a ``LocalTableScan``."""
+    return local_frame(spark, entity_rows(vocab.gazetteer_rows()), ENTITY_SCHEMA)

@@ -415,12 +415,7 @@ def minhash_signatures(
     before any Spark job runs.
     """
     return _minhash_sigs_arrow(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.transform(
-                word_shingles(text_col, n), lambda s: F.xxhash64(s)
-            ).alias("hs"),
-        ),
+        _shingle_hashes(_doc_shingles(df, id_col, text_col, n)),
         num_hashes,
         seed,
     )
@@ -521,6 +516,14 @@ def _doc_shingles(
     )
 
 
+def _shingle_hashes(sh: DataFrame) -> DataFrame:
+    """(id, hs): the base hash ``xxhash64`` of each shingle of
+    :func:`_doc_shingles`' (id, sh) frame, the signature kernel's input."""
+    return sh.select(
+        "id", F.transform("sh", lambda s: F.xxhash64(s)).alias("hs")
+    )
+
+
 def _verified_star_edges(
     sh: DataFrame,
     num_hashes: int,
@@ -540,9 +543,7 @@ def _verified_star_edges(
     from pyspark.sql.window import Window
 
     if max_shingle_doc_freq is None:
-        hs = sh.select(
-            "id", F.transform("sh", lambda s: F.xxhash64(s)).alias("hs")
-        )
+        hs = _shingle_hashes(sh)
     else:
         # the filter needs corpus-level shingle frequencies, so it runs
         # on the exploded token table; the survivors' base hashes are

@@ -149,12 +149,9 @@ def fuzzy_link_surfaces(
                     rows, columns=["field", "surface", "canonical", "score"]
                 )
 
-    # the distinct surfaces are small, so AQE coalesces them to one
-    # partition; the round-robin split spreads the scan over every core
     return (
         unresolved.select("field", normalize_text("surface").alias("surface"))
         .dropDuplicates()
-        .repartition(unresolved.sparkSession.sparkContext.defaultParallelism)
         .mapInPandas(
             link, "field string, surface string, canonical string, score double"
         )

@@ -48,12 +48,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import vocab
-from ..operators.canonicalize import ENTITY_SCHEMA, entity_rows
+from ..operators.canonicalize import entities_df
 from ..operators.extraction import extract_triples
 from ..operators.linking import link_mentions, vocabulary_df
 from ..operators.payload import build_payload
-from ..session import job_group, local_frame
+from ..session import job_group
 from ..sources.catalog import Catalog, Commit
 from ..sources.synthetic import generate_documents
 
@@ -269,9 +268,7 @@ class KGPipeline:
         re-linking the triples would find nothing. The table is a pure
         function of package data, built on the driver: its write is the
         stage's one Spark job."""
-        return local_frame(
-            self.spark, entity_rows(vocab.gazetteer_rows()), ENTITY_SCHEMA
-        )
+        return entities_df(self.spark)
 
     # -- driver ---------------------------------------------------------------
     def run(self, resume: bool = True, stop_after: str | None = None) -> dict:

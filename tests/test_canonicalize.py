@@ -190,13 +190,21 @@ def test_entity_rows_vote_ties_and_chains(spark):
     assert got == _oracle_rows(spark, rows)
 
 
+def _group_jobs(spark, group):
+    sc = spark.sparkContext
+    # job ids reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_entities_stage_starts_at_most_one_job(spark, tmp_path):
     from llm_information_extraction_spark.plans.pipeline import KGPipeline
 
     p = KGPipeline(spark, str(tmp_path / "wh"))
+    before = _group_jobs(spark, "kg:entities")
     rows, out = p._commit("entities", p._build_entities, None)
     assert rows == 402
-    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("kg:entities")) <= 1
+    assert len(_group_jobs(spark, "kg:entities") - before) <= 1
     assert _sorted_entities(out.collect()) == entity_rows(vocab.gazetteer_rows())
 
 
