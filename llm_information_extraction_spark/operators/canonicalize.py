@@ -103,6 +103,16 @@ def _edge_stats(e: DataFrame) -> tuple:
     return (row["n"], row["chk"])
 
 
+def _checkpoint(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage: reliable
+    ``checkpoint()`` when ``checkpoint_dir`` is set (the caller points
+    the context at it with :func:`_ensure_checkpoint_dir`), else
+    ``localCheckpoint()``. Free the result with :func:`_release`."""
+    if checkpoint_dir is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def _release(df: DataFrame) -> None:
     """Free the blocks behind ``df``, a frame made by ``cache()`` /
     ``persist()`` or by ``localCheckpoint()`` / ``checkpoint()``.
@@ -202,12 +212,7 @@ def connected_components(
             edges.sparkSession.sparkContext, checkpoint_dir
         )
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    e = _ckpt(_canonical_edges(edges))
+    e = _checkpoint(_canonical_edges(edges), checkpoint_dir)
     # ONE bounded read decides empty/local/distributed: an empty head IS
     # the empty check
     head = e.limit(_LOCAL_CC_EDGES + 1).toArrow()
@@ -244,7 +249,7 @@ def connected_components(
             .filter(F.col("dst") <= F.col("src"))  # smaller-or-equal neighbors
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
-        e2 = _ckpt(_canonical_edges(small.union(e1)))
+        e2 = _checkpoint(_canonical_edges(small.union(e1)), checkpoint_dir)
 
         # converged when the edge set is a star forest pointing at minima
         # (stable between rounds) — one aggregate job, not two exceptAlls

@@ -435,17 +435,14 @@ def _rows_per_band(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
-def _banded_buckets(
-    sig: DataFrame, num_hashes: int, bands: int, keep: tuple[str, ...] = ("id",)
-) -> DataFrame:
-    """(*keep, band, bucket) — one bucket key per signature band.
-
-    ``keep`` lists the pass-through columns (default just ``id``; the
-    streaming signature store also keeps ``sig`` so stored bucket rows
-    carry their signature for in-join verification)."""
+def _banded_buckets(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(band, bucket, id, sig) — one bucket key per signature band: the
+    streaming signature store's rows, which carry their signature for
+    in-join verification."""
     rows_per_band = _rows_per_band(num_hashes, bands)
     return sig.select(
-        *keep,
+        "id",
+        "sig",
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -464,7 +461,7 @@ def _banded_buckets(
             )
         ).alias("bb"),
     ).select(
-        *keep, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+        F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"), "id", "sig"
     )
 
 

@@ -70,7 +70,9 @@ def pagerank(
     Each iteration is ONE shuffle (contribution aggregation keyed by
     dst) plus a broadcast of the two scalar terms (dangling mass and
     node count); lineage is truncated every ``checkpoint_every``
-    iterations so tens of iterations don't grow the plan.
+    iterations so tens of iterations don't grow the plan. Each
+    checkpoint is freed once a newer one is materialized, so the call
+    keeps only the one its result reads.
     Dangling-node mass is redistributed uniformly.
 
     ``checkpoint_dir``: when set (a cluster-visible path, e.g. HDFS/S3),
@@ -104,29 +106,25 @@ def pagerank(
 
     Returns (node, rank double) or (node, rank_nano long).
     """
-    from .canonicalize import _ensure_checkpoint_dir
+    from .canonicalize import _checkpoint, _ensure_checkpoint_dir, _release
 
     if checkpoint_dir is not None:
         _ensure_checkpoint_dir(
             edges.sparkSession.sparkContext, checkpoint_dir
         )
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     e = edges.select(
         F.col("src").cast("string").alias("src"),
         F.col("dst").cast("string").alias("dst"),
     ).dropDuplicates()
-    nodes = _ckpt(
+    nodes = _checkpoint(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
+        .distinct(),
+        checkpoint_dir,
     )
     n = nodes.count()
-    if n == 0:
+    if n == 0:  # the node set backs the result: keep it
         return nodes.select(
             "node",
             (F.lit(0).cast("long") if fixed_point else F.lit(0.0)).alias(
@@ -155,6 +153,7 @@ def pagerank(
     else:
         ranks = nodes.select("node", F.lit(1.0 / n).alias("r"))
 
+    last = None  # the newest rank checkpoint
     for it in range(iterations):
         with_deg = ranks.join(
             outdeg, ranks["node"] == outdeg["src"], "left"
@@ -194,11 +193,13 @@ def pagerank(
         prev = ranks
         ranks = joined.select("node", newr.alias("r"))
         if (
-            tol is not None
-            or (it + 1) % checkpoint_every == 0
-            or it == iterations - 1
+            tol is None
+            and (it + 1) % checkpoint_every
+            and it < iterations - 1
         ):
-            ranks = _ckpt(ranks)
+            continue  # no lineage cut this iteration
+        ranks = _checkpoint(ranks, checkpoint_dir)
+        delta = None
         if tol is not None:
             # one 1-row aggregate per iteration: L1 change of the rank
             # vector (both sides are materialized, so no recompute)
@@ -212,8 +213,18 @@ def pagerank(
                 )
                 .first()["d"]
             )
-            scale = 10**9 if fixed_point else 1.0
-            if delta is not None and float(delta) / scale < tol:
-                break
+        # ranks is materialized (and the delta read prev, the previous
+        # checkpoint under tol): the older checkpoint has no reader, or
+        # k checkpoints would hold k rank vectors in the block manager
+        if last is not None:
+            _release(last)
+        last = ranks
+        scale = 10**9 if fixed_point else 1.0
+        if delta is not None and float(delta) / scale < tol:
+            break
+    if last is not None:
+        # the last iteration always checkpoints, so the result no longer
+        # reads the node set
+        _release(nodes)
     out_name = "rank_nano" if fixed_point else "rank"
     return ranks.select("node", F.col("r").alias(out_name))

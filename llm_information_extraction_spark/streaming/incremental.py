@@ -15,20 +15,46 @@ recipe). Readers get ``batch_id`` back as a discovered partition column.
 
 The near-dup operators (MinHash text, embeddings) keep their cross-batch
 state the same way: a flat store of precomputed bucket rows with one
-``batch_id=<N>`` directory per micro-batch. Batch N joins the rows of
-every batch below N (a literal partition filter) on (band or table,
-bucket), then overwrites its own directory; committed batches are
+``batch_id=<N>`` directory per micro-batch. Both run one micro-batch
+chain, :func:`_dedup_micro_batch`: batch N's bucket rows self-join on
+(band or table, bucket) into verified pairs and connected components,
+the same rows join the rows of every batch below N (a literal partition
+filter), and the batch drops its in-batch losers and store hits, then
+overwrites its own directory with the rest. An operator supplies only
+its bucket rows, a verify and an output write. Committed batches are
 merged into one directory by :func:`compact_signature_store`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import uuid
+from functools import reduce
 
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..functions.textmetrics import doc_fingerprint
+from ..operators.canonicalize import connected_components
+from ..operators.dedup import _banded_buckets, _rows_per_band, minhash_signatures
 from ..operators.extraction import extract_triples
 from ..operators.linking import link_mentions, vocabulary_df
 from ..operators.payload import build_payload
 from ..sources.synthetic import DOCUMENTS_SCHEMA
+
+
+def _file_stream(
+    spark: SparkSession, schema, input_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    """The streaming parquet file source every operator here reads:
+    files landing in ``input_dir``, at most ``max_files_per_trigger``
+    per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+    )
 
 
 def incremental_triples(
@@ -46,11 +72,7 @@ def incremental_triples(
     (batch-equivalent semantics, used by tests); ``False`` runs
     continuously. Returns the StreamingQuery.
     """
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = _file_stream(spark, DOCUMENTS_SCHEMA, input_dir, max_files_per_trigger)
     vdf = vocabulary_df(spark)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -62,7 +84,9 @@ def incremental_triples(
             f"{output_dir}/batch_id={batch_id}"
         )
 
-    return _start_foreach(stream, process_batch, checkpoint_dir, available_now)
+    return _start(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir, available_now
+    )
 
 
 def incremental_unique_documents(
@@ -87,34 +111,23 @@ def incremental_unique_documents(
     (doc_id, spans) plus the fingerprint column ``fp``, so the deduped
     stream feeds the batch KG pipeline directly.
     """
-    from ..functions.textmetrics import doc_fingerprint
-    from ..operators.payload import build_payload
-
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = _file_stream(spark, DOCUMENTS_SCHEMA, input_dir, max_files_per_trigger)
     with_fp = build_payload(stream).select(
         "doc_id", "spans", doc_fingerprint("payload").alias("fp")
     )
     unique = with_fp.dropDuplicates(["fp"])
-    writer = (
+    return _start(
         unique.writeStream.format("parquet")
         .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+        .outputMode("append"),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _sig_est_jaccard(a, b, num_hashes: int):
     """Signature-estimated Jaccard: fraction of matching minhash slots
     (unbiased estimator, stderr ≈ 1/sqrt(num_hashes))."""
-    from pyspark.sql import functions as F
-
     matches = F.aggregate(
         F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
         F.lit(0),
@@ -154,12 +167,8 @@ def _read_older_batches(
     Only the path-missing case means "no store yet"; any other read
     failure (corrupt footer, permissions, botched compaction) must FAIL
     the batch so the checkpoint retries — swallowing it would silently
-    disable cross-batch dedup. Shared by every streaming dedup variant
-    so the error-class match lives in exactly one place.
+    disable cross-batch dedup.
     """
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
     # "no store yet" = no batch_id=* data partitions. The directory
     # itself can exist earlier (the _layout.json marker is written at
     # stream start), and a read of a data-less dir fails schema
@@ -215,8 +224,6 @@ def _check_store_layout(
     partition count), raises the retired-layout error instead: no choice
     of parameters can reopen it.
     """
-    import json
-
     _refuse_partitioned_store(spark, state_dir)
     fs, hpath = _hadoop_fs(spark, state_dir)
     marker = hpath(state_dir.rstrip("/") + "/_layout.json")
@@ -271,8 +278,6 @@ def _write_store(rows: DataFrame, state_dir: str, batch_id: int) -> None:
     never touching other batches: the same exactly-once foreachBatch
     recipe as the per-batch output dirs. A batch with no rows writes no
     directory."""
-    from pyspark.sql import functions as F
-
     (
         rows.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
@@ -306,14 +311,104 @@ def _auto_compact(
         compact_signature_store(spark, state_dir, checkpoint_dir)
 
 
-def _start_foreach(stream, process_batch, checkpoint_dir: str, available_now: bool):
-    """Common foreachBatch writer tail for the streaming dedup ops."""
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
+def _start(writer, checkpoint_dir: str, available_now: bool):
+    """Start a stream writer on its checkpoint; ``available_now``
+    processes the current backlog and stops."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _start_store_dedup(
+    spark: SparkSession, stream: DataFrame, process_batch, checkpoint_dir: str,
+    state_dir: str, compact_batches: int | None, available_now: bool, **layout,
+):
+    """Stream tail of the store-backed dedup operators: refuse a store
+    of another ``layout`` (before any Spark job), auto-compact it, then
+    start the foreachBatch query."""
+    _check_store_layout(spark, state_dir, layout)
+    _auto_compact(spark, state_dir, checkpoint_dir, compact_batches)
+    return _start(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir, available_now
+    )
+
+
+def _dedup_micro_batch(
+    spark: SparkSession, batch_id: int, base: DataFrame, rows: DataFrame, key: str,
+    verify, output: DataFrame, output_dir: str, state_dir: str,
+    output_id: str = "id", may_join=None,
+) -> None:
+    """The one micro-batch chain of the store-backed near-dup operators.
+
+    ``rows`` are the batch's store-shaped bucket rows
+    ``(key, bucket, id, payload)``, one per document and band or table;
+    the signature or vector rides along, so every pair is verified in
+    its join. The operator supplies them, ``verify(pairs, a, b)`` (joined
+    pairs, sides aliased ``a`` and ``b`` → verified ``(src, dst)`` ids),
+    the ``output`` frame whose rows of kept ``output_id`` values are the
+    batch's output, and optionally ``may_join``, a filter on the rows
+    that can clear the threshold at all. Then:
+
+    1. within-batch: the joinable rows self-join on
+       (key, bucket, a.id < b.id); verified pairs go through connected
+       components, and every id but its component's min is a loser;
+    2. cross-batch: the same rows join the store's strictly older
+       batches on (key, bucket); a verified match is a store hit. Probing
+       with all rows, not only the in-batch survivors, drops the same
+       set: a loser is dropped either way;
+    3. the kept ids' output rows overwrite ``output_dir/batch_id=N``,
+       then their bucket rows overwrite the store's ``batch_id=N``; both
+       replay-idempotent, as per-batch directory overwrites.
+
+    ``base`` is the frame the operator computes once and ``rows`` (and
+    possibly ``output``) derive from: the signatures, whose bands are a
+    cheap explode, or the bucket rows themselves, whose hyperplane dots
+    are not. It is cached in place and released in ``finally`` with
+    every other cached frame: a failing batch must not leave them in the
+    session's cache across stream restarts.
+    """
+    cached = [base.cache()]
+    try:
+        probe = rows if may_join is None else rows.filter(may_join)
+
+        def pairs(other: DataFrame, a: str, b: str) -> DataFrame:
+            return probe.alias(a).join(
+                other.alias(b),
+                (F.col(f"{a}.{key}") == F.col(f"{b}.{key}"))
+                & (F.col(f"{a}.bucket") == F.col(f"{b}.bucket")),
+            )
+
+        # no distinct on the pairs: a pair sharing several buckets
+        # repeats until CC's canonical-edge dedup, whose map-side
+        # partial aggregate collapses the repeats in place
+        edges = verify(
+            pairs(probe, "a", "b").filter(F.col("a.id") < F.col("b.id")), "a", "b"
+        )
+        dropped = (
+            connected_components(edges)
+            .filter(F.col("node") != F.col("component"))
+            .select(F.col("node").alias("id"))
+        )
+        store = _read_older_batches(spark, state_dir, batch_id)
+        if store is not None:
+            hits = verify(pairs(store, "nw", "od"), "nw", "od")
+            dropped = dropped.union(hits.select(F.col("src").alias("id")))
+        # ids of this micro-batch only: cached for both writes, which
+        # broadcast them rather than shuffle the payload-wide rows
+        dropped = dropped.distinct().cache()
+        cached.append(dropped)
+        output.join(
+            F.broadcast(dropped.withColumnRenamed("id", output_id)),
+            output_id,
+            "left_anti",
+        ).write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
+        _write_store(
+            rows.join(F.broadcast(dropped), "id", "left_anti"), state_dir, batch_id
+        )
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def incremental_fuzzy_unique_documents(
@@ -340,17 +435,20 @@ def incremental_fuzzy_unique_documents(
     on-disk signature store — precomputed bucket rows
     (band, bucket, id, sig array<bigint>) in one ``batch_id=N`` parquet
     directory per micro-batch: the signature per band per surviving doc,
-    never text. Per micro-batch:
+    never text. Per micro-batch, through the one chain of the
+    store-backed dedup operators (:func:`_dedup_micro_batch`):
 
-    1. sign incoming docs with the batch MinHash operators;
-    2. within-batch: banded-bucket candidates → signature-estimated
-       Jaccard ≥ threshold edges → connected components → keep min id;
-    3. cross-batch: the batch's bucket rows equi-join the store on
-       (band, bucket). The store read carries the LITERAL partition
-       filter ``batch_id < current``, so a REPLAYED batch never sees its
-       own signatures. Estimated Jaccard ≥ threshold (verified in-join
-       from the stored signature) drops the newcomer;
-    4. survivors overwrite ``output/batch_id=N``; their bucket rows
+    1. sign incoming docs with the batch MinHash operators and band the
+       signatures into store-shaped (band, bucket, id, sig) rows;
+    2. within-batch: the rows self-join on (band, bucket); pairs whose
+       signature-estimated Jaccard (computed in the join projection) is
+       ≥ threshold go through connected components → keep min id;
+    3. cross-batch: the same rows equi-join the store on (band, bucket).
+       The store read carries the LITERAL partition filter
+       ``batch_id < current``, so a REPLAYED batch never sees its own
+       signatures. Estimated Jaccard ≥ threshold against the stored
+       signature drops the newcomer;
+    4. the kept docs overwrite ``output/batch_id=N``; their bucket rows
        dynamically overwrite the store's ``batch_id=N`` directory. Both
        replay-idempotent (the standard exactly-once foreachBatch recipe).
 
@@ -395,11 +493,6 @@ def incremental_fuzzy_unique_documents(
     (pt, batch_id) layout raises ``ValueError`` when the stream is
     defined.
     """
-    from pyspark.sql import functions as F
-
-    from ..operators.canonicalize import connected_components
-    from ..operators.dedup import _banded_buckets, _rows_per_band
-
     # the batches band through the same helper; refuse a bad geometry
     # when the stream is defined, not in its first micro-batch
     _rows_per_band(num_hashes, bands)
@@ -415,15 +508,15 @@ def incremental_fuzzy_unique_documents(
         verify_hashes = None
     sig_len = verify_hashes or num_hashes
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    def verify(pairs: DataFrame, a: str, b: str) -> DataFrame:
+        # a pair colliding in several bands is estimated once per band
+        # (sig_len int compares), never joined back to a signature table
+        return pairs.filter(
+            _sig_est_jaccard(F.col(f"{a}.sig"), F.col(f"{b}.sig"), sig_len)
+            >= threshold
+        ).select(F.col(f"{a}.id").alias("src"), F.col(f"{b}.id").alias("dst"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import minhash_signatures
-
         # collapse same-id duplicate ROWS first: the candidate self-join
         # pairs ids with id_a < id_b, so two byte-identical rows sharing
         # an id could otherwise BOTH survive (ids are unique per the
@@ -434,121 +527,20 @@ def incremental_fuzzy_unique_documents(
         # sig_len slots computed once: bands consume slots [0, num_hashes)
         # (prefix-stable hash family → bucket keys identical to a
         # 64-slot store), the drop estimate averages all sig_len slots
-        sig = minhash_signatures(
-            docs, "doc_id", "payload", n, sig_len, seed
-        ).cache()
-        # released in ``finally``: a failing batch must not leave its
-        # frames in the session's cache across stream restarts
-        cached = [sig]
-        try:
-            buckets = _banded_buckets(sig, num_hashes, bands)
+        sig = minhash_signatures(docs, "doc_id", "payload", n, sig_len, seed)
+        # the output keeps the INPUT row schema (doc_id, spans, ...) so
+        # the deduped stream feeds the batch KG pipeline directly
+        _dedup_micro_batch(
+            spark, batch_id, sig, _banded_buckets(sig, num_hashes, bands), "band",
+            verify, batch_df, output_dir, state_dir, output_id="doc_id",
+        )
 
-            # -- within-batch: est-Jaccard edges → CC → keep min id --------
-            # no distinct on the pairs: a pair sharing several bands
-            # repeats until CC's canonical-edge dedup, whose map-side
-            # partial aggregate collapses the repeats in place. The
-            # signature kernel's output carries no id partitioning, so a
-            # distinct here would be one more shuffle
-            cand = (
-                buckets.alias("a")
-                .join(
-                    buckets.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col("a.id") < F.col("b.id")),
-                )
-                .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            )
-            edges = (
-                cand.join(
-                    sig.withColumnsRenamed({"id": "id_a", "sig": "sig_a"}), "id_a"
-                )
-                .join(sig.withColumnsRenamed({"id": "id_b", "sig": "sig_b"}), "id_b")
-                .filter(
-                    _sig_est_jaccard(F.col("sig_a"), F.col("sig_b"), sig_len)
-                    >= threshold
-                )
-                .select(
-                    F.col("id_a").cast("string").alias("src"),
-                    F.col("id_b").cast("string").alias("dst"),
-                )
-            )
-            cc = connected_components(edges)
-            in_batch_losers = cc.filter(
-                F.col("node") != F.col("component")
-            ).select(F.col("node").alias("doc_id"))
-            # both anti joins broadcast their id side (in-batch losers
-            # here, store hits below): each holds ids of this micro-batch
-            # only, and the kernel's output carries no id partitioning,
-            # so a shuffle join would move every 8·sig_len-byte signature
-            survivors = sig.join(
-                F.broadcast(in_batch_losers.withColumnsRenamed({"doc_id": "id"})),
-                "id",
-                "left_anti",
-            ).cache()
-            cached.append(survivors)
-
-            # -- cross-batch: join the older batches' bucket rows ----------
-            # bucket rows with the signature attached (zero shuffle: pure
-            # explode over the cached survivor signatures)
-            def bucket_rows(s: DataFrame) -> DataFrame:
-                return _banded_buckets(
-                    s, num_hashes, bands, keep=("id", "sig")
-                ).select("band", "bucket", "id", "sig")
-
-            final = survivors
-            store = _read_older_batches(spark, state_dir, batch_id)
-            if store is not None:
-                # verification happens IN the join projection from the
-                # stored signature — no join back to a signature table,
-                # so a pair colliding in b bands is estimated b times
-                # (sig_len int compares) instead of shuffled once
-                hits = (
-                    bucket_rows(survivors).alias("nw")
-                    .join(
-                        store.alias("od"),
-                        (F.col("nw.band") == F.col("od.band"))
-                        & (F.col("nw.bucket") == F.col("od.bucket")),
-                    )
-                    .filter(
-                        _sig_est_jaccard(
-                            F.col("nw.sig"), F.col("od.sig"), sig_len
-                        )
-                        >= threshold
-                    )
-                    .select(F.col("nw.id").alias("id"))
-                    .distinct()
-                )
-                final = survivors.join(
-                    F.broadcast(hits), "id", "left_anti"
-                ).cache()
-                cached.append(final)
-
-            # overwrite-per-batch-directory = replay-idempotent commit; the
-            # sink preserves the INPUT row schema (doc_id, spans, ...) so
-            # the deduped stream feeds the batch KG pipeline directly
-            batch_df.join(
-                final.select(F.col("id").alias("doc_id")), "doc_id", "leftsemi"
-            ).write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
-            _write_store(bucket_rows(final), state_dir, batch_id)
-        finally:
-            for df in cached:
-                df.unpersist()
-
-    _check_store_layout(
-        spark,
-        state_dir,
-        {
-            "kind": "minhash",
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "seed": seed,
-            "verify_hashes": verify_hashes,
-        },
+    return _start_store_dedup(
+        spark, _file_stream(spark, DOCUMENTS_SCHEMA, input_dir, max_files_per_trigger),
+        process_batch, checkpoint_dir, state_dir, compact_batches, available_now,
+        kind="minhash", n=n, num_hashes=num_hashes, bands=bands, seed=seed,
+        verify_hashes=verify_hashes,
     )
-    _auto_compact(spark, state_dir, checkpoint_dir, compact_batches)
-    return _start_foreach(stream, process_batch, checkpoint_dir, available_now)
 
 
 def _last_committed_batch(spark: SparkSession, checkpoint_dir: str) -> int:
@@ -614,8 +606,6 @@ def compact_signature_store(
        leftover duplicates, again harmless; re-running compaction
        cleans up).
     """
-    import uuid
-
     _refuse_partitioned_store(spark, state_dir)
 
     def _batch_of(status) -> int:
@@ -634,8 +624,6 @@ def compact_signature_store(
     if len(batch_ids) <= 1:
         return batch_ids[0] if batch_ids else -1
     max_id = batch_ids[-1]
-
-    from pyspark.sql import functions as F
 
     # schema-agnostic: full-row distinct works for the MinHash store
     # (band, bucket, id, sig) and the embedding store (tbl, bucket, id, v)
@@ -717,17 +705,12 @@ def incremental_unique_embeddings(
     handled as strings, like every dedup operator here) — zero-pad
     numeric ids upstream if numeric-min semantics matter; the output id
     column is string for the same reason.
+
+    Per micro-batch it runs the one chain of the store-backed dedup
+    operators (:func:`_dedup_micro_batch`) on the bucket rows of vectors
+    with a nonzero norm, verified by exact cosine ≥ ``threshold``.
     """
-    from pyspark.sql import functions as F
-
-    from ..operators.canonicalize import connected_components
     from ..operators.similarity import _has_norm, _pair_cosines, rp_lsh_buckets
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def bucket_rows(vecs: DataFrame) -> DataFrame:
         # store-shaped rows: vector carried next to its bucket so every
@@ -736,13 +719,18 @@ def incremental_unique_embeddings(
         parts = [
             rp_lsh_buckets(
                 vecs, dim, num_planes, "id", "v", seed + 1000 * t, keep=("v",)
-            ).select("id", "v", F.lit(t).alias("tbl"), "bucket")
+            ).select(F.lit(t).alias("tbl"), "bucket", "id", "v")
             for t in range(num_tables)
         ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.union(p)
-        return out.select("tbl", "bucket", "id", "v")
+        return reduce(DataFrame.union, parts)
+
+    def verify(pairs: DataFrame, a: str, b: str) -> DataFrame:
+        src, dst = F.col(f"{a}.id").alias("src"), F.col(f"{b}.id").alias("dst")
+        return (
+            _pair_cosines(pairs, f"{a}.v", f"{b}.v", src, dst)
+            .filter(F.col("cosine") >= threshold)
+            .select("src", "dst")
+        )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # dim guard IN the value path: zip_with would pad a wrong-length
@@ -751,12 +739,8 @@ def incremental_unique_embeddings(
         # self-join would silently go quadratic. Wrapping ``v`` itself in
         # when/raise_error means the first job that touches the batch
         # fails (all writes come last, so nothing is committed) with the
-        # offending id in the message. Unlike the previous
-        # ``filter(size != dim).count()`` gate this schedules no
-        # blocking pre-pass job before the real work can be submitted;
-        # plan shape is unchanged (same Exchange count with and without
-        # the guard — when/raise_error stays inside the existing
-        # projection)
+        # offending id in the message, and no pre-pass job runs: the
+        # guard stays inside the existing projection
         vecs = (
             batch_df.select(
                 F.col(batch_df.columns[0]).cast("string").alias("id"),
@@ -782,84 +766,20 @@ def incremental_unique_embeddings(
                 )
                 .alias("v"),
             )
-            .cache()
         )
-        # released in ``finally``: a failing batch must not leave its
-        # frames in the session's cache across stream restarts
-        cached = [vecs]
-        try:
-            # hyperplane dots are the dominant per-row compute: compute the
-            # bucket rows ONCE, cache, and derive the within-batch join, the
-            # cross-batch probe, and the store write from the same rows
-            rows = bucket_rows(vecs).cache()
-            cached.append(rows)
+        rows = bucket_rows(vecs)
+        # every vector has one row per table, so table 0's rows are the
+        # vectors; zero-norm vectors share one bucket per table and score
+        # 0.0: above a positive threshold they join nothing
+        _dedup_micro_batch(
+            spark, batch_id, rows, rows, "tbl", verify,
+            rows.filter(F.col("tbl") == 0).select("id", "v"), output_dir, state_dir,
+            may_join=_has_norm("v") if threshold > 0 else None,
+        )
 
-            # within-batch: bucket candidates verified by exact cosine
-            # IN-join (vectors travel with their buckets) → CC → keep min.
-            # Zero-norm vectors share one bucket per table and score 0.0:
-            # above a positive threshold they join nothing
-            cand = rows.filter(_has_norm("v")) if threshold > 0 else rows
-            pairs = cand.alias("a").join(
-                cand.alias("b"),
-                (F.col("a.tbl") == F.col("b.tbl"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            edges = (
-                _pair_cosines(
-                    pairs,
-                    "a.v",
-                    "b.v",
-                    F.col("a.id").alias("src"),
-                    F.col("b.id").alias("dst"),
-                )
-                .filter(F.col("cosine") >= threshold)
-                .select("src", "dst")
-            )
-            losers = connected_components(edges).filter(
-                F.col("node") != F.col("component")
-            ).select(F.col("node").alias("id"))
-            survivors = vecs.join(losers, "id", "left_anti").cache()
-            cached.append(survivors)
-
-            # cross-batch: the survivors' bucket rows against every
-            # strictly-older batch
-            final, final_rows = survivors, rows.join(losers, "id", "left_anti")
-            store = _read_older_batches(spark, state_dir, batch_id)
-            if store is not None:
-                pairs = final_rows.alias("nw").join(
-                    store.alias("od"),
-                    (F.col("nw.tbl") == F.col("od.tbl"))
-                    & (F.col("nw.bucket") == F.col("od.bucket")),
-                )
-                hits = (
-                    _pair_cosines(pairs, "nw.v", "od.v", F.col("nw.id").alias("id"))
-                    .filter(F.col("cosine") >= threshold)
-                    .select("id")
-                    .distinct()
-                )
-                final = survivors.join(hits, "id", "left_anti").cache()
-                cached.append(final)
-                final_rows = final_rows.join(hits, "id", "left_anti")
-
-            final.write.mode("overwrite").parquet(
-                f"{output_dir}/batch_id={batch_id}"
-            )
-            _write_store(final_rows, state_dir, batch_id)
-        finally:
-            for df in cached:
-                df.unpersist()
-
-    _check_store_layout(
-        spark,
-        state_dir,
-        {
-            "kind": "embedding",
-            "dim": dim,
-            "num_planes": num_planes,
-            "num_tables": num_tables,
-            "seed": seed,
-        },
+    return _start_store_dedup(
+        spark, _file_stream(spark, schema, input_dir, max_files_per_trigger),
+        process_batch, checkpoint_dir, state_dir, compact_batches, available_now,
+        kind="embedding", dim=dim, num_planes=num_planes, num_tables=num_tables,
+        seed=seed,
     )
-    _auto_compact(spark, state_dir, checkpoint_dir, compact_batches)
-    return _start_foreach(stream, process_batch, checkpoint_dir, available_now)

@@ -238,6 +238,110 @@ def test_streaming_fuzzy_dedup_catches_near_dup_batches_later(spark, tmp_path):
     assert ids3 == ids | {"d1"}  # exact copy d0 still caught post-compact
 
 
+def _near_dup_batches(kind):
+    """Two micro-batches for a store-backed near-dup operator: stored
+    rows s1..s3, then b1 ~ s1, b2 ~ b1 (a further step away from s1),
+    b3 ~ s2 and two controls b4, b5. Returns (schema, batches, id_col,
+    start kwargs)."""
+    import numpy as np
+
+    from llm_information_extraction_spark.sources.synthetic import (
+        DOCUMENTS_SCHEMA,
+    )
+
+    if kind == "minhash":
+        rng = np.random.default_rng(21)
+
+        def edit(text, positions, tag):
+            words = text.split()
+            for k, i in enumerate(positions):
+                words[i] = f"{tag}{k}"
+            return " ".join(words)
+
+        s1, s2, s3 = (_salad(rng, 200) for _ in range(3))
+        # 4 edited words replace 12 of 198 word-3-grams: Jaccard ≈ 0.89
+        # per step, ≈ 0.78 from s1 to b2
+        b1 = edit(s1, (20, 60, 100, 140), "xa")
+        b2 = edit(b1, (40, 80, 120, 160), "xb")
+        b3 = edit(s2, (50, 150), "xc")
+        batches = [
+            [("s1", s1), ("s2", s2), ("s3", s3)],
+            [("b1", b1), ("b2", b2), ("b3", b3), ("b4", _salad(rng, 200)),
+             ("b5", _salad(rng, 200))],
+        ]
+        return (
+            DOCUMENTS_SCHEMA,
+            [[_span_doc(i, t) for i, t in b] for b in batches],
+            "doc_id",
+            {},
+        )
+
+    def unit(angle, axes=(0, 1)):
+        v = [0.0] * 8
+        v[axes[0]], v[axes[1]] = float(np.cos(angle)), float(np.sin(angle))
+        return v
+
+    # cosine 0.97 per step (above 0.95), 0.88 from s1 to b2
+    step = float(np.arccos(0.97))
+    batches = [
+        [(1, unit(0.0)), (2, unit(0.0, (2, 3))), (3, unit(0.0, (4, 5)))],
+        [(11, unit(step)), (12, unit(2 * step)), (13, unit(0.1, (2, 3))),
+         (14, unit(0.0, (6, 7))), (15, unit(np.pi / 2, (4, 5)))],
+    ]
+    # 4 planes x 8 tables: a 0.97 pair shares a bucket in some table
+    # with probability > 0.9999
+    kw = {"dim": 8, "num_planes": 4, "num_tables": 8}
+    return "vec_id bigint, embedding array<double>", batches, "id", kw
+
+
+@pytest.mark.parametrize("kind", ["minhash", "embedding"])
+def test_streaming_near_dup_batch_drops_losers_and_store_hits(
+    spark, tmp_path, kind
+):
+    """One batch after a stored batch drops its in-batch losers AND its
+    store hits: b2 loses to b1 inside the batch, b1 (the pair's min id)
+    and b3 near-copy stored rows. Only the controls reach the output and
+    the store, the same set whether the store is probed with every row
+    or only with the in-batch survivors."""
+    import time
+
+    from llm_information_extraction_spark.streaming.incremental import (
+        incremental_fuzzy_unique_documents,
+        incremental_unique_embeddings,
+    )
+
+    schema, batches, id_col, kw = _near_dup_batches(kind)
+    start = {
+        "minhash": incremental_fuzzy_unique_documents,
+        "embedding": incremental_unique_embeddings,
+    }[kind]
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    state = str(tmp_path / "state")
+    for rows in batches:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        q = start(spark, in_dir, out_dir, str(tmp_path / "ckpt"), state, **kw)
+        q.awaitTermination(180)
+        q.stop()
+        for _ in range(100):
+            if not q.isActive:
+                break
+            time.sleep(0.2)
+        assert q.exception() is None
+
+    def ids(path, col):
+        return {str(r[col]) for r in spark.read.parquet(path).collect()}
+
+    first, second = (
+        {"s1", "s2", "s3"}, {"b4", "b5"}
+    ) if kind == "minhash" else ({"1", "2", "3"}, {"14", "15"})
+    assert ids(f"{out_dir}/batch_id=0", id_col) == first
+    assert ids(f"{out_dir}/batch_id=1", id_col) == second
+    assert ids(f"{state}/batch_id=1", "id") == second
+    assert ids(state, "id") == first | second
+
+
 def test_streaming_embedding_zero_vectors_join_no_candidates(
     spark, tmp_path, monkeypatch
 ):

@@ -327,3 +327,31 @@ def test_pagerank_fixed_point_damping_quantization_warns(spark):
         pagerank(edges, iterations=1, fixed_point=True, damping=0.85)
         pagerank(edges, iterations=1, damping=0.8567)
         assert not any("per-mille" in str(x.message) for x in w)
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"iterations": 6},
+        {"iterations": 6, "fixed_point": True},
+        {"iterations": 60, "tol": 1e-7},
+        {"iterations": 7, "checkpoint_every": 2},
+    ],
+    ids=["double", "fixed_point", "tol", "checkpoint_every_2"],
+)
+def test_pagerank_keeps_only_the_result_checkpoint(spark, kw):
+    """Every node-set and rank checkpoint but the one behind the result
+    is freed by the time pagerank returns; the result still reads."""
+    from llm_information_extraction_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("c", "d")],
+        "src string, dst string",
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = pagerank(edges, **kw)
+    left = set(jsc.getPersistentRDDs().keySet()) - before
+    leaf = out._jdf.queryExecution().logical().collectLeaves().head()
+    assert left == {leaf.rdd().id()}
+    assert out.count() == 4
